@@ -20,11 +20,11 @@ import json
 import os
 import shlex
 import shutil
+import signal
 import subprocess
 import sys
 import tempfile
 import time
-from statistics import median
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
@@ -37,7 +37,6 @@ END_TO_END = {"setup_s": "s", "op_s": "s"}
 OP_ALIAS = {
     "report_dashboard": "dashboard_page_s",
     "weekly_ingest": "ingest_batch_s",
-    "corpus_curation": "curation_pass_s",
 }
 
 
@@ -103,8 +102,12 @@ def _vm_hwm_mb(pid: int | str) -> float:
 
 
 def _layer_metrics(tracer, wl, setup: dict[str, float], extra: dict[str, float]) -> dict[str, float]:
-    kinds = {o["kind"] for o in tracer.ops if o["timed"]}
-    spans = tracer.layer_medians(kinds)
+    # span medians over the timed operations of each kind (a page's spans
+    # over pages, a companion pass's over passes); exec counters per
+    # operation of the workload's own kind
+    spans: dict[str, float] = {}
+    for kind in {o["kind"] for o in tracer.ops if o["timed"]}:
+        spans.update(tracer.layer_medians({kind}))
     # the page's per-query spans also roll up to operators.report.plan|exec
     per_op: dict[str, float] = {"operators.report.plan_s": 0.0, "operators.report.exec_s": 0.0}
     for name, v in spans.items():
@@ -112,12 +115,11 @@ def _layer_metrics(tracer, wl, setup: dict[str, float], extra: dict[str, float])
         parts = name.split(".")
         if parts[:2] == ["operators", "report"] and len(parts) == 4:
             per_op[f"operators.report.{parts[3]}_s"] += v
-    out = {**setup, **per_op, **tracer.counter_medians(kinds), **extra}
+    out = {**setup, **per_op, **tracer.counter_medians({wl.op_kind}), **extra}
     offered = sum(o["counters"].get("sinks.rows_offered", 0) for o in tracer.ops if o["timed"])
     appended = sum(o["counters"].get("sinks.rows_appended", 0) for o in tracer.ops if o["timed"])
     out["sinks.append_yield"] = appended / offered if offered else 0.0
-    op_times = [o["wall_s"] for o in tracer.ops if o["timed"] and o["kind"] == wl.op_kind]
-    out["trace.op_s"] = median(op_times)
+    out["trace.op_s"] = wl.op_s()
     timed_wall = sum(o["wall_s"] for o in tracer.ops if o["timed"])
     out["trace.overhead_frac"] = tracer.overhead_s / timed_wall if timed_wall else 0.0
     return {name: float(out.get(name, 0.0)) for name in _per_layer()}
@@ -169,14 +171,22 @@ def run_workload(name: str, seed: int, seconds: float, trace: bool, trace_out: s
             wl.step(run, i)
             i += 1
         op_times = [o["wall_s"] for o in tracer.ops if o["timed"] and o["kind"] == wl.op_kind]
+        op_s = wl.op_s()
         # the workload's own names for op_s, plus metrics reported but not
         # bounded (peak RSS varies by ~20% from run to run with JVM heap growth)
         extra = {
-            OP_ALIAS[name]: median(op_times),
+            OP_ALIAS[name]: op_s,
             "failed_ops_frac": checker.failed_frac,
             "peak_rss_mb": _vm_hwm_mb("self") + _vm_hwm_mb(spark.sparkContext._gateway.proc.pid),
             **wl.metrics(),
         }
+        companion = getattr(wl, "traced_companion", None)
+        if trace and companion is not None:
+            # a cold and a timed operation of the companion, for its layers
+            other = companion()
+            other.prepare(run)
+            other.warm_up(run)
+            other.step(run, 0)
         if trace:
             setup = {
                 "session.get_spark_s": get_spark_s,
@@ -190,19 +200,22 @@ def run_workload(name: str, seed: int, seconds: float, trace: bool, trace_out: s
             if trace_out:
                 tracer.dump(trace_out, {"workload": name, "seed": seed, "metrics": metrics})
         else:
-            metrics = {"setup_s": setup_s, "op_s": median(op_times)}
-        print(f"[perfbench] {name}: inputs {prepare_s:.2f}s, {len(op_times)} timed "
-              f"{wl.op_kind} ops, {checker.attempted} checked, {checker.failed} failed",
-              file=sys.stderr)
+            metrics = {"setup_s": setup_s, "op_s": op_s}
+        times = " ".join(f"{v:.2f}" for v in op_times)
+        print(f"[perfbench] {name}: inputs {prepare_s:.2f}s, set-up {setup_s:.2f}s, "
+              f"{len(op_times)} timed {wl.op_kind} ops ({times} s), "
+              f"{checker.attempted} checked, {checker.failed} failed", file=sys.stderr)
         return {"checker": checker, "metrics": metrics, "extra": extra}
     finally:
-        if spark is not None:
-            _stop(spark)
-        shutil.rmtree(work, ignore_errors=True)
         try:
-            os.rmdir(scratch)
-        except OSError:
-            pass  # another run still uses it
+            if spark is not None:
+                _stop(spark)
+        finally:
+            shutil.rmtree(work, ignore_errors=True)
+            try:
+                os.rmdir(scratch)
+            except OSError:
+                pass  # another run still uses it
 
 
 def _stop(spark) -> None:
@@ -211,8 +224,11 @@ def _stop(spark) -> None:
 
     gateway = spark.sparkContext._gateway
     proc = gateway.proc
-    spark.stop()
-    gateway.shutdown()
+    try:
+        spark.stop()
+        gateway.shutdown()
+    except Exception:  # noqa: BLE001 — a call cut short by SIGTERM leaves py4j unusable
+        proc.kill()
     SparkContext._gateway = SparkContext._jvm = None
     proc.stdin.close()
     try:
@@ -283,6 +299,8 @@ def main(argv: list[str] | None = None) -> int:
     if args.workload == "all":
         return _run_all(args)
 
+    # a terminated run still stops its JVM and removes its files
+    signal.signal(signal.SIGTERM, lambda *_: sys.exit(143))
     res = run_workload(args.workload, args.seed, args.seconds, bool(args.trace), args.trace_out)
     for k, v in {**res["extra"], **res["metrics"]}.items():
         print(f"{k} {v:.6g} {_units(k)}")

@@ -1,4 +1,4 @@
-"""The three benchmark workloads.
+"""The benchmark workloads and the curation pass traced dashboard runs add.
 
 Each workload drives the program only through its public functions and
 reads only the generated files. It has three phases:
@@ -11,7 +11,10 @@ reads only the generated files. It has three phases:
 
 Operation times keep falling slowly for about a minute after warm-up (JIT
 compilation in the JVM). The benchmark's time budget does not allow a
-warm-up that long, so every run measures the same early-warm stretch.
+warm-up that long, so every run times the same number of operations
+(``min_ops``; ``--seconds`` only adds more on a much faster program) and
+with it the same early-warm stretch. ``op_s`` reports that stretch's
+median operation.
 
 ``Run`` holds the per-run state the phases share.
 """
@@ -22,6 +25,7 @@ import datetime as dt
 import os
 import random
 import time
+from collections import defaultdict
 from dataclasses import dataclass, field
 from statistics import median
 
@@ -59,22 +63,24 @@ class QueryPack:
     ``builder()`` (plan construction) then ``collect()`` (execution), in an
     order the seed shuffles. The first (cold) operation is diffed against
     DuckDB running each query's oracle SQL; every later one is compared by
-    digest with that checked result."""
+    digest with that checked result.
+
+    ``op_s`` is the sum over the queries of each one's median time
+    (``builder()`` plus ``collect()``) over the timed operations: a pause
+    that slows one query of one operation does not move it."""
 
     name: str
     op_kind: str
     queries: tuple[tuple[str, str], ...]  # (operators module, registry name)
     sf: float
     docs_sf: float
-    # Timed operations a run makes at least. The runs' time budget (about
-    # 35 s each, most of it JVM start and the cold operation) leaves room
-    # for one page; see CorpusCuration for why a pass gets three.
-    min_ops = 1
+    min_ops = 4
 
     def prepare(self, run: Run) -> None:
-        self.sf_dir = os.path.join(run.work, "tables")
+        self.sf_dir = os.path.join(run.work, f"tables-{self.name}")
         gen.write_tables(self.sf_dir, DATA_SEED, self.sf, self.docs_sf)
         self.rng = random.Random(run.seed)
+        self.times: dict[str, list[float]] = defaultdict(list)
 
     def _op(self, run: Run, timed: bool, con=None) -> float:
         tr, order = run.tracer, list(self.queries)
@@ -83,6 +89,7 @@ class QueryPack:
         tr.begin_op(self.op_kind, timed)
         for module, q in order:
             layer = f"operators.{module}.{q}"
+            t = time.perf_counter()
             try:
                 with tr.span(f"{layer}.plan"):
                     df = run.specs[q].builder(run.spark, self.sf_dir)
@@ -91,6 +98,8 @@ class QueryPack:
                 results.append((q, df.columns, rows))
             except Exception as exc:  # noqa: BLE001 — a failing query is counted, not fatal
                 results.append((q, None, repr(exc)))
+            if timed:
+                self.times[q].append(time.perf_counter() - t)
         wall = tr.end_op()["wall_s"]
         for q, cols, rows in results:
             if cols is None:
@@ -111,8 +120,28 @@ class QueryPack:
     def step(self, run: Run, i: int) -> None:
         self._op(run, timed=True)
 
+    def op_s(self) -> float:
+        return sum(median(v) for v in self.times.values())
+
     def metrics(self) -> dict[str, float]:
         return {}
+
+
+class CorpusCuration(QueryPack):
+    """The LLM-data curation pass. Not a workload of its own: a run of it
+    costs as much as a dashboard run (a cold pass is about 23 s), which the
+    benchmark's time budget does not allow. Traced dashboard runs add one
+    cold and one timed pass, so its per-layer metrics are still measured."""
+
+    name = "corpus_curation"
+    op_kind = "pass"
+    queries = (
+        ("curation", "curation_end_to_end"), ("curation", "decontaminate_ngram_overlap"),
+        ("dedup", "dedup_exact"), ("dedup", "dedup_minhash_lsh"),
+        ("retrieval", "text_bm25_topk"), ("similarity", "sim_ivf_topk"),
+        ("multimodal", "mm_frame_features"),
+    )
+    sf, docs_sf = 0.002, 0.01
 
 
 class ReportDashboard(QueryPack):
@@ -124,21 +153,7 @@ class ReportDashboard(QueryPack):
         "r6_bottom10_states", "r7_not_reporting", "flagship_utilization",
     ))
     sf, docs_sf = 0.01, 0.002
-
-
-class CorpusCuration(QueryPack):
-    name = "corpus_curation"
-    op_kind = "pass"
-    queries = (
-        ("curation", "curation_end_to_end"), ("curation", "decontaminate_ngram_overlap"),
-        ("dedup", "dedup_exact"), ("dedup", "dedup_minhash_lsh"),
-        ("retrieval", "text_bm25_topk"), ("similarity", "sim_ivf_topk"),
-        ("multimodal", "mm_frame_features"),
-    )
-    sf, docs_sf = 0.002, 0.01
-    # one warm pass in five or so ran 1.5x slower than its neighbours (the
-    # run's set-up time was normal); the median of three passes drops it
-    min_ops = 3
+    traced_companion = CorpusCuration
 
 
 # ---------------------------------------------------------------------------
@@ -147,10 +162,11 @@ class CorpusCuration(QueryPack):
 
 class WeeklyIngest:
     """The reference lifecycle (load-hhs + load-quality) on generated weekly
-    CSVs, landing on a year of published history.
+    CSVs, landing on a quarter of published history (a full year took 12 s
+    of every run's set-up to publish).
 
-    Warm-up runs a new week, its replay and a correction once; timed
-    operations then repeat the cycle in ``CYCLE``:
+    Warm-up publishes the history, loads one new week and replays it; the
+    timed operations are ``STEPS``, then new weeks until the time is up:
 
     * new week — HHS CSV -> prep -> location/hospital appends -> MERGE of
       the weekly fact partition; then the CMS release of the same week ->
@@ -159,14 +175,17 @@ class WeeklyIngest:
     * correction — a re-issued subset of the last week: rewrites that one
       fact partition; the new values must read back through
       ``sinks.read_published``.
+
+    The replay goes through the new week's code path, so it warms the timed
+    new weeks too. ``op_s`` is the median new week.
     """
 
     name = "weekly_ingest"
     op_kind = "new_week"
-    CYCLE = ("new_week", "new_week", "replay", "new_week", "new_week", "correction")
-    HISTORY_WEEKS = 52
+    STEPS = ("new_week", "correction", "new_week", "new_week", "new_week", "new_week")
+    HISTORY_WEEKS = 13
     HOSPITALS = 6000
-    min_ops = 1
+    min_ops = len(STEPS)
 
     def prepare(self, run: Run) -> None:
         self.feed = gen.HhsFeed(os.path.join(run.work, "csv"), run.seed, self.HOSPITALS)
@@ -181,8 +200,8 @@ class WeeklyIngest:
         self.known_pks: set[str] = set()
         self.known_locs: set[tuple] = set()
         self.last: tuple | None = None  # (week index, hhs batch, cms batch)
-        self.stats: dict[str, list[float]] = {"replay": [], "correction": [], "rows_per_s": [],
-                                              "amplification": []}
+        self.stats: dict[str, list[float]] = {"new_week": [], "replay": [], "correction": [],
+                                              "rows_per_s": [], "amplification": []}
 
     # -- program calls ---------------------------------------------------------
 
@@ -304,6 +323,7 @@ class WeeklyIngest:
             run.checker.check(ok, f"new week {i}: appended/partitions {res} want {want}; "
                                   f"week rows {rows} want {len(hhs.pks)}")
             if timed:
+                self.stats["new_week"].append(wall)
                 self.stats["rows_per_s"].append((hhs.rows + cms.rows) / wall)
         else:
             run.checker.check(False, f"new week {i} raised {err}")
@@ -350,14 +370,6 @@ class WeeklyIngest:
                     out[st.st_ino] = st.st_size
         return out
 
-    def _cycle_op(self, run: Run, k: int, timed: bool) -> float:
-        kind = self.CYCLE[k % len(self.CYCLE)]
-        if kind == "new_week":
-            return self._new_week(run, timed)
-        if kind == "replay":
-            return self._replay(run, timed)
-        return self._correction(run, timed)
-
     # -- phases ----------------------------------------------------------------------
 
     def warm_up(self, run: Run) -> float:
@@ -373,10 +385,16 @@ class WeeklyIngest:
         run.checker.check(rows == self.feed.history_rows, f"published history has {rows} rows, "
                                                           f"want {self.feed.history_rows}")
         self.write_s = spent
-        return spent + sum(op(run, False) for op in (self._new_week, self._replay, self._correction))
+        return spent + self._new_week(run, False) + self._replay(run, False)
 
     def step(self, run: Run, i: int) -> None:
-        self._cycle_op(run, i, True)
+        if i < len(self.STEPS) and self.STEPS[i] == "correction":
+            self._correction(run, True)
+        else:
+            self._new_week(run, True)
+
+    def op_s(self) -> float:
+        return median(self.stats["new_week"])
 
     def metrics(self) -> dict[str, float]:
         med = {k: (median(v) if v else 0.0) for k, v in self.stats.items()}
@@ -388,4 +406,4 @@ class WeeklyIngest:
         }
 
 
-WORKLOADS = {w.name: w for w in (ReportDashboard, WeeklyIngest, CorpusCuration)}
+WORKLOADS = {w.name: w for w in (ReportDashboard, WeeklyIngest)}
