@@ -3,8 +3,10 @@ HHS prep pipeline and CMS normalization run end-to-end from fixture CSVs,
 with DuckDB oracles that re-implement the reference semantics independently
 (helper_load_hhs.py:45-67, load-quality.py:158-189).
 
-The fixture files materialize at import (no Spark needed) so the oracle SQL
-can never race the builders — same pattern as operators/sources_sinks.py.
+Each builder rewrites its fixture CSVs under ``sources_sinks._IO_DIR``
+before it returns, so the oracle SQL (which embeds those paths) always reads
+a complete file; importing this module writes nothing — same pattern as
+operators/sources_sinks.py.
 """
 
 from __future__ import annotations
@@ -20,7 +22,7 @@ from ..registry import register
 from ..session import ensure_session_conf
 from ..sources.csvsrc import read_cms_quality, read_hhs_weekly
 from .ingest import normalize_cms, prep_hhs
-from .sources_sinks import _IO_DIR
+from .sources_sinks import _IO_DIR, _atomic_write_text
 
 _HHS_CSV = os.path.join(_IO_DIR, "hhs_fixture.csv")
 _CMS_CSV = os.path.join(_IO_DIR, "cms_fixture.csv")
@@ -58,14 +60,7 @@ _METRICS = (
 def _materialize() -> None:
     os.makedirs(_IO_DIR, exist_ok=True)
     for path, text in ((_HHS_CSV, _HHS_TEXT), (_CMS_CSV, _CMS_TEXT)):
-        with open(path, "w") as f:
-            f.write(text)
-
-
-try:  # builders re-materialize on call; import must never fail (e.g. RO fs)
-    _materialize()
-except OSError:
-    pass
+        _atomic_write_text(path, lambda f, text=text: f.write(text))
 
 _SQL_METRIC_COLS = ", ".join(f"'{m}': 'DOUBLE'" for m in _METRICS)
 _SQL_SCRUB = ",\n           ".join(

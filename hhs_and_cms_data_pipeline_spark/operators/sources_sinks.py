@@ -3,10 +3,14 @@ S1 schema'd CSV scan, S2 all-string CSV scan, S4 JSON scan, K1 partitioned
 batch append, K2 atomic overwrite publish).
 
 Each builder materializes its input file/table EAGERLY (before returning the
-DataFrame) under ``spark-warehouse/driver_io/`` and derives everything from
-``nation`` — a fixed-size TPC-H table whose 25 rows are identical at every
-scale factor — so the oracle never races the write and never depends on
-which sf_dir produced the file.
+DataFrame) under ``_IO_DIR`` and derives everything from ``nation`` — a
+fixed-size TPC-H table whose 25 rows are identical at every scale factor —
+so the oracle never races the write and never depends on which sf_dir
+produced the file. Importing this module writes nothing: the oracle SQL
+embeds the fixture paths, which are only read after the builder has run.
+``_IO_DIR`` lives under ``tempfile.gettempdir()`` (resolved once, at
+import), so the paths are known without a session and a caller that points
+``TMPDIR`` elsewhere keeps every fixture out of the checkout.
 
 Reference sites: CSV scans helper_load_hhs.py:45 / load-quality.py:56-62;
 batched insert sink helper_load_hhs.py:92-99 (1000-row executemany);
@@ -17,9 +21,9 @@ from __future__ import annotations
 
 import csv
 import json
-import glob
 import os
 import shutil
+import tempfile
 import weakref
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -32,7 +36,7 @@ from ..session import ensure_session_conf
 from ..sinks import append_new_keys, read_published, write_parquet_atomic
 from ..sources import table
 
-_IO_DIR = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(__file__))), "spark-warehouse", "driver_io")
+_IO_DIR = os.path.join(tempfile.gettempdir(), "spark_graft_io")
 
 
 def _tagged_io_path(name: str, sf_dir: str) -> str:
@@ -86,42 +90,6 @@ def _export_nation(spark: SparkSession, sf_dir: str) -> list[tuple]:
         .collect()
     )
     return [tuple(r) for r in rows]
-
-
-def _materialize_at_import() -> None:
-    """Write the nation CSV/JSONL eagerly at module import (pyarrow, no
-    Spark): the oracle SQL for S1/S2/S4 reads these files, and the driver
-    may evaluate oracle text before any builder runs. Content is identical
-    at every SF, so any available testdata dir works."""
-    import glob
-
-    candidates = sorted(glob.glob("/root/testdata/sf*/nation.parquet"))
-    if not candidates:
-        return
-    try:
-        import pyarrow.parquet as pq
-
-        tbl = pq.read_table(candidates[0], columns=["n_nationkey", "n_name", "n_regionkey"])
-        rows = sorted(zip(*[tbl.column(c).to_pylist() for c in
-                            ("n_nationkey", "n_name", "n_regionkey")]))
-        os.makedirs(_IO_DIR, exist_ok=True)
-
-        def _wc(f):
-            w = csv.writer(f, quoting=csv.QUOTE_MINIMAL)
-            w.writerow(["n_nationkey", "n_name", "n_regionkey"])
-            w.writerows(rows)
-
-        def _wj(f):
-            for k, name, rk in rows:
-                f.write(json.dumps({"n_nationkey": k, "n_name": name, "n_regionkey": rk}) + "\n")
-
-        _atomic_write_text(_NATION_CSV, _wc)
-        _atomic_write_text(_NATION_JSONL, _wj)
-    except Exception:
-        pass  # builders re-materialize on call; import must never fail
-
-
-_materialize_at_import()
 
 
 def _write_nation_csv(spark: SparkSession, sf_dir: str) -> None:
@@ -230,12 +198,6 @@ def _write_geojson() -> None:
     write_synthetic_geojson(_GEOJSON_PATH)
 
 
-try:  # oracle SQL reads this file; materialize before any builder runs
-    _write_geojson()
-except Exception:
-    pass  # builder re-materializes on call; import must never fail
-
-
 @register(
     "s4_geojson_scan",
     oracle=f"""
@@ -284,12 +246,6 @@ def _write_geojson_shards() -> None:
 
     write_synthetic_geojson(_GEOJSON_SHARD_A, n_states=12, start=0)
     write_synthetic_geojson(_GEOJSON_SHARD_B, n_states=8, start=12)
-
-
-try:  # oracle SQL reads these files; materialize before any builder runs
-    _write_geojson_shards()
-except Exception:
-    pass  # builder re-materializes on call; import must never fail
 
 
 _SQL_GEOJSON_COLUMNS = (
@@ -444,16 +400,19 @@ _BAD_LINES = ["xx,BADLAND,9", "7,SHORT"]
 
 def _write_messy_csv(spark: SparkSession, sf_dir: str) -> None:
     os.makedirs(_IO_DIR, exist_ok=True)
-    with open(_MESSY_CSV, "w", newline="") as f:
+    rows = _export_nation(spark, sf_dir)
+
+    def _w(f):
         w = csv.writer(f, quoting=csv.QUOTE_MINIMAL)
         w.writerow(["n_nationkey", "n_name", "n_regionkey"])
-        rows = _export_nation(spark, sf_dir)
         for i, row in enumerate(rows):
             w.writerows([row])
             if i == 4:  # interleave the junk mid-file, not at the edges
                 f.write(_BAD_LINES[0] + "\n")
             if i == 9:
                 f.write(_BAD_LINES[1] + "\n")
+
+    _atomic_write_text(_MESSY_CSV, _w)
 
 
 MESSY_SCHEMA = T.StructType(

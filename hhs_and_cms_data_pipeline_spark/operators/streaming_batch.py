@@ -31,18 +31,12 @@ def _run_drain(spark: SparkSession, start):
     set/restored around start()..awaitTermination only, so the readout
     (which may scan the corpus, e.g. ST18's truth audit) keeps the
     session's full parallelism."""
-    from ..streaming.stateful import stream_state_partitions
+    from ..streaming.stateful import stream_drain_confs
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(stream_state_partitions(spark))
-    )
-    try:
+    with stream_drain_confs(spark):
         q = start()
         q.awaitTermination()
-        return q
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    return q
 
 
 # --------------------------------------------------------------------------

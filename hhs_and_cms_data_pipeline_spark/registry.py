@@ -5,6 +5,12 @@ a ``(spark, sf_dir) -> DataFrame`` builder plus (when SQL-expressible) an
 equivalent ANSI-SQL oracle string for the DuckDB differential check.
 Column names are aliased identically on both sides (the driver sorts columns
 by name before hashing values).
+
+Query *names* are the public contract: ``bench.py``, the benchmark and the
+tests resolve specs by name, so a rename is a breaking change.
+``all_specs()`` serves the specs in registration order — the order of
+``_OPERATOR_MODULES``, then top to bottom within each module — and the
+order carries no other meaning.
 """
 
 from __future__ import annotations
@@ -67,86 +73,6 @@ def register(
     return deco
 
 
-# Names the driver's correctness gate sampled in rounds 1-9 (it takes the first
-# 50 registry entries every round, so these 69 are the only queries that ever
-# earned a driver-side green row).  ``all_specs`` lists never-sampled names
-# FIRST so successive driver rounds rotate through fresh coverage.  Registry
-# *names* are the public contract and stay frozen; ordering is not (bench.py
-# resolves by name and raises on renames).  The baseline set below is frozen
-# history; ``_driver_sampled_names`` extends it by scanning the repo's
-# CORRECTNESS_r*.json artifacts at import time, so the rotation keeps
-# advancing in every future round without manual updates.
-_DRIVER_SAMPLED_THROUGH_R9: frozenset[str] = frozenset(
-    {
-        "dedup_canonical_corpus", "dedup_clusters", "dedup_embedding_cosine",
-        "dedup_embedding_lsh", "dedup_exact", "dedup_incremental",
-        "dedup_levenshtein", "dedup_minhash_lsh", "dedup_ngram_jaccard",
-        "dedup_remove_repeated_chunks", "dedup_simhash", "dedup_substring_spans",
-        "f11_boolean_parse", "f12_guarded_int_parse", "f13_lenient_numeric",
-        "f15_format_number", "f1_wkt_point_parse", "f4_date_roundtrip",
-        "f6_sentinel_to_null", "flagship_utilization", "j5_multicol_semi_lookup",
-        "j6_positional_pairing", "j7_min_id_lookup", "k3_upsert_anti_join",
-        "mm_binary_meta", "mm_frame_features", "mm_frame_sample", "mm_resize",
-        "p1_column_projection", "p4_null_rejection", "p5_membership_filter",
-        "p6_range_validity", "r1_weekly_count_trend", "r2_recent_weeks_summary",
-        "r3_utilization_by_rating", "r4_weekly_state_totals", "r5_sum_by_state",
-        "r6_bottom10_states", "r7_not_reporting", "r8_available_dates",
-        "s3_table_scan", "sim_ivf_topk", "sim_knn_join", "sim_topk_bruteforce",
-        "sim_topk_pandas_udf", "stream_sliding_window", "stream_tumbling_hourly",
-        "t1_newest_week_row", "t6_topk_by_measure", "text_bigram_lm_surprisal",
-        "text_bpe_encode_stats", "text_bpe_pair_stats", "text_bpe_train_2merges",
-        "text_fingerprint", "text_kneser_ney_bigram", "text_langid",
-        "text_quality_classifier", "text_quality_score", "text_rarity_score",
-        "text_regex_tokens", "text_token_stats", "text_top_terms",
-        "text_vocab_growth", "text_winnowing_fps", "text_zipf_slope",
-        "tx16_pmi_collocations", "tx17_chunk_spans", "u1_dedup_first_wins",
-        "w3_last_value_per_series",
-    }
-)
-
-
-import functools
-
-
-def _driver_sampled_names(root: str | None = None) -> frozenset[str]:
-    """Union of every query name a CORRECTNESS_r*.json artifact records —
-    the r1-r9 frozen baseline plus whatever later rounds have sampled.
-    Reading the artifacts keeps the never-sampled-first rotation advancing
-    each round with no manual bookkeeping; any read problem degrades to
-    the frozen baseline (ordering is best-effort, never correctness).
-    The production repo-root scan (root=None) is cached per process —
-    artifacts are written between rounds, never mid-process, so one scan
-    per interpreter is exact; an explicit ``root`` (tests) always rescans."""
-    if root is None:
-        return _repo_sampled_names_cached()
-    return _scan_sampled_names(root)
-
-
-@functools.lru_cache(maxsize=1)
-def _repo_sampled_names_cached() -> frozenset[str]:
-    return _scan_sampled_names(None)
-
-
-def _scan_sampled_names(root: str | None) -> frozenset[str]:
-    import glob as _glob
-    import json as _json
-    import os as _os
-
-    sampled = set(_DRIVER_SAMPLED_THROUGH_R9)
-    repo_root = root or _os.path.dirname(
-        _os.path.dirname(_os.path.abspath(__file__))
-    )
-    for path in _glob.glob(_os.path.join(repo_root, "CORRECTNESS_r*.json")):
-        try:
-            with open(path) as fh:
-                doc = _json.load(fh)
-            if isinstance(doc, dict):
-                sampled.update(k for k in doc if isinstance(k, str))
-        except (OSError, ValueError):
-            continue
-    return frozenset(sampled)
-
-
 # Operator modules that failed to import in ``all_specs`` — module name →
 # repr(exception).  Non-empty means the registry is serving a PARTIAL
 # surface; ``__spark_entry__``/bench surface this loudly but keep the
@@ -192,236 +118,4 @@ def all_specs() -> dict[str, QuerySpec]:
             raise ImportError(
                 f"no operator module imported cleanly: {IMPORT_ERRORS}"
             )
-    # Intersect with registered names: artifact keys that are not (or are no
-    # longer) registry names must not influence ordering.
-    seen_names = _driver_sampled_names() & set(_REGISTRY)
-    modified = _modified_since_sampled(seen_names)
-    resample = [
-        n
-        for n in _PINNED_RESAMPLE
-        if n in _REGISTRY and n not in _sampled_at_or_after(_PINNED_RESAMPLE_ROUND)
-    ]
-    pinned = [n for n in _PINNED_FRESH if n in _REGISTRY and n not in seen_names]
-    fresh = [
-        n for n in _REGISTRY
-        if n not in seen_names and n not in pinned
-    ]
-    order = list(
-        dict.fromkeys(
-            resample
-            + pinned
-            + sorted(modified)
-            + fresh
-            + [n for n in _REGISTRY if n in seen_names and n not in modified]
-        )
-    )
-    return {n: _REGISTRY[n] for n in order}
-
-
-# Never-driver-sampled SURVEY §2 scan/sink rows, hand-promoted to the head
-# of the rotation (VERDICT r11 ask #5): after 11 rounds these still have
-# local-only evidence, so they go first until a CORRECTNESS artifact
-# records them (at which point they fall out of the fresh set entirely).
-_PINNED_FRESH = (
-    "s1_csv_scan_schema",
-    "s2_csv_scan_strings",
-    "s4_json_scan",
-    "s4_geojson_scan",
-    "k1_partitioned_append",
-    "k2_atomic_publish",
-)
-
-# Round-12 modified these query paths but the driver never re-verified the
-# new plans (VERDICT r12 item 1): five were edited via SHARED helpers
-# (_large_star/_small_star, cosine_of_pairs, containment_pairs), which the
-# per-builder fingerprint of that round could not see, and six had never
-# been sampled at all and sat in a ~121-name fresh pool. Force them to the
-# very head of the rotation until a CORRECTNESS artifact from round >=
-# _PINNED_RESAMPLE_ROUND records a driver-side row for them, then they
-# fall out of the pin automatically (same lifecycle as _PINNED_FRESH).
-_PINNED_RESAMPLE_ROUND = 13
-_PINNED_RESAMPLE = (
-    "dedup_clusters",
-    "dedup_canonical_corpus",
-    "dedup_embedding_cosine",
-    "dedup_embedding_lsh",
-    "dedup_containment",
-    "graph_pagerank",
-    "graph_wcc_sizes",
-    "grouped_map_user_anomaly",
-    "cogroup_click_context",
-    "curation_hashed_linear_score",
-    "sk_hll_rollup",
-    # r13's own modified-but-never-sampled queries (the fingerprint
-    # promotion covers only SAMPLED names — never-sampled ones sit in a
-    # ~78-name fresh pool with no position guarantee, the exact r12 hole):
-    # the LPA exchange rewrite and the drain-conf streaming family.
-    "graph_label_propagation",
-    "stream_stateful_sessionize",
-    "stream_hll_registers",
-    "stream_drift_monitor",
-    "stream_cms_heavy_hitters",
-    "stream_manifest_sink",
-    "stream_cusum_changepoint",
-    "stream_incremental_rollup",
-    "stream_snapshot_publish",
-)
-
-
-@functools.lru_cache(maxsize=8)
-def _sampled_at_or_after(min_round: int, root: str | None = None) -> frozenset[str]:
-    """Names recorded by a CORRECTNESS_r<N>.json artifact with N >= min_round.
-    Drives _PINNED_RESAMPLE expiry: a pin is only useful until the driver has
-    actually re-verified the query, which is observable solely through these
-    artifacts. Unreadable artifacts degrade to 'not yet sampled' (pin stays)."""
-    import glob as _glob
-    import json as _json
-    import os as _os
-    import re as _re
-
-    repo_root = root or _os.path.dirname(
-        _os.path.dirname(_os.path.abspath(__file__))
-    )
-    sampled: set[str] = set()
-    for path in _glob.glob(_os.path.join(repo_root, "CORRECTNESS_r*.json")):
-        m = _re.search(r"CORRECTNESS_r(\d+)", _os.path.basename(path))
-        if not m or int(m.group(1)) < min_round:
-            continue
-        try:
-            with open(path) as fh:
-                doc = _json.load(fh)
-            if isinstance(doc, dict):
-                sampled.update(k for k in doc if isinstance(k, str))
-        except (OSError, ValueError):
-            continue
-    return frozenset(sampled)
-
-
-def _stable_repr(val: object) -> str | None:
-    """repr(val) iff it is process-stable (no memory addresses): scalar
-    constants and flat tuples/frozensets of them. Anything else -> None."""
-    if val is None or isinstance(val, (bool, int, float, str, bytes)):
-        return repr(val)
-    if isinstance(val, (tuple, frozenset)):
-        parts = [_stable_repr(v) for v in (sorted(val, key=repr) if isinstance(val, frozenset) else val)]
-        if all(p is not None for p in parts):
-            return f"{type(val).__name__}({', '.join(parts)})"  # type: ignore[arg-type]
-    return None
-
-
-def _source_closure(fn: object) -> str:
-    """Source of ``fn`` plus the sources of every module-local function/class
-    it transitively references (and stable reprs of module-local scalar
-    constants it reads). VERDICT r12 item 1: the old per-builder-source
-    fingerprint missed edits made through shared helpers (_large_star,
-    cosine_of_pairs, containment_pairs), so the consumers of those helpers
-    were never promoted into the driver's re-verification prefix."""
-    import inspect
-    import sys
-    import types
-
-    mod = sys.modules.get(getattr(fn, "__module__", "") or "")
-    mod_name = getattr(mod, "__name__", None)
-
-    def walk_codes(code: types.CodeType):
-        yield code
-        for c in code.co_consts:
-            if isinstance(c, types.CodeType):
-                yield from walk_codes(c)
-
-    pieces: dict[str, str] = {}
-    visited: set[int] = set()
-    stack: list[object] = [fn]
-    while stack:
-        obj = stack.pop()
-        if id(obj) in visited:
-            continue
-        visited.add(id(obj))
-        try:
-            src = inspect.getsource(obj)  # type: ignore[arg-type]
-        except (OSError, TypeError):
-            src = getattr(obj, "__qualname__", None) or repr(obj)
-        key = f"{getattr(obj, '__module__', '')}.{getattr(obj, '__qualname__', type(obj).__name__)}"
-        pieces.setdefault(key, src)
-
-        # Recurse: functions expose referenced globals via co_names; classes
-        # via their function-valued attributes.
-        codes: list[types.CodeType] = []
-        if isinstance(obj, types.FunctionType):
-            codes = list(walk_codes(obj.__code__))
-            # closure cells can also carry module-local helpers
-            for cell in obj.__closure__ or ():
-                try:
-                    cv = cell.cell_contents
-                except ValueError:
-                    continue
-                if isinstance(cv, types.FunctionType) and cv.__module__ == mod_name:
-                    stack.append(cv)
-        elif isinstance(obj, type):
-            for attr in vars(obj).values():
-                if isinstance(attr, types.FunctionType) and attr.__module__ == mod_name:
-                    stack.append(attr)
-        if mod is None or not codes:
-            continue
-        names: set[str] = set()
-        for c in codes:
-            names.update(c.co_names)
-        for name in sorted(names):
-            if name not in mod.__dict__:
-                continue
-            val = mod.__dict__[name]
-            if isinstance(val, types.FunctionType) and val.__module__ == mod_name:
-                stack.append(val)
-            elif isinstance(val, type) and val.__module__ == mod_name:
-                stack.append(val)
-            elif not isinstance(val, types.ModuleType) and not callable(val):
-                rep = _stable_repr(val)
-                if rep is not None:
-                    pieces.setdefault(f"{mod_name}::{name}", rep)
-    return "\x00".join(f"{k}\x01{pieces[k]}" for k in sorted(pieces))
-
-
-def spec_fingerprint(spec: QuerySpec) -> str:
-    """md5 over the builder's transitive module-local source closure + the
-    oracle SQL — the identity the modified-query promotion compares. Edits
-    to the builder OR to any module-local helper/constant it references
-    change the fingerprint, so shared-helper rewrites promote every
-    consumer into the driver's re-verification prefix (VERDICT r12 item 1)."""
-    import hashlib
-
-    return hashlib.md5(
-        (_source_closure(spec.builder) + "\x00" + (spec.oracle or "")).encode()
-    ).hexdigest()
-
-
-def _modified_since_sampled(
-    seen_names: set[str] | frozenset[str], path: str | None = None
-) -> set[str]:
-    """Sampled queries whose fingerprint no longer matches the committed
-    QUERY_HASHES.json snapshot (regenerated via scripts/gen_query_hashes.py
-    whenever the surface is re-verified). The rotation sorts already-sampled
-    names last, so without this a query edited AFTER its green sample would
-    never re-verify against the driver — a regression could hide behind the
-    rotation (VERDICT r11 ask #4). Promoted names re-enter the fresh prefix
-    until a new artifact samples them. Missing/unreadable snapshot → empty
-    set (ordering is best-effort, never correctness)."""
-    import json as _json
-    import os as _os
-
-    if path is None:
-        path = _os.path.join(
-            _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__))),
-            "QUERY_HASHES.json",
-        )
-    try:
-        with open(path) as fh:
-            baseline = _json.load(fh)
-    except (OSError, ValueError):
-        return set()
-    if not isinstance(baseline, dict):
-        return set()
-    return {
-        n
-        for n in seen_names
-        if n in baseline and baseline[n] != spec_fingerprint(_REGISTRY[n])
-    }
+    return dict(_REGISTRY)

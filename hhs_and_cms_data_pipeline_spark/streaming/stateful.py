@@ -18,7 +18,8 @@ dedup is a max() per (user_id, session_seq) — sessions only grow.
 from __future__ import annotations
 
 import os
-from collections.abc import Iterator
+from collections.abc import Iterator, Mapping
+from contextlib import contextmanager
 
 import pandas as pd
 
@@ -46,12 +47,53 @@ def stream_state_partitions(spark: SparkSession) -> int:
     the pandas fold serializes); rows bit-identical across all three. On
     a production cluster, override with $SPARK_GRAFT_STREAM_STATE_PARTITIONS
     sized so each partition holds ~100MB-1GB of state."""
-    import os as _os
-
-    env = _os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS")
+    env = os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS")
     if env:
-        return max(1, int(env))
+        try:
+            return max(1, int(env))
+        except ValueError:
+            raise ValueError(
+                f"SPARK_GRAFT_STREAM_STATE_PARTITIONS must be an integer, got {env!r}"
+            ) from None
     return max(8, spark.sparkContext.defaultParallelism // 4)
+
+
+# transformWithState keeps each state variable in its own column family,
+# which only the RocksDB provider supports — a requirement of those
+# operators, not a tuning choice.
+ROCKSDB_STATE_STORE = {
+    "spark.sql.streaming.stateStore.providerClass":
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+}
+
+
+@contextmanager
+def stream_drain_confs(
+    spark: SparkSession, extra: Mapping[str, str] | None = None
+) -> Iterator[None]:
+    """Run a bounded drain under ``stream_state_partitions`` (plus any
+    ``extra`` confs) and restore the session's prior values on exit, even
+    when the drain fails. Enter it around ``start()``..``awaitTermination()``
+    only: the query binds its confs when it starts (the state store pins
+    the partition count in the checkpoint at the first batch), so building
+    the stream outside the scope cannot leak the reduced width into the
+    shared session, and the readout after the drain keeps its full
+    parallelism."""
+    confs = {
+        "spark.sql.shuffle.partitions": str(stream_state_partitions(spark)),
+        **(extra or {}),
+    }
+    prior = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in prior.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 _GAP_US = 30 * 60 * 1_000_000  # 30 min in us; ts travels as int64 MICROS
@@ -159,12 +201,9 @@ def run_stateful_sessionize(
     deduplicated final sessions and the number of micro-batches executed.
 
     The drain runs under the streaming-specific state-partition count
-    (stream_state_partitions — rationale and A/B numbers there). The conf
-    is set/restored around the bounded availableNow drain: the state
-    store binds spark.sql.shuffle.partitions at first batch and pins it
-    in the checkpoint, so the window must cover start()..awaitTermination;
-    the single-use checkpoint means no later run can see a mismatched
-    pinned count."""
+    (stream_state_partitions — rationale and A/B numbers there), scoped by
+    stream_drain_confs to the bounded availableNow drain; the single-use
+    checkpoint means no later run can see a mismatched pinned count."""
     raw = (
         spark.readStream.schema(events_raw_schema(spark, stage_dir))
         .option("maxFilesPerTrigger", 1)
@@ -193,11 +232,7 @@ def run_stateful_sessionize(
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(stream_state_partitions(spark))
-    )
-    try:
+    with stream_drain_confs(spark):
         q = (
             sessions.writeStream.format("memory")
             .queryName(query_name)
@@ -207,8 +242,6 @@ def run_stateful_sessionize(
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     n_batches = len([p for p in q.recentProgress if p["numInputRows"] > 0])
     # update-mode log: the last emission per (user, session) is the biggest —
     # sessions only grow — so max() collapses snapshots into finals.

@@ -96,22 +96,8 @@ def run_type_counts(
 
     from ..sources.tables import normalize_events_ts
     from .events import events_raw_schema
+    from .stateful import ROCKSDB_STATE_STORE, stream_drain_confs
 
-    _PROVIDER_KEY = "spark.sql.streaming.stateStore.providerClass"
-    prior_provider = spark.conf.get(_PROVIDER_KEY, None)
-    spark.conf.set(
-        _PROVIDER_KEY,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    # streaming-specific state-partition count (stateful.stream_state_partitions
-    # docstring: per-batch state-store commit fan-out is per-partition; A/B'd
-    # on ST4 at sf0.1 — 32 parts 6.1-6.9s, 8 parts 5.8-6.4s, rows identical)
-    from .stateful import stream_state_partitions
-
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(stream_state_partitions(spark))
-    )
     raw = (
         spark.readStream.schema(events_raw_schema(spark, stage_dir))
         .option("maxFilesPerTrigger", 1)
@@ -133,7 +119,7 @@ def run_type_counts(
             initial_state.groupBy("user_id") if initial_state is not None else None
         ),
     )
-    try:
+    with stream_drain_confs(spark, ROCKSDB_STATE_STORE):
         q = (
             out.writeStream.format("memory")
             .queryName(query_name)
@@ -143,12 +129,6 @@ def run_type_counts(
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        if prior_provider is None:
-            spark.conf.unset(_PROVIDER_KEY)
-        else:
-            spark.conf.set(_PROVIDER_KEY, prior_provider)
     n_batches = len([p for p in q.recentProgress if p["numInputRows"] > 0])
     emissions = spark.table(query_name)
     last = (

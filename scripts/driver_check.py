@@ -10,13 +10,6 @@ its DuckDB oracle at sf0.01 and compares bit-exactly — the same contract
 as tests/test_oracle_diff.py, packaged for quick ad-hoc checks of freshly
 touched queries without a pytest session.
 
-`--next [N]` (default 50) replaces the name list with the FIRST N entries
-of the registry's rotation order — exactly the sample the driver's next
-correctness round will draw (pinned rows, then modified-since-sampled,
-then never-sampled) — so pre-verifying the upcoming round is one command:
-
-    PYTHONPATH=. python scripts/driver_check.py --next
-
 Comparison is DELEGATED to tests/oracle_utils.compare_spark_duckdb — the
 same order-insensitive, bit-exact canonicalization the pytest gate uses —
 so the repo has exactly ONE comparison implementation (r8 VERDICT ask #3:
@@ -50,15 +43,7 @@ def main() -> int:
     from tests.oracle_utils import compare_spark_duckdb, duckdb_connection
 
     sf_dir = os.environ.get("SPARK_GRAFT_CHECK_SF", "/root/testdata/sf0.01")
-    args = sys.argv[1:]
-    if args and args[0] == "--next":
-        from hhs_and_cms_data_pipeline_spark.registry import all_specs
-
-        n = int(args[1]) if len(args) > 1 else 50
-        names = list(all_specs())[:n]
-        print(f"predicted next driver sample ({len(names)} names)")
-    else:
-        names = args or DEFAULT_SAMPLE
+    names = sys.argv[1:] or DEFAULT_SAMPLE
 
     spark = (
         SparkSession.builder.master("local[8]")

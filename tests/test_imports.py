@@ -10,7 +10,10 @@ invocation — it runs in well under a second and needs no SparkSession.
 
 import compileall
 import importlib
+import os
 import pkgutil
+import subprocess
+import sys
 from pathlib import Path
 
 import hhs_and_cms_data_pipeline_spark as pkg
@@ -51,6 +54,72 @@ def test_registry_serves_full_surface():
         f"registry shrank to {len(specs)} queries — an operator module "
         "probably failed to import or a rename dropped registrations"
     )
+
+
+def test_registry_serves_registration_order():
+    """all_specs() serves the registry in registration order, the same on
+    every call: names are the contract and the order carries no meaning."""
+    from hhs_and_cms_data_pipeline_spark import registry
+
+    first = list(registry.all_specs())
+    assert first == list(registry._REGISTRY)
+    assert list(registry.all_specs()) == first
+    assert len(first) == 280
+
+
+def _tree_state(root: str) -> dict[str, tuple[int, int]]:
+    state = {}
+    for d, dirs, files in os.walk(root):
+        dirs[:] = [x for x in dirs if x != ".git"]
+        for f in files:
+            path = os.path.join(d, f)
+            try:
+                st = os.lstat(path)
+            except FileNotFoundError:
+                continue
+            state[path] = (st.st_mtime_ns, st.st_size)
+    return state
+
+
+def _changed(before: dict, after: dict) -> list[str]:
+    return sorted(p for p in before.keys() | after.keys() if before.get(p) != after.get(p))
+
+
+def test_importing_operators_writes_no_file(tmp_path):
+    """Importing the package and every operator module (via all_specs())
+    must write nothing: not into the checkout, not into the temp dir. The
+    fixtures the oracles read are written by the builders, when they run."""
+    repo = str(PKG_ROOT.parent)
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    # no bytecode cache: the interpreter's own .pyc writes are not the
+    # program's side effects
+    env = {
+        **os.environ,
+        "TMPDIR": str(tmp),
+        "PYTHONDONTWRITEBYTECODE": "1",
+        "PYTHONPATH": repo,
+    }
+    before_repo, before_tmp = _tree_state(repo), _tree_state(str(tmp))
+    out = subprocess.run(
+        [
+            sys.executable,
+            "-c",
+            "from hhs_and_cms_data_pipeline_spark import registry\n"
+            "n = len(registry.all_specs())\n"
+            "assert not registry.IMPORT_ERRORS, registry.IMPORT_ERRORS\n"
+            "print(n)",
+        ],
+        cwd=repo,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert out.returncode == 0, out.stderr
+    assert int(out.stdout.split()[-1]) == 280
+    assert _changed(before_repo, _tree_state(repo)) == []
+    assert _changed(before_tmp, _tree_state(str(tmp))) == []
 
 
 def test_broken_module_degrades_to_partial_surface(monkeypatch, capsys):

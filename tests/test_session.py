@@ -42,11 +42,11 @@ def test_good_confs_apply(spark):
 
 
 def test_registered_query_names_are_stable():
-    """Driver-row rotation accumulates correctness coverage ACROSS rounds
-    keyed by query NAME — renaming a registered query silently resets its
-    history (round-2 VERDICT item 4). Renames must be deliberate: update
-    this frozen list in the same commit and say why. Adding queries is
-    always fine."""
+    """Query NAMES are the registry's public contract: bench.py, the
+    benchmark and the tests resolve specs by name, and correctness history
+    is keyed by name, so a rename silently breaks callers and resets that
+    history. Renames must be deliberate: update this frozen list in the
+    same commit and say why. Adding queries is always fine."""
     from hhs_and_cms_data_pipeline_spark.registry import all_specs
 
     frozen = {
@@ -285,177 +285,3 @@ def test_concurrent_planning_sees_consistent_confs(spark):
     for n in names:
         assert results[n] == sequential[n], f"{n} diverged under concurrency"
     assert all(v == "true" for v in aqe_reads), aqe_reads
-
-
-def test_driver_sample_rotation_self_advances(tmp_path):
-    """The registry orders never-driver-sampled names first, extending the
-    frozen r1-r9 baseline with whatever CORRECTNESS_r*.json artifacts
-    record — so each round's sample file rotates the next unsampled block
-    to the front with no manual bookkeeping. Unreadable artifacts degrade
-    to the baseline (ordering is best-effort, never correctness)."""
-    import json
-
-    from hhs_and_cms_data_pipeline_spark.registry import (
-        _DRIVER_SAMPLED_THROUGH_R9,
-        _driver_sampled_names,
-        all_specs,
-    )
-
-    # empty artifact dir -> exactly the frozen baseline
-    assert _driver_sampled_names(str(tmp_path)) == _DRIVER_SAMPLED_THROUGH_R9
-
-    # a new round's artifact unions in
-    names = list(all_specs())
-    (tmp_path / "CORRECTNESS_r10.json").write_text(
-        json.dumps({n: {"rows_match": True} for n in names[:50]})
-    )
-    got = _driver_sampled_names(str(tmp_path))
-    assert got == _DRIVER_SAMPLED_THROUGH_R9 | set(names[:50])
-
-    # corrupt artifacts are skipped, valid ones still count
-    (tmp_path / "CORRECTNESS_r11.json").write_text("{ not json")
-    assert _driver_sampled_names(str(tmp_path)) == got
-
-    # the live ordering puts every never-sampled or modified-since-sampled
-    # name before any unmodified sampled one
-    from hhs_and_cms_data_pipeline_spark.registry import _modified_since_sampled
-
-    from hhs_and_cms_data_pipeline_spark import registry
-
-    live = _driver_sampled_names()
-    modified = _modified_since_sampled(live & set(names))
-    # _PINNED_RESAMPLE names are sampled-but-force-promoted (VERDICT r12
-    # item 1) and deliberately lead the rotation until a round>=13 artifact
-    # re-records them — exclude them from the monotonic-suffix invariant.
-    resampled = registry._sampled_at_or_after(registry._PINNED_RESAMPLE_ROUND)
-    pins = {n for n in registry._PINNED_RESAMPLE if n not in resampled}
-    seen_flags = [
-        n in live and n not in modified for n in names if n not in pins
-    ]
-    assert seen_flags == sorted(seen_flags), (
-        "unmodified sampled names must all sort after fresh/modified names"
-    )
-    # names themselves are the frozen contract; rotation must not lose any
-    assert set(names) == set(all_specs())
-
-
-def test_modified_sampled_query_resurfaces_in_fresh_prefix(tmp_path):
-    """A query edited AFTER its green driver sample must re-enter the
-    fresh prefix: the rotation sorts sampled names last, so without the
-    QUERY_HASHES.json fingerprint compare a regression in an old query
-    could hide behind the rotation forever (VERDICT r11 ask #4)."""
-    import json
-
-    from hhs_and_cms_data_pipeline_spark import registry
-
-    specs = registry.all_specs()
-    sampled = registry._driver_sampled_names() & set(specs)
-    victim = sorted(sampled)[0]
-    hashes = {n: registry.spec_fingerprint(specs[n]) for n in sampled}
-    path = tmp_path / "QUERY_HASHES.json"
-
-    # accurate snapshot: nothing is modified
-    path.write_text(json.dumps(hashes))
-    assert registry._modified_since_sampled(sampled, str(path)) == set()
-
-    # stale fingerprint for one sampled query: it (and only it) resurfaces
-    hashes[victim] = "0" * 32
-    path.write_text(json.dumps(hashes))
-    assert registry._modified_since_sampled(sampled, str(path)) == {victim}
-
-    # a name the snapshot never recorded is NOT treated as modified (its
-    # driver sample postdates every snapshot regeneration)
-    del hashes[victim]
-    path.write_text(json.dumps(hashes))
-    assert registry._modified_since_sampled(sampled, str(path)) == set()
-
-    # missing / corrupt snapshot degrades to no promotion, never an error
-    assert registry._modified_since_sampled(sampled, str(tmp_path / "nope")) == set()
-    path.write_text("{ not json")
-    assert registry._modified_since_sampled(sampled, str(path)) == set()
-
-
-def test_pinned_fresh_rows_lead_the_rotation():
-    """The never-driver-sampled SURVEY §2 scan/sink rows are hand-promoted
-    to the head of the sample prefix until an artifact records them
-    (VERDICT r11 ask #5). Since r13 the _PINNED_RESAMPLE names (r12-modified
-    queries the driver never re-verified, VERDICT r12 item 1) come first."""
-    from hhs_and_cms_data_pipeline_spark import registry
-
-    order = list(registry.all_specs())
-    sampled = registry._driver_sampled_names()
-    resampled = registry._sampled_at_or_after(registry._PINNED_RESAMPLE_ROUND)
-    expect_lead = [
-        n for n in registry._PINNED_RESAMPLE if n not in resampled
-    ] + [n for n in registry._PINNED_FRESH if n not in sampled]
-    expect_lead = list(dict.fromkeys(expect_lead))
-    assert order[: len(expect_lead)] == expect_lead
-
-
-def test_r12_modified_queries_sit_in_driver_fresh_prefix():
-    """VERDICT r12 item 1: the 11 queries whose plans changed in r12 without
-    a driver-side green row must land in the first 50 of all_specs() (the
-    driver's sample) until a CORRECTNESS artifact from round >= 13 records
-    them — after that the pin expires and rotation resumes."""
-    from hhs_and_cms_data_pipeline_spark import registry
-
-    order = list(registry.all_specs())
-    resampled = registry._sampled_at_or_after(registry._PINNED_RESAMPLE_ROUND)
-    for name in registry._PINNED_RESAMPLE:
-        assert name in order, f"{name} left the registry"
-        if name not in resampled:
-            assert order.index(name) < 50, (
-                f"{name} was modified in r12 without driver re-verification "
-                f"and must stay inside the fresh-50 prefix until resampled"
-            )
-
-
-def test_helper_edit_promotes_consumer_fingerprint(tmp_path):
-    """spec_fingerprint must change when a MODULE-LOCAL HELPER the builder
-    calls changes, not just when the builder's own source changes — the r12
-    star-loop/cosine_of_pairs/containment rewrites were invisible to the old
-    per-builder fingerprint and their consumers never re-verified against
-    the driver (VERDICT r12 item 1)."""
-    import importlib.util
-    import sys
-
-    from hhs_and_cms_data_pipeline_spark import registry
-
-    mod_src_v1 = (
-        "def _helper(x):\n"
-        "    return x + 1\n"
-        "\n"
-        "_THRESHOLD = 5\n"
-        "\n"
-        "def builder(spark, sf_dir):\n"
-        "    return _helper(_THRESHOLD)\n"
-    )
-    # v2 edits ONLY the helper body; v3 edits ONLY the module constant.
-    mod_src_v2 = mod_src_v1.replace("return x + 1", "return x + 2")
-    mod_src_v3 = mod_src_v1.replace("_THRESHOLD = 5", "_THRESHOLD = 6")
-
-    def fingerprint_of(src: str) -> str:
-        p = tmp_path / "fp_probe_mod.py"
-        p.write_text(src)
-        spec_name = "fp_probe_mod"
-        spec = importlib.util.spec_from_file_location(spec_name, p)
-        mod = importlib.util.module_from_spec(spec)
-        sys.modules[spec_name] = mod
-        try:
-            spec.loader.exec_module(mod)
-            import linecache
-
-            linecache.clearcache()  # same path, new contents
-            qs = registry.QuerySpec("probe", mod.builder, None)
-            return registry.spec_fingerprint(qs)
-        finally:
-            del sys.modules[spec_name]
-
-    fp1 = fingerprint_of(mod_src_v1)
-    fp1_again = fingerprint_of(mod_src_v1)
-    fp2 = fingerprint_of(mod_src_v2)
-    fp3 = fingerprint_of(mod_src_v3)
-    assert fp1 == fp1_again, "fingerprint must be deterministic"
-    assert fp1 != fp2, "helper-body edit must change the consumer fingerprint"
-    assert fp1 != fp3, "module-constant edit must change the consumer fingerprint"
-

@@ -3,6 +3,8 @@ upsert sink is idempotent across restarts (SURVEY §2.10)."""
 
 from __future__ import annotations
 
+import pytest
+
 from hhs_and_cms_data_pipeline_spark.streaming.events import (
     read_events_stream,
     run_available_now,
@@ -1231,3 +1233,61 @@ def test_daily_count_merge_replay_guard_and_additive_identity(spark, tmp_path):
         ("click", "2024-01-02"): 1,
         ("purchase", "2024-01-02"): 1,
     }
+
+
+
+# the stateful streaming drains, by module: the name of each one's runner
+_STATE_DRAINS = {
+    "stateful": "run_stateful_sessionize",
+    "profile": "run_profile_maintenance",
+    "recent": "run_recent_events",
+    "typecounts": "run_type_counts",
+    "timersess": "run_timer_sessions",
+}
+
+
+@pytest.mark.parametrize("module", list(_STATE_DRAINS))
+def test_failed_stream_construction_leaves_session_confs(
+    spark, tmp_path, monkeypatch, module
+):
+    """A drain that fails while BUILDING its stream must leave the shared
+    session's shuffle width and state-store provider as they were: the
+    drain confs are scoped to start()..awaitTermination() only."""
+    import importlib
+
+    from hhs_and_cms_data_pipeline_spark.streaming import events, stateful
+
+    run = getattr(
+        importlib.import_module(f"hhs_and_cms_data_pipeline_spark.streaming.{module}"),
+        _STATE_DRAINS[module],
+    )
+
+    def broken_schema(spark, src):
+        raise RuntimeError("injected: schema probe failed")
+
+    monkeypatch.setattr(events, "events_raw_schema", broken_schema)
+    monkeypatch.setattr(stateful, "events_raw_schema", broken_schema)
+    parts_key = "spark.sql.shuffle.partitions"
+    provider_key = "spark.sql.streaming.stateStore.providerClass"
+    prior_parts = spark.conf.get(parts_key)
+    prior_provider = spark.conf.get(provider_key, None)
+    spark.conf.set(parts_key, "13")
+    try:
+        with pytest.raises(RuntimeError, match="injected"):
+            run(spark, str(tmp_path / "stage"), str(tmp_path / "ckpt"), "t_conf_leak")
+        assert spark.conf.get(parts_key) == "13"
+        assert spark.conf.get(provider_key, None) == prior_provider
+    finally:
+        spark.conf.set(parts_key, prior_parts)
+
+
+def test_malformed_state_partitions_env_names_the_variable(monkeypatch):
+    from hhs_and_cms_data_pipeline_spark.streaming.stateful import (
+        stream_state_partitions,
+    )
+
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "8g")
+    with pytest.raises(ValueError, match="SPARK_GRAFT_STREAM_STATE_PARTITIONS"):
+        stream_state_partitions(None)
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "6")
+    assert stream_state_partitions(None) == 6
