@@ -52,7 +52,7 @@ def _tagged_io_path(name: str, sf_dir: str) -> str:
     return os.path.join(_IO_DIR, f"{name}_{tag}")
 
 def _clear_published_versions(path: str) -> None:
-    """K6/K9's deterministic-rerun reset — delegates to the sink-side
+    """K1/K6/K9's deterministic-rerun reset — delegates to the sink-side
     helper that owns the .__v__/.__link__ naming."""
     from ..sinks import clear_published_versions
 
@@ -344,16 +344,16 @@ def k1_partitioned_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     hand-tune. Partitioning by n_regionkey mirrors the date-partitioned
     fact-table layout that buys partition pruning at 100 TB."""
     ensure_session_conf(spark)
-    # SF-tagged like S6/K4/S7: an untagged rmtree-then-append path is the
+    # SF-tagged like S6/K4/S7: an untagged reset-then-append path is the
     # documented cross-process race (_tagged_io_path) — two SFs running k1
     # concurrently would double-append or read a half-deleted dir
     path = _tagged_io_path("k1_nation", sf_dir)
-    shutil.rmtree(path, ignore_errors=True)
+    _clear_published_versions(path)
     src = table(spark, sf_dir, "nation").select("n_nationkey", "n_name", "n_regionkey")
     for _ in range(2):  # second append must be a no-op
         append_new_keys(spark, src, path, keys=["n_nationkey"], partition_by=["n_regionkey"])
     return (
-        spark.read.parquet(path)
+        read_published(spark, path)
         .select(
             "n_nationkey",
             "n_name",

@@ -1,13 +1,22 @@
-"""Write sinks (SURVEY §2.1 K1/K2/K3).
+"""Write sinks (SURVEY §2.1 K1/K2/K3): one commit protocol for every lake table.
 
 The reference's sink is psycopg executemany in 1000-row batches inside one
-transaction (load-hhs.py:28-33, load-quality.py:25,66-88). Spark equivalents:
+transaction that rolls back on failure (load-hhs.py:28-34), re-loaded
+idempotently with ON CONFLICT DO NOTHING (helper_load_hhs.py:96,163):
 
   K1 batched insert  -> per-partition parallel Parquet writes (native)
-  K2 transactionality-> write to a temp dir + atomic rename (job-level
-                        all-or-nothing; Delta would give true ACID, not
-                        available in this container)
-  K3 idempotent load -> anti-join against existing keys before append
+  K2 transactionality-> version commit: every write (full publish, MERGE,
+                        append) builds a fresh `<path>.__v__<uuid>` dir — new
+                        files plus hardlinks of the files it carries from the
+                        current version — and renames the `path` symlink onto
+                        it (Delta would give true ACID, not available here)
+  K3 idempotent load -> anti-join against existing keys, then a version commit
+
+Readers see the complete old or the complete new table. A failed or killed
+writer leaves the published link untouched, and a replay writes a fresh dir,
+so a dead job's files never leak into a later commit. Contract: ONE WRITER
+PER TABLE — MERGE and append carry from the version they read, so of two
+concurrent commits the later drops the earlier's rows (there is no lock).
 
 Scale notes: fact tables partition by their date column at write so readers
 get partition pruning for every `WHERE collection_week <= X`; the anti-join
@@ -17,92 +26,77 @@ partition-pruned to the incoming date range.
 
 from __future__ import annotations
 
+import contextlib
+import glob
 import os
 import re
 import shutil
+import time
 import uuid
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
 from .operators.ingest import upsert_new_keys
 
+# Job-completion markers: every Spark write leaves its own.
+_MARKERS = ("_SUCCESS", "._SUCCESS.crc")
 
-def write_parquet_atomic(
-    df: DataFrame,
+
+def _commit_version(
     path: str,
-    partition_by: list[str] | None = None,
+    write: Callable[[str, str | None], object],
+    carry: Callable[[str], bool],
     gc_grace_seconds: float = 60.0,
-) -> None:
-    """K2: all-or-nothing publish via symlink swap. The job writes a fully
-    new versioned data dir; `path` is a symlink atomically renamed onto the
-    new version (POSIX rename replaces the link in one step), so a reader
-    resolving `path` sees either the complete old table or the complete new
-    one — never a partial or missing table. On failure the half-written
-    version is removed and the published link is untouched — the moral
-    equivalent of rollback (load-hhs.py:31-34).
+):
+    """The one commit protocol (module docstring); returns `write`'s result.
 
-    Concurrent writers race safely: each writes its own version dir and the
-    last rename wins whole. Old versions are garbage-collected only after
-    `gc_grace_seconds` (the retention window — VACUUM semantics): the grace
-    both protects other writers' in-progress version dirs and gives
-    snapshot readers (read_published) time to finish their scan. True
-    multi-writer ACID with snapshot history needs a table format (Delta /
-    Iceberg — unavailable in this container); this is the minimal commit
-    protocol that gives single-table atomic publish on a plain filesystem.
+    `write(data_dir, prev)` writes the new version's own files under the
+    fresh `data_dir` (`prev`: the current version dir, or None); a `write`
+    that leaves no `data_dir` behind publishes nothing. `carry(rel)` picks
+    the files of `prev`, by relative path, that the new version hardlinks.
+    On any exception the new dir is removed and the published link is
+    untouched (rollback, load-hhs.py:31-34).
     """
-    # Normalize to absolute against PYTHON's cwd before anything touches the
-    # path: a relative `path` would otherwise (a) make the symlink target
-    # resolve against the link's parent dir (out/tbl -> out/out/tbl.__v__x)
-    # and (b) be resolved by Spark's JVM against ITS working directory,
-    # which is pinned at session start and can disagree with os.getcwd().
+    # Absolute against PYTHON's cwd: a relative symlink target would resolve
+    # against the link's parent dir, and Spark's JVM resolves relative paths
+    # against its own working directory, pinned at session start.
     path = os.path.abspath(path)
+    if os.path.lexists(path) and not os.path.islink(path):
+        raise ValueError(
+            f"{path} exists but is not a published table (symlink); reset it "
+            "with sinks.clear_published_versions"
+        )
+    prev = os.path.realpath(path) if os.path.islink(path) else None
     data_dir = f"{path}.__v__{uuid.uuid4().hex}"
     try:
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(data_dir)
-        _publish_version(path, data_dir, gc_grace_seconds)
-    except Exception:
+        result = write(data_dir, prev)
+        if not os.path.isdir(data_dir):
+            return result
+        for d, _, files in os.walk(prev) if prev else ():
+            for f in files:
+                rel = os.path.relpath(os.path.join(d, f), prev)
+                if carry(rel):
+                    dst = os.path.join(data_dir, rel)
+                    os.makedirs(os.path.dirname(dst), exist_ok=True)
+                    os.link(os.path.join(d, f), dst)
+        tmp_link = f"{path}.__link__{uuid.uuid4().hex}"
+        os.symlink(data_dir, tmp_link)  # absolute target (path normalized above)
+        os.rename(tmp_link, path)  # atomic publish
+    except BaseException:
         shutil.rmtree(data_dir, ignore_errors=True)
         raise
-
-
-def _publish_version(path: str, data_dir: str, gc_grace_seconds: float) -> None:
-    """Swap the published symlink onto a fully-written version dir, then GC
-    dethroned versions past the retention grace. `path` must already be
-    absolute. Shared by write_parquet_atomic (full-table publish) and
-    merge_rewrite_partitions (partial rewrite publish)."""
-    import time
-
-    if os.path.lexists(path) and not os.path.islink(path):
-        # migration from the pre-symlink layout: one-time, non-atomic
-        shutil.rmtree(path)
-    prev = os.path.realpath(path) if os.path.islink(path) else None
-    tmp_link = f"{path}.__link__{uuid.uuid4().hex}"
-    os.symlink(data_dir, tmp_link)  # absolute target (path normalized above)
-    os.rename(tmp_link, path)  # atomic publish
+    # GC, VACUUM semantics: drop versions and crashed-publish link temps that
+    # are neither current nor previous AND older than the retention grace,
+    # which protects snapshot readers still scanning a pinned version. Age
+    # counts from dethroning, not write time: the utime restarts the clock of
+    # the version just replaced. Dropping a donor of carried files is safe,
+    # since hardlinked inodes survive its rmtree.
     if prev:
-        # restart the dethroned version's GC clock NOW: grace must be
-        # measured from REPLACEMENT, not from write completion — a
-        # version that was current for hours would otherwise be
-        # deleted seconds after being replaced (its mtime already far
-        # exceeds the grace), yanking the dir out from under a reader
-        # that pinned it moments before the publish.
-        try:
+        with contextlib.suppress(OSError):
             os.utime(prev, None)
-        except OSError:
-            pass
-    # GC: drop versions that are not current/previous AND older than the
-    # retention grace, where "age" counts from the dir's dethroning (see
-    # the os.utime above), not its write time. Versions whose partitions
-    # were REUSED by a newer version are safe to drop: reuse is by
-    # per-file HARDLINK (merge_rewrite_partitions), so the shared inodes
-    # survive the old dir's rmtree.
-    base = os.path.basename(path)
-    parent = os.path.dirname(path) or "."
-    keep = {os.path.realpath(p) for p in (data_dir, prev) if p}
-    now = time.time()
+    base, parent = os.path.basename(path), os.path.dirname(path)
+    keep, now = (os.path.realpath(data_dir), prev), time.time()
     for name in os.listdir(parent):
         cand = os.path.join(parent, name)
         stale = name.startswith((f"{base}.__v__", f"{base}.__link__"))
@@ -116,7 +110,26 @@ def _publish_version(path: str, data_dir: str, gc_grace_seconds: float) -> None:
             else:
                 shutil.rmtree(cand, ignore_errors=True)
         except OSError:
-            pass  # another writer's GC got there first
+            pass  # already gone
+    return result
+
+
+def write_parquet_atomic(
+    df: DataFrame,
+    path: str,
+    partition_by: list[str] | None = None,
+    gc_grace_seconds: float = 60.0,
+) -> None:
+    """K2: all-or-nothing publish of `df` as the whole table — a version
+    commit that carries nothing. Replaced versions are garbage-collected
+    only after `gc_grace_seconds`, so snapshot readers (read_published)
+    finish their scan."""
+    _commit_version(
+        path,
+        lambda data_dir, prev: df.write.partitionBy(*(partition_by or [])).parquet(data_dir),
+        lambda rel: False,
+        gc_grace_seconds,
+    )
 
 
 def merge_rewrite_partitions(
@@ -132,15 +145,9 @@ def merge_rewrite_partitions(
     touches — the strongest plain-Parquet approximation of transactional
     MERGE at scale (reference: ON CONFLICT upserts, helper_load_hhs.py:96).
 
-    Protocol: a new version dir is assembled next to the current one —
-    untouched partitions are carried over by per-file HARDLINK (zero data
-    copy; hardlinked inodes survive GC of the donor version dir, unlike
-    symlinks, so a later rmtree of the old version cannot dangle the new
-    one), touched partitions are read-modify-written (anti-join the old
-    partition on `keys`, union the batch rows) — then the published
-    symlink swaps atomically via the same commit protocol as
-    write_parquet_atomic. Readers see the complete old or complete new
-    table, never a mix.
+    A version commit: touched partitions are read-modify-written (anti-join
+    the old partition on `keys`, union the batch rows); the rest of the
+    current version is carried by hardlink.
 
     At 100 TB the cost is proportional to the TOUCHED partitions plus one
     dim-sized driver fetch (the batch's distinct partition values), not to
@@ -151,23 +158,13 @@ def merge_rewrite_partitions(
     """
     from pyspark.sql import functions as F
 
-    path = os.path.abspath(path)
-    if not os.path.islink(path):
-        raise ValueError(
-            "merge target must be a write_parquet_atomic-published table "
-            f"(symlink): {path}"
-        )
-    prev = os.path.realpath(path)
     # Dim-sized by contract: one row per touched partition.
     vals = [r[0] for r in updates.select(partition_col).distinct().collect()]
     # Dir names are built as raw f"{col}={v}" below. Spark escapes special
-    # characters in partition paths (Hive-style %XX) and writes NULL as
-    # __HIVE_DEFAULT_PARTITION__; a value this code names differently than
-    # Spark would silently MISS the touched-partition match — the old dir
-    # would be hardlink-carried over unchanged while the batch also lands
-    # in a new dir: duplicate keys in a published MERGE. Refuse loudly
-    # instead of corrupting (dates/ints/plain identifiers are the
-    # supported — and typical — partition domain).
+    # characters (Hive-style %XX) and writes NULL as __HIVE_DEFAULT_PARTITION__;
+    # a value named differently would MISS the touched-partition match, so
+    # the old dir would be carried unchanged while the batch lands in a new
+    # one: duplicate keys in a published MERGE. Refuse loudly instead.
     for v in vals:
         if v is None or not re.fullmatch(r"[A-Za-z0-9._-]+", str(v)):
             raise ValueError(
@@ -178,18 +175,14 @@ def merge_rewrite_partitions(
                 "would silently duplicate rows)"
             )
     touched = {f"{partition_col}={v}" for v in vals}
-    data_dir = f"{path}.__v__{uuid.uuid4().hex}"
-    os.makedirs(data_dir)
-    try:
-        for name in os.listdir(prev):
-            src = os.path.join(prev, name)
-            dst = os.path.join(data_dir, name)
-            if name.startswith(f"{partition_col}=") and name not in touched:
-                os.makedirs(dst)
-                for f_ in os.listdir(src):
-                    os.link(os.path.join(src, f_), os.path.join(dst, f_))
-            elif name == "_SUCCESS":
-                open(dst, "w").close()
+
+    def write(data_dir: str, prev: str | None) -> None:
+        if prev is None:
+            raise ValueError(
+                "merge target must be a write_parquet_atomic-published table "
+                f"(symlink): {path}"
+            )
+        os.makedirs(data_dir)
         for v in sorted(vals, key=str):
             pname = f"{partition_col}={v}"
             batch_v = updates.filter(
@@ -207,11 +200,11 @@ def merge_rewrite_partitions(
                 ).unionByName(batch_v)
             else:  # insert-only partition: nothing to rewrite, just write
                 merged = batch_v
-            merged.write.mode("overwrite").parquet(os.path.join(data_dir, pname))
-        _publish_version(path, data_dir, gc_grace_seconds)
-    except Exception:
-        shutil.rmtree(data_dir, ignore_errors=True)
-        raise
+            merged.write.parquet(os.path.join(data_dir, pname))
+
+    _commit_version(
+        path, write, lambda rel: rel.split(os.sep)[0] not in touched, gc_grace_seconds
+    )
     return sorted(str(v) for v in vals)
 
 
@@ -222,7 +215,7 @@ def read_published_version(
 
     Version history is reconstructed from the retained `.__v__` dirs:
     `steps_back=0` is the current target; older versions order by mtime
-    DESCENDING, which is dethroning order — `_publish_version` os.utime's
+    DESCENDING, which is dethroning order — `_commit_version` os.utime's
     a version at the moment it is replaced, precisely so that both GC
     grace and this history read count from dethroning, not write time.
     Retention is bounded (GC keeps current + previous past the grace), so
@@ -254,11 +247,10 @@ def read_published_version(
 
 
 def read_published(spark: SparkSession, path: str) -> DataFrame:
-    """Snapshot read of a write_parquet_atomic table: resolve the published
-    symlink ONCE and scan the pinned version dir. Reading through the link
-    itself would re-resolve per file — a concurrent publish mid-scan would
-    mix two versions. The pinned dir survives at least `gc_grace_seconds`
-    after being replaced."""
+    """Snapshot read of a published table: resolve the symlink ONCE and scan
+    the pinned version dir. Reading through the link itself would re-resolve
+    per file — a concurrent publish mid-scan would mix two versions. The
+    pinned dir survives at least `gc_grace_seconds` after being replaced."""
     return spark.read.parquet(os.path.realpath(path))
 
 
@@ -270,37 +262,41 @@ def append_new_keys(
     partition_by: list[str] | None = None,
 ) -> int:
     """K1+K3: idempotent append — loading the same batch twice is a no-op
-    (ON CONFLICT DO NOTHING semantics, helper_load_hhs.py:96,163).
+    (ON CONFLICT DO NOTHING, helper_load_hhs.py:96,163). A version commit:
+    the rows whose `keys` are absent from the current version go into the
+    new version, which carries every current file but the job markers; a
+    batch with no new rows publishes nothing. Single writer per table.
 
-    Returns the number of rows actually appended.
+    Returns the number of rows appended, read from the new files' footers.
     """
-    existing = spark.read.parquet(path) if os.path.exists(path) else None
-    to_insert = upsert_new_keys(incoming, existing, keys).cache()
-    try:
-        n = to_insert.count()
-        if n:
-            writer = to_insert.write.mode("append")
-            if partition_by:
-                writer = writer.partitionBy(*partition_by)
-            writer.parquet(path)
+    import pyarrow.parquet as pq
+
+    def write(data_dir: str, prev: str | None) -> int:
+        existing = spark.read.parquet(prev) if prev else None
+        new_rows = upsert_new_keys(incoming, existing, keys)
+        new_rows.write.partitionBy(*(partition_by or [])).parquet(data_dir)
+        n = sum(
+            pq.read_metadata(f).num_rows
+            for f in glob.glob(os.path.join(data_dir, "**", "*.parquet"), recursive=True)
+        )
+        if not n:
+            shutil.rmtree(data_dir)
         return n
-    finally:
-        to_insert.unpersist()
+
+    return _commit_version(path, write, lambda rel: os.path.basename(rel) not in _MARKERS)
 
 
 def clear_published_versions(path: str) -> None:
-    """Deterministic-rerun reset for a write_parquet_atomic target: drop
-    retained version dirs, crashed-publish link temps, and the live
-    symlink. rmtree refuses symlinks (the .__link__ temps are links) —
-    unlink those, rmtree real dirs. A bare shutil.rmtree(path) is a silent
-    no-op on the published SYMLINK, which is why callers must use this."""
-    import glob as _glob
-    import shutil as _shutil
-
-    for stale in _glob.glob(f"{path}.__v__*") + _glob.glob(f"{path}.__link__*"):
+    """Deterministic-rerun reset of a lake table: drop retained version
+    dirs, crashed-publish link temps, and the live symlink, or a plain dir
+    at `path` (an older in-place layout, which the writers refuse). A bare
+    shutil.rmtree(path) is a silent no-op on the published SYMLINK."""
+    for stale in glob.glob(f"{path}.__v__*") + glob.glob(f"{path}.__link__*"):
         if os.path.islink(stale):
             os.unlink(stale)
         else:
-            _shutil.rmtree(stale, ignore_errors=True)
+            shutil.rmtree(stale, ignore_errors=True)
     if os.path.islink(path):
         os.unlink(path)
+    else:
+        shutil.rmtree(path, ignore_errors=True)

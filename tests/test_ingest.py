@@ -138,24 +138,45 @@ def test_cms_location_lookup(spark, hhs_csv, cms_csv):
 
 
 def test_idempotent_reload(spark, hhs_csv, tmp_path):
-    from hhs_and_cms_data_pipeline_spark.sinks import append_new_keys
+    """K3 re-load is a no-op, and an append is a version commit: the
+    zero-row replay publishes nothing, and a later append carries the
+    current files by hardlink and leaves the previous version readable."""
+    import glob
+
+    from pyspark.sql import functions as F
+
+    from hhs_and_cms_data_pipeline_spark.sinks import (
+        append_new_keys,
+        read_published_version,
+    )
 
     prepped = prep_hhs(read_hhs_weekly(spark, hhs_csv))
     weekly = split_weekly_report(prepped)
     path = str(tmp_path / "weekly_report")
+    keys = ["hospital_weekly_id", "collection_week"]
 
-    n1 = append_new_keys(
-        spark, weekly, path, ["hospital_weekly_id", "collection_week"],
-        partition_by=["collection_week"],
-    )
-    n2 = append_new_keys(
-        spark, weekly, path, ["hospital_weekly_id", "collection_week"],
-        partition_by=["collection_week"],
-    )
+    n1 = append_new_keys(spark, weekly, path, keys, partition_by=["collection_week"])
+    versions = glob.glob(f"{path}.__v__*")
+    n2 = append_new_keys(spark, weekly, path, keys, partition_by=["collection_week"])
     assert n1 == 3 and n2 == 0  # re-load is a no-op (K3)
     assert spark.read.parquet(path).count() == 3
     # partition layout: one dir per collection_week (pruning at read)
     assert any(d.startswith("collection_week=") for d in os.listdir(path))
+    assert os.path.islink(path)
+    assert glob.glob(f"{path}.__v__*") == versions  # the replay published nothing
+
+    later = weekly.withColumn("collection_week", F.date_add("collection_week", 7))
+    assert append_new_keys(spark, later, path, keys, partition_by=["collection_week"]) == 3
+    first = os.path.realpath(versions[0])
+    carried = glob.glob(os.path.join(first, "*", "*.parquet"))
+    assert carried
+    for f in carried:
+        shared = os.path.join(os.path.realpath(path), os.path.relpath(f, first))
+        assert os.stat(shared).st_nlink >= 2, f"{shared} was copied, not hardlinked"
+    key_rows = lambda df: sorted(  # noqa: E731
+        (r["hospital_weekly_id"], str(r["collection_week"])) for r in df.collect()
+    )
+    assert key_rows(read_published_version(spark, path, 1)) == key_rows(weekly)
 
 
 def test_idempotent_reload_null_safe_keys(spark, tmp_path):
