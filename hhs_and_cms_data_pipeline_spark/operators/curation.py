@@ -27,7 +27,6 @@ from pyspark.sql import functions as F
 
 from ..functions.exact import davg, sql_davg, sql_floordiv
 from ..registry import register
-from ..session import ensure_session_conf
 from ..sources import spread, table
 from .dedup import _SQL_CLUSTERS_CTES, emb_dot, min_label_components, sql_emb_dot
 from .text import (
@@ -72,7 +71,6 @@ def sample_hash_bernoulli(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_id, so the sample is stable across runs, cluster sizes, and data
     growth. Map-only: the predicate is a per-row hash compare, pushed as a
     filter with no shuffle."""
-    ensure_session_conf(spark)
     return (
         table(spark, sf_dir, "documents")
         .filter(F.substring(_hash_key(), 1, 4) < _BERNOULLI_HEX)
@@ -107,7 +105,6 @@ def sample_stratified_frac(spark: SparkSession, sf_dir: str) -> DataFrame:
     function of doc_id within each stratum. One shuffle on `source`; both
     window functions share the partition spec so Spark plans a single
     exchange + sort."""
-    ensure_session_conf(spark)
     w = Window.partitionBy("source").orderBy(_hash_key(), "doc_id")
     wn = Window.partitionBy("source")
     return (
@@ -151,7 +148,6 @@ def sample_fixed_k_per_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     of per-group reservoir sampling. The rank<=k predicate lets Spark run
     the window as a top-k per group (rank pushdown in the window operator)
     instead of ranking whole strata."""
-    ensure_session_conf(spark)
     w = Window.partitionBy("lang").orderBy(_hash_key(), "doc_id")
     return (
         table(spark, sf_dir, "documents")
@@ -194,7 +190,6 @@ def curation_filter_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     reason instead of silently filtering is what a curation pipeline needs
     for auditing drop rates per rule. Pure per-row column expressions —
     map-only, whole-stage codegen, no Python."""
-    ensure_session_conf(spark)
     n_tok = F.size(F.split(F.col("text"), " "))
     avg_tok_len = (F.length("text") - n_tok + F.lit(1)).cast("double") / n_tok.cast(
         "double"
@@ -232,7 +227,6 @@ def corpus_stats_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     (decimal-exact average per functions/exact.py), distinct sources. One
     hash-shuffle on `lang` with map-side partial aggregation; COUNT(DISTINCT
     source) expands to the standard two-phase distinct aggregate."""
-    ensure_session_conf(spark)
     return (
         table(spark, sf_dir, "documents")
         .groupBy("lang")
@@ -272,7 +266,6 @@ def corpus_shard_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     pos_in_shard order and get a reproducible, well-mixed training order.
     At 100 TB, widen the nibble prefix (2 hex chars = 256 shards, 3 = 4096)
     to bound shard size; the plan shape is unchanged."""
-    ensure_session_conf(spark)
     nibble = F.substring(_hash_key(), 1, 1)
     w = Window.partitionBy(nibble).orderBy(_hash_key(), "doc_id")
     return (
@@ -328,7 +321,6 @@ def text_repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     (size vs size(array_distinct)), no explode, no shuffle; the integer->
     double division is exact on both engines. The oracle builds the same
     multiset via a lead() window over the token relation."""
-    ensure_session_conf(spark)
     toked = table(spark, sf_dir, "documents").select("doc_id", tokens().alias("toks"))
     withbg = toked.select("doc_id", bigram_multiset(F.col("toks")).alias("bgs"))
     n_bg = F.size("bgs").cast("long")
@@ -399,7 +391,6 @@ def decontaminate_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     (measured 2.2s -> 1.3s at sf0.1). Corpus docs with zero bigrams
     (<2 tokens) have no overlap denominator and are excluded on both
     engines."""
-    ensure_session_conf(spark)
     docs = table(spark, sf_dir, "documents")
     is_bench = F.col("doc_id") % _BENCH_MOD == 0
     bench_bgs = (
@@ -482,7 +473,6 @@ def pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     both engines. Never a global window: the 16-way sharding bounds every
     sort, and widening the nibble prefix scales shard count with the
     corpus exactly like corpus_shard_assignment (C6)."""
-    ensure_session_conf(spark)
     hk = _hash_key()
     nibble = F.substring(hk, 1, 1)
     toks = table(spark, sf_dir, "documents").select(
@@ -567,7 +557,6 @@ def curation_pii_redaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     rate. The output carries the md5 of the cleaned text (not the text)
     plus per-kind counts; patterns stay in the RE2 ∩ java.regex dialect so
     both engines match identical spans."""
-    ensure_session_conf(spark)
     docs = table(spark, sf_dir, "documents")
     raw = F.concat(
         F.col("text"),
@@ -645,7 +634,6 @@ def doc_chunk_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     speed and the output partitioning inherits the input's. The window
     content is emitted as md5 (loaders re-slice by start_word) so the
     result stays metadata-sized."""
-    ensure_session_conf(spark)
     toked = table(spark, sf_dir, "documents").select(
         "doc_id", tokens().alias("ws")
     )
@@ -731,7 +719,6 @@ def mixture_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     and a narrow explode of a <=4-element sequence. No shuffle; output size
     is sum(w_lang * n_lang) rows. At 100 TB the replication factor is the
     only cost, which is the point of the operator."""
-    ensure_session_conf(spark)
     base = F.lit(1)
     hexes = F.lit("0000")
     for lang, w in sorted(_MIX_WEIGHTS.items()):
@@ -802,7 +789,6 @@ def curation_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
     for dedup (partitioned by md5(text) — never a global window). Each
     stage's semantics stay bit-identical to its standalone operator, which
     the composed oracle re-states end-to-end."""
-    ensure_session_conf(spark)
     n_tok = F.size(F.split(F.col("text"), " "))
     avg_tok_len = (F.length("text") - n_tok + F.lit(1)).cast("double") / n_tok.cast(
         "double"
@@ -882,7 +868,6 @@ def curation_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffles on top of clustering. Deterministic and partition-invariant:
     the assignment is a pure function of cluster_id, reproducible on any
     cluster and any engine (md5 thresholds mirrored in the oracle)."""
-    ensure_session_conf(spark)
     docs = spread(table(spark, sf_dir, "documents"))
     labels = min_label_components(docs)
     h = F.substring(
@@ -942,7 +927,6 @@ def curation_quality_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
     at 100 TB the same cut runs as a two-pass rank (per-partition partial
     histograms -> global threshold per source) — the window formulation
     here is the semantic contract that plan must reproduce."""
-    ensure_session_conf(spark)
     docs = spread(table(spark, sf_dir, "documents"))
     scored = docs.select(
         "doc_id", "source", quality_raw_score().alias("raw_score")
@@ -1015,7 +999,6 @@ def curation_neardup_corpus_build(spark: SparkSession, sf_dir: str) -> DataFrame
     chain nightly over a 100 TB crawl plausible — and every stage's
     semantics is the SAME as its standalone operator, restated end-to-end
     by the composed oracle."""
-    ensure_session_conf(spark)
     docs = spread(table(spark, sf_dir, "documents"))
     labels = min_label_components(docs)
     canon = (
@@ -1109,7 +1092,6 @@ def curation_token_budget_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantities are int64; the (raw_score DESC, doc_id) order is total, so
     the running sums and the cut line are bit-deterministic on both
     engines."""
-    ensure_session_conf(spark)
     docs = spread(table(spark, sf_dir, "documents"))
     tk = docs.select(
         "doc_id",
@@ -1198,7 +1180,6 @@ def curation_priority_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     in plain weight units (priorities can reach w * 2^48 when the hash is
     tiny, so the k-term sum rides DECIMAL against overflow); both engines
     emit the identical double from the single final cast."""
-    ensure_session_conf(spark)
     return priority_sample_table(table(spark, sf_dir, "documents"))
 
 
@@ -1329,7 +1310,6 @@ def curation_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C17: DSIR-style importance selection (block comment above) — the
     top-{k} non-target documents by integer-quantized hashed-unigram
     log-likelihood ratio against the '{target}' target corpus."""
-    ensure_session_conf(spark)
     docs = spread(table(spark, sf_dir, "documents")).select("doc_id", "lang", "text")
     return (
         dsir_scores(docs)
@@ -1425,7 +1405,6 @@ def curation_temperature_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C18: per-language alpha=0.5 temperature mixture plan (block comment
     above) — natural share p, temperature-flattened sampling weight q,
     and the boost factor q/p a sampler applies per stratum."""
-    ensure_session_conf(spark)
     cnt = (
         table(spark, sf_dir, "documents")
         .groupBy("lang")
@@ -1537,7 +1516,6 @@ def curation_hashed_linear_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     dim-sized weight table, one doc-keyed aggregation — the exact
     inference DAG a learned fasttext-style filter runs at corpus scale.
     """
-    ensure_session_conf(spark)
     docs = spread(table(spark, sf_dir, "documents"))
     # ONE tokenize + ONE explode (r12, guide §2.3): unigrams never contain
     # a space, bigrams always do, so the two per-doc distinct feature sets
@@ -1641,7 +1619,6 @@ def curation_semantic_decontaminate(spark: SparkSession, sf_dir: str) -> DataFra
     benchmark table ONLY so the oracle can derive the same split; the
     scoring itself is the external-bench API `semantic_decontaminate`
     below."""
-    ensure_session_conf(spark)
     emb = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     bench = emb.filter(F.col("vec_id") % _DECON_MOD == 0).select(
         F.col("vec_id").alias("bench_id"), "embedding"
@@ -1779,7 +1756,6 @@ def curation_isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame
     from ..functions.exact import floordiv
     from .text import quality_raw_score
 
-    ensure_session_conf(spark)
     docs = spread(table(spark, sf_dir, "documents"))
     label = (
         F.conv(F.substring(F.md5(F.col("text")), 1, 2), 16, 10).cast("long")

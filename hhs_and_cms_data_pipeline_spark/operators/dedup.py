@@ -22,7 +22,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..registry import register
-from ..session import ensure_session_conf
 from ..sources import spread, table
 from .text import (
     SQL_BIGRAMS,
@@ -55,7 +54,6 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup by content hash; survivor = min doc_id (SURVEY §7.3:
     deterministic pick). At 100 TB this is one hash-shuffle on a 32-char key
     with map-side partial aggregation — the cheapest possible dedup."""
-    ensure_session_conf(spark)
     return (
         table(spark, sf_dir, "documents")
         .groupBy(F.md5(F.col("text")).alias("content_hash"))
@@ -164,7 +162,6 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingles, so scores stay exact). AQE skew-split covers residual skew.
     The oracle implements the identical cap.
     """
-    ensure_session_conf(spark)
     docs = spread(table(spark, sf_dir, "documents"))
     return (
         _jaccard_pairs(docs)
@@ -400,7 +397,6 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     This is the shingle->minhash->band->bucket-join pipeline of
     Broder'97/MMDS ch.3, on DataFrame ops only.
     """
-    ensure_session_conf(spark)
     docs = spread(table(spark, sf_dir, "documents"))
     return minhash_verified_pairs(docs).orderBy("doc_a", "doc_b")
 
@@ -446,7 +442,6 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     verification). The oracle is the same fixpoint via DuckDB's recursive
     CTE (min reachable id).
     """
-    ensure_session_conf(spark)
     docs = spread(table(spark, sf_dir, "documents"))
     return min_label_components(docs).orderBy("doc_id")
 
@@ -676,7 +671,6 @@ def dedup_canonical_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     cluster-size annotation is one groupBy on cluster_id whose output is
     near-dup-cluster-count-sized, joined back broadcast-small. The join to
     documents recovers metadata for survivors only."""
-    ensure_session_conf(spark)
     docs = spread(table(spark, sf_dir, "documents"))
     labels = min_label_components(docs)
     sizes = labels.groupBy("cluster_id").agg(
@@ -746,7 +740,6 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     Hamming check runs only on them — lossless and linear-ish instead of
     quadratic. The oracle is the independent all-pairs formulation.
     """
-    ensure_session_conf(spark)
     docs = spread(table(spark, sf_dir, "documents"))
     js = F.sequence(F.lit(1), F.lit(_SIM_BITS))
     # materialize one md5 per distinct token, then fold once into 16 counts
@@ -945,7 +938,6 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate generation is bucket-local at any scale. The guard's count()
     is a parquet-metadata read, not a data scan.
     """
-    ensure_session_conf(spark)
     emb = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     n = emb.count()
     if n > _D5_MAX_ROWS:
@@ -1090,7 +1082,6 @@ def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate set only — never all pairs. This is the 100 TB path next to
     D5's quadratic contract.
     """
-    ensure_session_conf(spark)
     emb = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     bands = hyperplane_bands(emb)
     a, b = bands.alias("a"), bands.alias("b")
@@ -1149,7 +1140,6 @@ def dedup_levenshtein(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_properties.py::test_documents_corpus_is_ascii at the SF under
     test), divergent on multibyte text.
     """
-    ensure_session_conf(spark)
     docs = spread(table(spark, sf_dir, "documents"))
     cand = minhash_candidates(word_bigram_arrays(docs))
     ta = docs.select(F.col("doc_id").alias("doc_a"), F.col("text").alias("text_a"))
@@ -1236,7 +1226,6 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     table. Verification touches only candidate pairs (exact_jaccard_of
     _pairs), and min_by picks the canonical match without a second
     window."""
-    ensure_session_conf(spark)
     docs = spread(table(spark, sf_dir, "documents"))
     arrays = word_bigram_arrays(docs)
     bands = minhash_bands(arrays)
@@ -1346,7 +1335,6 @@ def dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate, and the output sort. Round 5 shipped this as a
     rare-semi-filtered self-join; the in-group expansion removes the
     join and the second pass over the posting relation entirely."""
-    ensure_session_conf(spark)
     return substring_span_pairs(spread(table(spark, sf_dir, "documents")))
 
 
@@ -1456,7 +1444,6 @@ def dedup_remove_repeated_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     cardinality — no skew); reassembly is a hash aggregate on doc_id with
     an in-group sort of the surviving chunk structs. Three keyed
     exchanges total for a full-corpus rewrite."""
-    ensure_session_conf(spark)
     docs = spread(table(spark, sf_dir, "documents")).select("doc_id", "text")
     toked = docs.select("doc_id", tokens().alias("toks"))
     n = F.size("toks")
@@ -1583,7 +1570,6 @@ def dedup_token_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_id or the shingle (bounded per key by the df cap); nothing is
     quadratic in the corpus.
     """
-    ensure_session_conf(spark)
     docs = spread(table(spark, sf_dir, "documents"))
     toked = docs.select("doc_id", tokens().alias("toks"))
     tf = (
@@ -1715,7 +1701,6 @@ def dedup_minhash_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     boolean ints; both reported ratios divide exact ints in DOUBLE and the
     estimator error is one IEEE subtract of those — bit-identical across
     engines."""
-    ensure_session_conf(spark)
     docs = spread(table(spark, sf_dir, "documents"))
     arrays = word_bigram_arrays(docs)
     cand = minhash_candidates(arrays)
@@ -1882,7 +1867,6 @@ def dedup_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     at 100 TB a mapInPandas numpy rolling sum replaces it frame-locally
     with identical semantics; the relational form here is the one the
     oracle can state."""
-    ensure_session_conf(spark)
     # the chunk table feeds the corpus-wide count AND the per-doc report
     # join — materialize it once so the char-explode/window DAG does not
     # run per consumer (2.5s -> 2.0s warm at sf0.1)
@@ -1977,7 +1961,6 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingling, df-capped index join, candidate-only verification); only
     the final filter differs, so everything that makes D2 100 TB-safe
     carries over verbatim."""
-    ensure_session_conf(spark)
     return containment_pairs(spread(table(spark, sf_dir, "documents")))
 
 

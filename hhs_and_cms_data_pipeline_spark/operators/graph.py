@@ -21,7 +21,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register
-from ..session import ensure_session_conf
 from ..sources import table
 
 _TRI_TOP_K = 20
@@ -255,7 +254,6 @@ def graph_triangle_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     co-occurrence graph". All integer arithmetic; counts are
     orientation-invariant, so the id-oriented oracle matches bit-for-bit.
     """
-    ensure_session_conf(spark)
     # und feeds _degrees AND the orientation join — checkpoint so the
     # co-occurrence self-join + DISTINCT runs once, not per plan branch
     und = cooccurrence_edges_cached(spark, sf_dir)
@@ -293,7 +291,6 @@ def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     directly on GRAPH1's skew-proof triangle counts plus one degree join.
     The division is one exact-int quotient in DOUBLE, bit-identical across
     engines; everything upstream is integer."""
-    ensure_session_conf(spark)
     # same fan-out as GRAPH1, one more consumer (the degree filter below)
     und = cooccurrence_edges_cached(spark, sf_dir)
     deg = _degrees(und)
@@ -394,7 +391,6 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixed-point arithmetic (module comment) keeps the result bit-identical
     to the DuckDB oracle — no float-sum order sensitivity.
     """
-    ensure_session_conf(spark)
     # hash-partitioned on u + checkpointed: the per-iteration rank join
     # and the degree aggregation both reuse this partitioning — only the
     # O(|V|) rank vector is exchanged per round (artifact docstring).
@@ -503,7 +499,6 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     comment below). Labels/counts are integers throughout — bit-exact
     across engines and partitionings.
     """
-    ensure_session_conf(spark)
     # hash-partitioned on u + checkpointed: each round's label join
     # re-exchanges only the O(|V|) label vector (artifact docstring).
     dir_edges = directed_edges_cached(spark, sf_dir)
@@ -585,7 +580,6 @@ def graph_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     tiny, so the final exchange moves almost nothing. This is the skew
     profile that justifies GRAPH1's degree orientation: a heavy tail here
     is exactly the "curse of the last reducer" the orientation defuses."""
-    ensure_session_conf(spark)
     und = cooccurrence_edges_cached(spark, sf_dir)
     return (
         _degrees(und)
@@ -720,7 +714,6 @@ def graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     above), with degrees and neighborhood Jaccard riding along. Runs the
     cn-filtered top-k plan; falls back to the full wedge aggregation when
     the exactness gate cannot certify the fast path."""
-    ensure_session_conf(spark)
     und = cooccurrence_edges_cached(spark, sf_dir)
     # node-sized; read three times (hub cap + the two degree lookups)
     deg = _degrees(und).localCheckpoint(eager=False)
@@ -911,7 +904,6 @@ def graph_kcore_members(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-iteration materialization as D8's star contraction). Peeling
     only ever SHRINKS the edge relation, so every round is cheaper than
     the last — the opposite of a blowup risk."""
-    ensure_session_conf(spark)
     edges = directed_edges_cached(spark, sf_dir)  # both directions, on u
     cur = edges
     for _ in range(_KCORE_ROUNDS):
@@ -1003,7 +995,6 @@ def graph_ra_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GRAPH8: top-20 missing edges by the resource-allocation index
     (block comment above) — exact fixed-point center weights, full wedge
     aggregation, hub-capped."""
-    ensure_session_conf(spark)
     und = cooccurrence_edges_cached(spark, sf_dir)
     deg = _degrees(und)
     wdeg = deg.filter(F.col("deg") <= _LP_HUB_CAP).select(
@@ -1156,7 +1147,6 @@ def graph_wcc_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     above) — (component_size, n_components, n_nodes), largest first."""
     from .dedup import alternating_star_components
 
-    ensure_session_conf(spark)
     und = cooccurrence_edges_cached(spark, sf_dir)
     nodes = (
         table(spark, sf_dir, "lineitem")

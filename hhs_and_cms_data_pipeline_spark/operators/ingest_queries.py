@@ -19,7 +19,6 @@ from pyspark.sql import functions as F
 from ..functions.exact import dsum, sql_dsum
 from .relational_ext import SQL_DAILY_EVENT_COUNTS
 from ..registry import register
-from ..session import ensure_session_conf
 from ..sources.csvsrc import read_cms_quality, read_hhs_weekly
 from .ingest import normalize_cms, prep_hhs
 from .sources_sinks import _IO_DIR, _atomic_write_text
@@ -115,7 +114,6 @@ def ingest_hhs_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
     upstream bug we fix) -> deterministic first-wins dedup per hospital_pk
     -> date cast. The oracle re-implements the same semantics in SQL from
     the raw fixture CSV."""
-    ensure_session_conf(spark)
     _materialize()
     prepped = prep_hhs(read_hhs_weekly(spark, _HHS_CSV))
     return prepped.select(
@@ -164,7 +162,6 @@ def ingest_cms_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     NULL via the CSV null) -> literal rating_date. No row loops, no driver
     batching — the reference's process_row (load-quality.py:95-125) becomes
     column expressions."""
-    ensure_session_conf(spark)
     _materialize()
     return (
         normalize_cms(read_cms_quality(spark, _CMS_CSV), _RATING_DATE)
@@ -224,7 +221,6 @@ def dq_constraint_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     (broadcast where the dimension side is small); the five results are
     1-row frames unioned driver-free. At 100 TB checks run on the same
     pass-per-table budget as any report query — no row-by-row validation."""
-    ensure_session_conf(spark)
     from ..sources import table as t
 
     orders = t(spark, sf_dir, "orders")
@@ -351,7 +347,6 @@ def ingest_to_report_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     rating parse, and the join all fuse: the only exchanges are the
     per-hospital dedup window and the state rollup. The oracle re-derives
     the entire flow from the raw fixture CSVs independently."""
-    ensure_session_conf(spark)
     _materialize()
     prepped = prep_hhs(read_hhs_weekly(spark, _HHS_CSV)).select(
         "hospital_pk",
@@ -428,7 +423,6 @@ def dq_outlier_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     the emitted row set bit-deterministic; var_pop = E[x^2] - mu^2 is the
     textbook one-pass identity, fine here because the decimal sums are
     exact (no catastrophic cancellation of rounded partials)."""
-    ensure_session_conf(spark)
     from ..sources import table as _table
 
     vals = (
@@ -490,7 +484,6 @@ def obs1_observed_scan_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     query-vector fetch (similarity.py), metrics-sized by construction."""
     from pyspark.sql import Observation
 
-    ensure_session_conf(spark)
     from ..sources import table as _table
 
     li = _table(spark, sf_dir, "lineitem").select(
@@ -573,7 +566,6 @@ def dq_fd_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..sources import table as _table
 
-    ensure_session_conf(spark)
     pairs = (
         _table(spark, sf_dir, "documents")
         .groupBy("source", "lang")
@@ -697,7 +689,6 @@ def dq_benford_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     inputs — bit-deterministic with zero transcendental calls."""
     from ..sources import table as _table
 
-    ensure_session_conf(spark)
     obs = benford_digit_counts(_table(spark, sf_dir, "lineitem"), "l_extendedprice")
     tot = obs.agg(F.sum("n").alias("n_total"))
     spine = spark.createDataFrame(
@@ -774,7 +765,6 @@ def dq_fk_orphans(spark: SparkSession, sf_dir: str) -> DataFrame:
     division per row is the only float op."""
     from ..sources import table as _table
 
-    ensure_session_conf(spark)
     frames = []
     for name, child, ckey, parent, pkey in _FK_EDGES:
         c = _table(spark, sf_dir, child).select(F.col(ckey).alias("k"))
@@ -863,7 +853,6 @@ def dq_distribution_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     throughout — no float, no order sensitivity."""
     from ..sources import table as _table
 
-    ensure_session_conf(spark)
     c = (
         _table(spark, sf_dir, "events")
         # same null gate as ST17's merger (timeless/typeless events have
@@ -973,7 +962,6 @@ def drift_from_counts(c: DataFrame) -> DataFrame:
 def dq_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DQ9: Hampel median/MAD anomaly flags over daily event counts per
     type (block comment above) — every day scored, outlier-resistant."""
-    ensure_session_conf(spark)
     from .relational_ext import daily_event_counts
 
     daily = daily_event_counts(spark, sf_dir)

@@ -20,7 +20,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..registry import register
-from ..session import ensure_session_conf
 from ..sources import spread, table
 
 # --------------------------------------------------------------------------
@@ -44,7 +43,6 @@ def mm_binary_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Treat the document body as an opaque binary payload; compute the typed
     metadata a multimodal catalog stores (size, checksum, magic-byte prefix).
     At 100 TB this is the manifest-building scan: one pass, no shuffle."""
-    ensure_session_conf(spark)
     payload = F.encode(F.col("text"), "UTF-8")
     return (
         table(spark, sf_dir, "documents")
@@ -410,7 +408,6 @@ def extract_frame_features(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataF
 def frame_features_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The raw mapInPandas feature extraction (features as array<double>) —
     the form downstream jobs consume; unit-tested in tests/test_multimodal.py."""
-    ensure_session_conf(spark)
     payloads = (
         spread(table(spark, sf_dir, "documents"))
         # zero-byte payloads are malformed media (no header byte to parse)
@@ -542,7 +539,6 @@ def resize_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 def resize_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The raw mapInPandas resize (thumb as binary) — the form an image
     derivative pipeline writes out; unit-tested in tests/test_multimodal.py."""
-    ensure_session_conf(spark)
     payloads = (
         spread(table(spark, sf_dir, "documents"))
         .filter(F.length("text") > 0)  # zero-byte = malformed, quarantined
@@ -615,7 +611,6 @@ def mm_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     as one frame, sample uniformly capped at 8 frames. The *selection*
     arithmetic is pure column math (oracle-checked); actual frame extraction
     is the mapInPandas pattern of mm_resize with a codec stub."""
-    ensure_session_conf(spark)
     byte_len = F.octet_length(F.encode(F.col("text"), "UTF-8"))
     n_frames = F.floor(byte_len / 100).cast("long")
     return (
@@ -728,7 +723,6 @@ def mm_audio_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the output sort is the only exchange). Integer energies make the
     result bit-exact against the oracle's hex-dump re-derivation, the
     same portability trick as mm_frame_features."""
-    ensure_session_conf(spark)
     payloads = spread(table(spark, sf_dir, "documents")).select(
         "doc_id", F.encode(F.col("text"), "UTF-8").alias("payload")
     )
@@ -797,7 +791,6 @@ def mm_dhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     SAME grid through the mapInPandas decoder of mm_resize first). The only
     shuffle is the bucket-count window keyed on the 16-char hash — exactly
     the dedup_exact shape with a perceptual key instead of md5."""
-    ensure_session_conf(spark)
     # spread() (r12): the per-row dhash is 128 conv(substr(hex)) grid
     # samples over a KB-scale hex dump — heavy interpreted map work that
     # ran on the fixture's single input partition (measured 5.8s -> 1.5s
@@ -940,7 +933,6 @@ def mm_patch_means(spark: SparkSession, sf_dir: str) -> DataFrame:
     co-partitioned with their source payloads for whatever consumes them
     next. mean_byte is one exact-int division, bit-identical to the
     oracle's hex-dump re-derivation."""
-    ensure_session_conf(spark)
     payloads = (
         spread(table(spark, sf_dir, "documents"))
         .filter(F.length("text") > 0)  # zero-byte = malformed, quarantined
@@ -1046,7 +1038,6 @@ def mm_keyframe_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     parallel scan that feeds frame extraction (only selected keyframes are
     ever decoded downstream). Integer signatures make the result bit-exact
     against the oracle's hex-dump re-derivation."""
-    ensure_session_conf(spark)
     payloads = (
         spread(table(spark, sf_dir, "documents"))
         .filter(F.length("text") > 0)  # zero-byte = malformed, quarantined
@@ -1184,7 +1175,6 @@ def mm_vad_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     Documents whose energy never crosses the mean (e.g. constant-energy
     payloads) have no voiced frames and drop out — the report lists docs
     with at least one segment."""
-    ensure_session_conf(spark)
     from pyspark.sql import Window
 
     payloads = spread(table(spark, sf_dir, "documents")).select(
@@ -1278,7 +1268,6 @@ def mm_audio_corpus_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PIPE3: the composed audio-corpus manifest (block comment above) —
     exemplar-deduped, quality-gated, voiced-majority documents with their
     byte metadata and VAD stats."""
-    ensure_session_conf(spark)
     from .text import quality_raw_score
 
     payload = F.encode(F.col("text"), "UTF-8")

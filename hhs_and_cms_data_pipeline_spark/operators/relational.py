@@ -14,7 +14,6 @@ from pyspark.sql import functions as F
 
 from ..functions.exact import davg, dsum, round1, sql_davg, sql_dsum, sql_round1
 from ..registry import register
-from ..session import ensure_session_conf
 from ..sources import table
 from .report import CUTOFF, _SQL_CUTOFF
 
@@ -46,7 +45,6 @@ def orders_with_state(spark: SparkSession, sf_dir: str, *order_cols: str) -> Dat
 )
 def s3_table_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Plain projected scan — Parquet vectorized read, pruned ReadSchema."""
-    ensure_session_conf(spark)
     return table(spark, sf_dir, "region").select("r_regionkey", "r_name")
 
 
@@ -63,7 +61,6 @@ def s3_table_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 def p1_column_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Project 4 of 11 lineitem columns; the scan's ReadSchema shrinks to match
     (the reference's 17-of-100 CSV projection, helper_load_hhs.py:46-52)."""
-    ensure_session_conf(spark)
     return table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_linenumber", "l_quantity", "l_returnflag"
     )
@@ -85,7 +82,6 @@ def p1_column_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def p4_null_rejection(spark: SparkSession, sf_dir: str) -> DataFrame:
     """dropna(subset=...) analogue: derive a nullable column, reject nulls."""
-    ensure_session_conf(spark)
     return (
         table(spark, sf_dir, "lineitem")
         .select(
@@ -114,7 +110,6 @@ def p4_null_rejection(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("P5",),
 )
 def p5_membership_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session_conf(spark)
     return (
         table(spark, sf_dir, "lineitem")
         .filter(F.col("l_returnflag").isin("A", "R"))
@@ -140,7 +135,6 @@ def p5_membership_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def p6_range_validity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """rating in [1,5] else NULL (load-quality.py:170-173)."""
-    ensure_session_conf(spark)
     return table(spark, sf_dir, "events").select(
         "event_id",
         F.when(F.col("value").between(1, 5), F.col("value")).alias("valid_rating"),
@@ -172,7 +166,6 @@ def j5_multicol_semi_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Reference: helper_load_hhs.py:134-138 (WHERE (7 cols) IN (SELECT unnest...)).
     """
-    ensure_session_conf(spark)
     c = table(spark, sf_dir, "customer")
     keys = (
         c.filter(F.col("c_acctbal") < 0)
@@ -222,7 +215,6 @@ def j6_positional_pairing(spark: SparkSession, sf_dir: str) -> DataFrame:
     dim-sized frames — the global row_number window is single-partition
     by design and documented as such.
     """
-    ensure_session_conf(spark)
     c = (
         table(spark, sf_dir, "customer")
         .filter(F.col("c_custkey") <= 200)
@@ -273,7 +265,6 @@ def j6_positional_pairing(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def j7_min_id_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-row lookup of the minimum matching surrogate id, set-based."""
-    ensure_session_conf(spark)
     reps = (
         table(spark, sf_dir, "supplier")
         .groupBy("s_nationkey")
@@ -317,7 +308,6 @@ def j7_min_id_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def w3_last_value_per_series(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Attach each state's latest weekly value to every row of its series."""
-    ensure_session_conf(spark)
     joined = orders_with_state(
         spark, sf_dir, "o_totalprice", "o_orderdate"
     ).filter(F.col("o_orderdate") <= F.lit(CUTOFF).cast("timestamp"))
@@ -357,7 +347,6 @@ def w3_last_value_per_series(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("T1",),
 )
 def t1_newest_week_row(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session_conf(spark)
     return (
         table(spark, sf_dir, "orders")
         .groupBy(F.date_trunc("week", "o_orderdate").cast("date").alias("collection_week"))
@@ -389,7 +378,6 @@ def t1_newest_week_row(spark: SparkSession, sf_dir: str) -> DataFrame:
 def t6_topk_by_measure(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-10 states by measure; compiles to TakeOrderedAndProject (no global
     sort materialization). Deterministic tiebreak on state name."""
-    ensure_session_conf(spark)
     return (
         orders_with_state(spark, sf_dir, "o_totalprice")
         .groupBy("state")
@@ -422,7 +410,6 @@ def t6_topk_by_measure(spark: SparkSession, sf_dir: str) -> DataFrame:
 def u1_dedup_first_wins(spark: SparkSession, sf_dir: str) -> DataFrame:
     """First event per user under an explicit order — the deterministic form of
     pandas drop_duplicates(subset=...) (first-wins)."""
-    ensure_session_conf(spark)
     ev = table(spark, sf_dir, "events")
     # NULLS LAST pins the engines together: Spark's bare ASC sorts NULL ts
     # FIRST while DuckDB's sorts them LAST — latent on null-free testdata,
@@ -465,7 +452,6 @@ def k3_upsert_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     This is the query core of the K3 sink; the write-path itself (append of
     exactly these rows) is exercised in tests/test_sinks.py.
     """
-    ensure_session_conf(spark)
     o = table(spark, sf_dir, "orders")
     incoming = o.filter(F.col("o_orderdate") <= F.lit(CUTOFF).cast("timestamp"))
     existing = o.filter(F.col("o_orderkey") % 3 == 0).select("o_orderkey")
@@ -508,7 +494,6 @@ def f1_wkt_point_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Reference: helper_load_hhs.py:60-63 (slice(7,-1) + split + astype(float)).
     """
-    ensure_session_conf(spark)
     c = table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     geocoded = F.concat(
         F.lit("POINT ("),
@@ -553,7 +538,6 @@ def f1_wkt_point_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def f4_date_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Format→parse→shift→format round trip with the reference's '%Y-%m-%d'."""
-    ensure_session_conf(spark)
     src = (
         table(spark, sf_dir, "orders")
         .filter(F.col("o_orderkey") <= 2000)
@@ -589,7 +573,6 @@ def f4_date_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("F6",),
 )
 def f6_sentinel_to_null(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session_conf(spark)
     src = table(spark, sf_dir, "lineitem").select(
         "l_orderkey",
         "l_linenumber",
@@ -628,7 +611,6 @@ def f6_sentinel_to_null(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("F11",),
 )
 def f11_boolean_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session_conf(spark)
     src = table(spark, sf_dir, "orders").select(
         "o_orderkey",
         F.when(F.col("o_orderstatus") == "F", F.lit("  YES "))
@@ -667,7 +649,6 @@ def f11_boolean_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("F12",),
 )
 def f12_guarded_int_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session_conf(spark)
     src = table(spark, sf_dir, "orders").select(
         "o_orderkey",
         F.when(F.col("o_orderstatus") == "P", F.lit("Not Available"))
@@ -705,7 +686,6 @@ def f12_guarded_int_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def f13_lenient_numeric(spark: SparkSession, sf_dir: str) -> DataFrame:
     """pd.to_numeric(errors='coerce') == try_cast: invalid strings -> NULL."""
-    ensure_session_conf(spark)
     src = table(spark, sf_dir, "orders").select(
         "o_orderkey",
         F.when(F.col("o_orderstatus") == "P", F.lit("n/a"))
@@ -750,7 +730,6 @@ def f13_lenient_numeric(spark: SparkSession, sf_dir: str) -> DataFrame:
 def f15_format_number(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Presentation-edge formatting; rounding happens in decimal space first so
     the formatter never makes a tie-break decision."""
-    ensure_session_conf(spark)
     return (
         orders_with_state(spark, sf_dir, "o_totalprice")
         .groupBy("state")

@@ -16,7 +16,6 @@ from pyspark.sql import functions as F
 
 from ..functions.exact import dsum, dsum_over, floordiv, sql_dsum, sql_floordiv
 from ..registry import register
-from ..session import ensure_session_conf
 from ..sources import table
 
 # --------------------------------------------------------------------------
@@ -54,7 +53,6 @@ def asof_join_last_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     `<=` of e.g. DuckDB/Pandas ASOF semantics; the oracle is an independent
     correlated-subquery formulation of the same contract.
     """
-    ensure_session_conf(spark)
     ev = table(spark, sf_dir, "events").select("event_id", "ts", "user_id", "event_type")
     # NULL-ts rows are excluded up front: ascending sort puts NULLs FIRST,
     # so a null-ts purchase would be carried forward as "before everything"
@@ -116,7 +114,6 @@ def range_join_price_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     effectively a map-side lookup at any fact scale. For large interval
     tables the scale path is binning both sides to an equi-join key first.
     """
-    ensure_session_conf(spark)
     li = table(spark, sf_dir, "lineitem").select("l_extendedprice")
     bands = spark.createDataFrame(
         [(float(lo), float(hi), b) for lo, hi, b in _BANDS], "lo double, hi double, band string"
@@ -152,7 +149,6 @@ def rollup_flag_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ROLLUP hierarchy subtotals (flag -> flag,status -> grand total) in one
     pass — Spark expands grouping sets inside a single hash aggregate, so
     the fact is scanned once regardless of how many subtotal levels exist."""
-    ensure_session_conf(spark)
     return (
         table(spark, sf_dir, "lineitem")
         .select("l_returnflag", "l_linestatus", "l_quantity")
@@ -186,7 +182,6 @@ def approx_distinct_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     the query returns the exact count plus a within-tolerance boolean the
     oracle expects to be TRUE. At 100 TB the sketch is the only affordable
     option for high-cardinality dashboards (mergeable, fixed memory)."""
-    ensure_session_conf(spark)
     o = table(spark, sf_dir, "orders").select("o_custkey")
     return o.agg(
         F.countDistinct("o_custkey").alias("exact_distinct"),
@@ -225,7 +220,6 @@ def setops_customers_vs_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """UNION / INTERSECT / EXCEPT over the ordering-customers and
     event-emitting-users key sets. Each compiles to a hash aggregate or
     left-semi/anti hash join — no sort, safe at any cardinality."""
-    ensure_session_conf(spark)
     o = table(spark, sf_dir, "orders").select(F.col("o_custkey").alias("k"))
     e = table(spark, sf_dir, "events").select(F.col("user_id").alias("k"))
 
@@ -262,7 +256,6 @@ def json_extract_props(spark: SparkSession, sf_dir: str) -> DataFrame:
     grouped. JSON parsing stays JVM-side in codegen; at 100 TB prefer
     from_json with an explicit schema once the payload shape is known —
     parse once, prune to struct fields."""
-    ensure_session_conf(spark)
     return (
         table(spark, sf_dir, "events")
         .select(
@@ -304,7 +297,6 @@ def sql_api_scalar_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     as SQL text through Catalyst (scalar subquery executes as a 1-row
     broadcast, not a collect-to-driver). The exact same text runs on the
     oracle — the engine's SQL dialect is ANSI-compatible for this surface."""
-    ensure_session_conf(spark)
     table(spark, sf_dir, "orders").createOrReplaceTempView("orders_v")
     # Identical SQL text modulo the string type spelling (Spark: STRING).
     spark_sum = sql_dsum("o_totalprice").replace("VARCHAR", "STRING")
@@ -338,7 +330,6 @@ def percentile_disc_by_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
     interpolating variants would diverge in float arithmetic). Exact
     percentiles sort within each group; at dashboard scale prefer
     approx_percentile's mergeable t-digest sketch."""
-    ensure_session_conf(spark)
     # ONE shared sort per group instead of three percentile_disc states
     # (r12, guide §1.2 "per-task work"): each percentile_disc aggregate
     # maintains its own value->count map and re-sorts it at finalization —
@@ -423,7 +414,6 @@ def pivot_status_by_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
     thousand-column explosion; listing values keeps it one aggregation
     with conditional partials, exactly what the oracle's CASE columns
     express."""
-    ensure_session_conf(spark)
     out = (
         table(spark, sf_dir, "lineitem")
         .select("l_returnflag", "l_linestatus", "l_extendedprice")
@@ -456,7 +446,6 @@ def unpivot_bed_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference's report melts bed metrics client-side; weekly-report.py
     time-series plots). Spark's unpivot is a zero-shuffle Expand node:
     each input row fans to k metric rows map-side."""
-    ensure_session_conf(spark)
     wide = (
         table(spark, sf_dir, "lineitem")
         .filter(F.col("l_orderkey") < 100)
@@ -509,7 +498,6 @@ def w6_share_of_total(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows, never the fact table; the fact-sized work is the one groupBy).
     The share division runs on the decimal-exact revenue doubles, so both
     engines divide identical bits by identical bits."""
-    ensure_session_conf(spark)
     o = table(spark, sf_dir, "orders").select("o_custkey", "o_totalprice")
     c = table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     n = table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
@@ -561,7 +549,6 @@ def variant_props_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     Integer-exact aggregates; identical results to path-extraction on the
     raw string, which is exactly the point — VARIANT changes the cost
     model, not the semantics."""
-    ensure_session_conf(spark)
     k = F.try_variant_get(F.parse_json(F.col("props")), "$.k", "bigint")
     return (
         table(spark, sf_dir, "events")
@@ -631,7 +618,6 @@ def er_customer_blocking(spark: SparkSession, sf_dir: str) -> DataFrame:
     composite (e.g. phonetic code + region) chosen to keep the max block
     size bounded; the structure here is that plan.
     """
-    ensure_session_conf(spark)
     # Pinned block exchange (r12, guide §2.5): the block join's shuffle is
     # KB-sized, so AQE coalesced it to one partition — but the work is
     # QUADRATIC per block (pair enumeration x levenshtein), so the whole
@@ -714,7 +700,6 @@ def xa7_approx_percentile_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     so, like XA2, the differential contract pins the guarantee, not the
     sketch. At 100 TB the sketch is the only affordable route: single pass,
     fixed memory, mergeable across executors, no per-group sort."""
-    ensure_session_conf(spark)
     o = table(spark, sf_dir, "orders").select("o_totalprice")
     exact = F.expr("percentile_disc(0.95) WITHIN GROUP (ORDER BY o_totalprice)")
     approx = F.expr("approx_percentile(o_totalprice, 0.95, 10000)")
@@ -765,7 +750,6 @@ def xs7_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     DOUBLE, bit-identical across engines. The skew_vs_mean column is the
     decision number: keys at >> 1x mean are the ones AQE skew-join or XS1
     salting exists for."""
-    ensure_session_conf(spark)
     per_key = (
         table(spark, sf_dir, "events")
         .groupBy("user_id")
@@ -890,7 +874,6 @@ def xt1_gapfill_locf(spark: SparkSession, sf_dir: str) -> DataFrame:
     window: partitioned by event_type, never global. At 100 TB the hourly
     pre-aggregation is the only fact-sized stage, and it partial-aggregates
     map-side before its one shuffle."""
-    ensure_session_conf(spark)
     ev = (
         table(spark, sf_dir, "events")
         .filter(F.col("ts").isNotNull() & F.col("event_type").isNotNull())
@@ -976,7 +959,6 @@ def xa8_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB the distinct-activity reduction happens before anything is
     joined — the cells frame is at most users x days, already tiny
     relative to raw events."""
-    ensure_session_conf(spark)
     ev = (
         table(spark, sf_dir, "events")
         .filter(
@@ -1104,7 +1086,6 @@ def xj3_banded_time_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     keyed shuffle. The exact predicate re-checks the range, so band edges
     add no false pairs; epoch arithmetic is integer, so gap_micros and
     the row set are bit-deterministic."""
-    ensure_session_conf(spark)
     ev = table(spark, sf_dir, "events").filter(F.col("ts").isNotNull())
     clicks = ev.filter(F.col("event_type") == "click").select(
         F.col("event_id").alias("click_id"),
@@ -1154,7 +1135,6 @@ def xu2_bag_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
     (aggregate each side per key, emit min/diff copies via generate) — one
     keyed shuffle per side, no join explosion, the same shape the ALL
     semantics force on every engine. Counts are exact integers."""
-    ensure_session_conf(spark)
     o = table(spark, sf_dir, "orders").select(F.col("o_custkey").alias("k"))
     e = table(spark, sf_dir, "events").select(F.col("user_id").alias("k"))
     ex = o.exceptAll(e).agg(F.count(F.lit(1)).alias("n")).select(
@@ -1224,7 +1204,6 @@ def er2_entity_consolidation(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame."""
     from .dedup import alternating_star_components
 
-    ensure_session_conf(spark)
     cust = table(spark, sf_dir, "customer").select(
         "c_custkey",
         "c_name",
@@ -1314,7 +1293,6 @@ def xf3_array_higher_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole-stage codegen. This is the nested-data idiom that avoids
     explode -> aggregate round-trips at 100 TB: one shuffle total, and
     downstream consumers get the array AND its stats from the same row."""
-    ensure_session_conf(spark)
     # Lines with no quantity or no line number contribute nothing to the
     # quantity stats by contract: a NULL element poisons Spark's
     # F.aggregate fold (NULL result) while DuckDB's list_aggregate skips
@@ -1404,7 +1382,6 @@ def xt2_ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle. The open/close selection rides the same aggregate as
     MAX(CASE WHEN rn=1) — no self-join back to the bar. Bars are
     bucket-count-sized; the presentation sort is the only other exchange."""
-    ensure_session_conf(spark)
     return ohlc_bars_table(table(spark, sf_dir, "events"))
 
 
@@ -1526,7 +1503,6 @@ def xt3_gapfill_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
     XT1 — O(hours x types) rows from one scalar aggregate, the hourly
     pre-aggregation is the only fact-sized stage — plus four IGNORE NULLS
     window lookups sharing ONE per-type sort."""
-    ensure_session_conf(spark)
     ev = (
         table(spark, sf_dir, "events")
         .filter(F.col("ts").isNotNull() & F.col("event_type").isNotNull())
@@ -1637,7 +1613,6 @@ def xa13_new_vs_returning(spark: SparkSession, sf_dir: str) -> DataFrame:
     which is O(days), bounded, and explicitly allowed to single-partition
     (it is pre-aggregated; the registry-wide global-window audit checks
     exactly this)."""
-    ensure_session_conf(spark)
     ev = (
         table(spark, sf_dir, "events")
         .filter(F.col("ts").isNotNull() & F.col("user_id").isNotNull())
@@ -1726,7 +1701,6 @@ def xa14_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     back to the filtered facts plus a re-aggregation — the standard
     funnel plan; no window ever sees the raw event stream, and the final
     scalars are three tiny aggregates."""
-    ensure_session_conf(spark)
     ev = (
         table(spark, sf_dir, "events")
         .filter(
@@ -1831,7 +1805,6 @@ def xa15_rollup_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """XA15: event counts and exact value sums at (type, day), per-type,
     and grand-total granularity via one ROLLUP pass (block comment
     above)."""
-    ensure_session_conf(spark)
     # event_type NOT NULL is load-bearing for the sentinel scheme: a
     # natural NULL group would COALESCE to the same '(all)' marker as the
     # rollup subtotal rows and alias them (no NULLs exist in the testdata;
@@ -1931,7 +1904,6 @@ def u4_debounce_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """U4: events surviving the 10-minute per-(user, type) debounce
     (block comment above) — kept rows with the gap to their predecessor
     (NULL for each key's first event)."""
-    ensure_session_conf(spark)
     ev = (
         table(spark, sf_dir, "events")
         .filter(
@@ -1997,7 +1969,6 @@ def xa16_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """XA16: (prev_type -> next_type) transition counts and conditional
     probabilities over per-user event sequences ordered by (ts, event_id)
     — block comment above."""
-    ensure_session_conf(spark)
     ev = (
         table(spark, sf_dir, "events")
         .filter(
@@ -2092,7 +2063,6 @@ def xa17_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """XA17: per-customer recency (days before the newest order date in the
     table), order frequency, exact monetary total, and the 1-4 quartile
     bucket of each metric (block comment above)."""
-    ensure_session_conf(spark)
     orders = table(spark, sf_dir, "orders").select(
         F.col("o_custkey").alias("custkey"),
         F.col("o_orderdate").cast("date").alias("od"),
@@ -2189,7 +2159,6 @@ def xa17_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def xt5_ohlc_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """XT5: daily OHLC bars per event type (block comment above)."""
-    ensure_session_conf(spark)
     ev = (
         table(spark, sf_dir, "events")
         .filter(
@@ -2257,7 +2226,6 @@ def xt5_ohlc_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 def xa18_cumulative_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """XA18: daily new-user counts and the cumulative distinct-user curve
     (block comment above)."""
-    ensure_session_conf(spark)
     first_seen = (
         table(spark, sf_dir, "events")
         .filter(F.col("ts").isNotNull() & F.col("user_id").isNotNull())
@@ -2321,7 +2289,6 @@ def xa18_cumulative_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
 def xa19_activity_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """XA19: top-100 users by longest consecutive-day activity streak
     (block comment above) — streak count, longest run, first active day."""
-    ensure_session_conf(spark)
     days = (
         table(spark, sf_dir, "events")
         .filter(F.col("ts").isNotNull() & F.col("user_id").isNotNull())
@@ -2413,7 +2380,6 @@ def xa19_activity_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
 def xa20_event_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """XA20: per activity-decile user and event counts plus the Lorenz
     cumulative shares (block comment above)."""
-    ensure_session_conf(spark)
     per_user = (
         table(spark, sf_dir, "events")
         .filter(F.col("user_id").isNotNull())
@@ -2549,7 +2515,6 @@ def xt6_ewma_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """XT6: truncated dyadic EWMA (a=1/2, 16 terms) of daily event counts
     per event type (block comment above). Integer numerator/denominator are
     emitted alongside the double for auditability."""
-    ensure_session_conf(spark)
     daily = daily_event_counts(spark, sf_dir)
     w = Window.partitionBy("event_type").orderBy("d")
     lags = [F.lag("n", i).over(w).alias(f"l{i}") for i in range(1, _EWMA_TERMS)]
@@ -2712,7 +2677,6 @@ def xt8_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """XT8: one-sided CUSUM mean-shift detector per event type (block
     comment above) — monitor-day statistic, alarm flag, and the first
     alarm per type, all in exact integer arithmetic."""
-    ensure_session_conf(spark)
     return cusum_from_daily(daily_event_counts(spark, sf_dir))
 
 
@@ -2764,7 +2728,6 @@ def u5_rate_limit_per_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     """U5: events surviving the one-per-user-per-10-minute fixed-window
     rate limit (block comment above) — kept rows with the size of the
     burst each one collapsed."""
-    ensure_session_conf(spark)
     ev = (
         table(spark, sf_dir, "events")
         .filter(
@@ -2838,7 +2801,6 @@ _ROLL_MED_DAYS = 15
 def xt7_rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     """XT7: 15-day rolling median of daily event counts per type (block
     comment above) — exact order statistic over the bounded frame."""
-    ensure_session_conf(spark)
     daily = daily_event_counts(spark, sf_dir)
     w = (
         Window.partitionBy("event_type")
@@ -2905,7 +2867,6 @@ def xt7_rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
 def xa21_seasonal_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """XA21: day-of-week x hour-of-day traffic matrix (block comment
     above) — cell counts, share of total, per-weekday peak hour."""
-    ensure_session_conf(spark)
     cells = (
         table(spark, sf_dir, "events")
         .filter(F.col("ts").isNotNull())
@@ -3011,7 +2972,6 @@ def xj4_asof_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """XJ4: nearest-in-time as-of join, errors to purchases (block comment
     above) — both directional matches plus the nearest pick and its
     distance."""
-    ensure_session_conf(spark)
     ev = (
         table(spark, sf_dir, "events")
         .filter(

@@ -29,7 +29,6 @@ from ..functions.exact import (
     sql_round1,
 )
 from ..registry import register
-from ..session import ensure_session_conf
 from ..sources import table
 
 # "Selected date" analogue of the report's date picker (weekly-report.py:536).
@@ -92,7 +91,6 @@ def flagship_utilization(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-identical but NOT faster here — decimal aggregation is not the
     bottleneck at this scale.)
     """
-    ensure_session_conf(spark)
     li = (
         table(spark, sf_dir, "lineitem")
         .filter(F.col("l_shipdate") <= F.lit(CUTOFF).cast("timestamp"))
@@ -161,7 +159,6 @@ def r1_weekly_count_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     week — thousands of rows at 100 TB), so the single-partition window is
     safe by construction.
     """
-    ensure_session_conf(spark)
     # Undated orders are OUT of the trend by contract: a NULL week has no
     # place in a week-over-week LAG, and the engines order NULLs at
     # opposite ends of the window (Spark NULLS FIRST, DuckDB NULLS LAST),
@@ -242,7 +239,6 @@ def r2_recent_weeks_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     any shuffle, and no broadcast exchange recomputed per run (the r3
     bench creep was exactly that recomputation, 0.95 -> 1.27s).
     """
-    ensure_session_conf(spark)
     li = (
         table(spark, sf_dir, "lineitem")
         .select(
@@ -345,7 +341,6 @@ def r3_utilization_by_rating(spark: SparkSession, sf_dir: str) -> DataFrame:
     skew); the rating dim result is customer-sized, joined to the fact via
     shuffle join, broadcastable under AQE when small.
     """
-    ensure_session_conf(spark)
     ev = table(spark, sf_dir, "events").select("user_id", "value", "ts", "event_id")
     rating = (F.abs(F.floor("value").cast("bigint")) % 5 + 1).alias("rating")
     w = Window.partitionBy("user_id").orderBy(F.desc("ts"), F.desc("event_id"))
@@ -400,7 +395,6 @@ def r4_weekly_state_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     range predicate (P3 + F5 date arithmetic) pushes to the Parquet scan; at
     100 TB with date-partitioned facts this is partition pruning.
     """
-    ensure_session_conf(spark)
     cutoff = F.lit(CUTOFF).cast("timestamp")
     li = (
         table(spark, sf_dir, "lineitem")
@@ -443,7 +437,6 @@ def r5_sum_by_state(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Reference: weekly-report.py:344-352 (covid beds by state).
     """
-    ensure_session_conf(spark)
     li = (
         table(spark, sf_dir, "lineitem")
         .filter(F.col("l_shipdate") <= F.lit(CUTOFF).cast("timestamp"))
@@ -489,7 +482,6 @@ def r6_bottom10_states(spark: SparkSession, sf_dir: str) -> DataFrame:
     crossJoin-free semi-filter; ties at the LIMIT boundary are broken by state
     name so the pick is deterministic (SURVEY §7 hard-point 3).
     """
-    ensure_session_conf(spark)
     li = table(spark, sf_dir, "lineitem").select(
         _week("l_shipdate"), "l_shipdate", "l_suppkey", "l_quantity", "l_discount"
     )
@@ -536,7 +528,6 @@ def r7_not_reporting(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Reference: weekly-report.py:369-384 (hospitals not reporting this week).
     """
-    ensure_session_conf(spark)
     cutoff = F.lit(CUTOFF).cast("timestamp")
     # Nameless customers are OUT by contract: the report is keyed and
     # alphabetically LIMITed by name, and a NULL name sorts at opposite
@@ -584,7 +575,6 @@ def r8_available_dates(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Reference: weekly-report.py:505-510.
     """
-    ensure_session_conf(spark)
     return (
         table(spark, sf_dir, "orders")
         .select(_week("o_orderdate"))

@@ -38,7 +38,6 @@ from pyspark.sql import functions as F
 
 from ..functions.exact import dsum, sql_dsum
 from ..registry import register
-from ..session import ensure_session_conf
 from ..sources import spread, table
 from .dedup import _SQL_JACCARD_CORE, SQL_EMB_NORMS, sql_emb_dot
 from .text import SQL_TOKS, tokens
@@ -133,7 +132,6 @@ def text_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     billions of postings. TakeOrderedAndProject top-{top}. The term hash
     partitioning IS the index sharding a 1000-executor build would
     write."""
-    ensure_session_conf(spark)
     toks = pos_tokens(spread(table(spark, sf_dir, "documents")))
     posting = packed_posting().alias("p")
     w_rank = Window.partitionBy("w").orderBy("p")
@@ -204,7 +202,6 @@ def text_phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     terms' postings — the positional-index query plan, never a substring
     scan. Joins key on (doc_id, pos±k): co-partitioned by doc, skew
     bounded by the hottest single term."""
-    ensure_session_conf(spark)
     toks = pos_tokens(spread(table(spark, sf_dir, "documents")))
     t1 = toks.filter(F.col("w") == _PHRASE[0]).select("doc_id", "pos")
     t2 = toks.filter(F.col("w") == _PHRASE[1]).select(
@@ -332,7 +329,6 @@ def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     touched exactly twice: dl pass + tf pass, both map-side-partial);
     scoring is codegen'd column arithmetic; top-{top} is
     TakeOrderedAndProject."""
-    ensure_session_conf(spark)
     toks = pos_tokens(spread(table(spark, sf_dir, "documents")))
     scored = bm25_term_scores(toks, _BM25_QUERY)
     return (
@@ -408,7 +404,6 @@ def text_index_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     merge is one term-keyed left join (delta side small); the full
     rebuild here exists only as the self-check and would be absent in
     production."""
-    ensure_session_conf(spark)
     toks = pos_tokens(spread(table(spark, sf_dir, "documents")))
     is_delta = F.col("doc_id") % _DELTA_MOD == 0
     # ONE corpus-sized aggregation (r12, guide §2.3/§2.4): the per-(term,
@@ -502,7 +497,6 @@ def text_proximity_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RET5: docs where the two query terms co-occur within 5 positions
     (block comment above) — per doc the count of qualifying term pairs
     and the tightest gap, closest-first."""
-    ensure_session_conf(spark)
     toks = pos_tokens(spread(table(spark, sf_dir, "documents")))
     a = toks.filter(F.col("w") == _PROX_TERMS[0]).select("doc_id", "pos")
     b = toks.filter(F.col("w") == _PROX_TERMS[1]).select(
@@ -607,7 +601,6 @@ def retrieval_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .dedup import _STOP_SHINGLE_DF, exact_jaccard_of_pairs
     from .text import word_bigram_arrays
 
-    ensure_session_conf(spark)
     docs = spread(table(spark, sf_dir, "documents"))
     toks = pos_tokens(docs)
     # ONE corpus-sized aggregation (r12, guide §2.3): tf is the only
@@ -806,7 +799,6 @@ def retrieval_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     rrf score; top-{top}."""
     from .dedup import emb_dot, emb_norm2
 
-    ensure_session_conf(spark)
     toks = pos_tokens(spread(table(spark, sf_dir, "documents")))
     # ONE corpus-sized aggregation (r12, guide §2.3): tf is the only
     # consumer of the raw token stream — dl (token count per doc = SUM of

@@ -23,7 +23,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register
-from ..session import ensure_session_conf
 from ..sources import table
 from ..functions.exact import davg, dsum, sql_davg, sql_dsum
 from .dedup import SQL_EMB_NORMS, _SQL_EMB_BANDS_CTES, emb_dot, emb_norm2, sql_emb_dot
@@ -94,7 +93,6 @@ def sim_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     vectorized zip_with dot product and a TakeOrderedAndProject top-k — the
     optimal exact plan at any scale (no shuffle except the final k-row merge).
     """
-    ensure_session_conf(spark)
     emb = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     q = (
         emb.filter(F.col("vec_id") == _QUERY_VEC_ID)
@@ -178,7 +176,6 @@ def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     nprobe/n_cells of the data. Cell ranking ties are broken by label so
     both engines probe identical cells.
     """
-    ensure_session_conf(spark)
     emb = table(spark, sf_dir, "embeddings").select("vec_id", "label", "embedding")
     cell = _ivf_query_cells(spark, sf_dir)
     q_full = (
@@ -247,7 +244,6 @@ def sim_topk_pandas_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
     hatch and is checked for rank-identical results."""
     import numpy as np
 
-    ensure_session_conf(spark)
     emb = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     # the query vector is a parameter (like the reference's date picker):
     # a 1-row driver-side fetch, then closed over by the UDF
@@ -332,7 +328,6 @@ def sim_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     with the hyperplane-LSH buckets of dedup_embedding_lsh (D6) instead of
     broadcasting.
     """
-    ensure_session_conf(spark)
     emb = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     probes = (
         emb.filter(F.col("vec_id") < _KNN_N_PROBES)
@@ -417,7 +412,6 @@ def sim_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     sort. At 100 TB this runs as a pure scan-transform-write pass. The
     driver-facing projection summarizes (n_dims, scale, code_sum, max_err)
     per vector; the codes array itself would ship to a binary sink."""
-    ensure_session_conf(spark)
     emb = F.transform(F.col("embedding"), lambda x: x.cast("double"))
     base = table(spark, sf_dir, "embeddings").select("vec_id", emb.alias("emb"))
     mn = F.array_min("emb")
@@ -528,7 +522,6 @@ def sim_ivf_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical argmins."""
     from pyspark.sql import Window
 
-    ensure_session_conf(spark)
     assign = ivf_coarse_assign(spark, sf_dir)
     wsz = Window.partitionBy("cl")
     return (
@@ -657,7 +650,6 @@ def sim_partitioned_knn_gemm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import numpy as np
 
-    ensure_session_conf(spark)
     emb = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     probe_rows = sorted(
         emb.filter(F.col("vec_id") < _GEMM_N_PROBES).collect(),
@@ -779,7 +771,6 @@ def sim_lsh_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     This is the handoff SIM4 names for probe batches too large to
     broadcast: both sides shard by bucket, no broadcast, no full scan
     per probe."""
-    ensure_session_conf(spark)
     from .dedup import hyperplane_bands
 
     emb = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
@@ -1006,7 +997,6 @@ def sim_pq_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     vector relation with the 512-row codebook broadcast (sim_pq_adc_topk's
     docstring has the full account); the code pivot is one hash aggregate
     on vec_id over M rows per vector."""
-    ensure_session_conf(spark)
     _, assign = pq_build(spark, sf_dir)
     codes = [
         F.max(F.when(F.col("sub") == s, F.col("cl"))).alias(f"code_s{s}")
@@ -1076,7 +1066,6 @@ def sim_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     4-rows-per-vector code relation — once the index exists, no exchange
     here is proportional to corpus x dims.
     """
-    ensure_session_conf(spark)
     cent, assign = pq_build(spark, sf_dir)
     lut = _pq_probe_lut(spark, sf_dir, cent)
     codes = [
@@ -1160,7 +1149,6 @@ def sim_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows (corpus / n_cells), never the corpus, and never a float vector.
     Decimal-routed sums keep the ranking bit-identical to the oracle's
     re-derivation across engines and partitionings."""
-    ensure_session_conf(spark)
     coarse = ivf_coarse_assign(spark, sf_dir).select(
         "vec_id", F.col("cl").alias("cluster")
     )
@@ -1281,7 +1269,6 @@ def sim_pq_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the Jegou et al. default, not 3) or re-rank ADC candidates with
     exact distances. An approximate path with no registered accuracy
     metric was the D6 round-3 failure mode."""
-    ensure_session_conf(spark)
     emb = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     q = F.broadcast(
         emb.filter(F.col("vec_id") == _PQ_PROBE).select(
@@ -1383,7 +1370,6 @@ def sim_knn_label_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     pick is a second window with a total (votes DESC, label) order so ties
     are deterministic. Cosines use the sequential fold (engine-identical),
     so neighbor sets — and therefore the whole eval — are bit-stable."""
-    ensure_session_conf(spark)
     from pyspark.sql import Window
 
     emb = table(spark, sf_dir, "embeddings").select("vec_id", "label", "embedding")
@@ -1504,7 +1490,6 @@ def sim_ivf_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     of this index would need trained cells (SIM6) or more probes. A
     vacuously-green approximate path with no registered accuracy metric
     was exactly the D6 failure mode in rounds 1-3."""
-    ensure_session_conf(spark)
     # the two top-10 frames are each referenced twice (overlap join + own
     # count); without materialization every reference re-runs the whole
     # search lineage — checkpointing 10-row frames costs nothing
@@ -1601,7 +1586,6 @@ def sim_truncated_dim_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     set. Real Matryoshka-trained embeddings concentrate information in
     the prefix precisely so this number stays high; run this audit before
     truncating any production index."""
-    ensure_session_conf(spark)
     emb = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     # probe norms (full and truncated) computed ONCE in the 1-row broadcast
     # frame, like SIM1's q_n2 — not re-folded per candidate row
@@ -1713,7 +1697,6 @@ def dedup_semantic_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     cell."""
     from .dedup import cosine_of_pairs
 
-    ensure_session_conf(spark)
     emb = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     assign = ivf_coarse_assign(spark, sf_dir)
     a = assign.select(F.col("vec_id").alias("vec_a"), "cl")
@@ -1826,7 +1809,6 @@ def sim_matryoshka_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     Probe norms (full + truncated) are computed once in the broadcast
     frame; identical folds on both engines make every cosine and both
     rankings bit-stable."""
-    ensure_session_conf(spark)
     emb = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     q = F.broadcast(
         emb.filter(F.col("vec_id") == _QUERY_VEC_ID).select(
@@ -2028,7 +2010,6 @@ def sim_ivf_incremental_add(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioning."""
     from pyspark.sql import Window
 
-    ensure_session_conf(spark)
     base_assign, cent = _ivf_base_index(spark, sf_dir)
     bx = (
         table(spark, sf_dir, "embeddings")
@@ -2113,7 +2094,6 @@ _RADIUS = 0.25  # non-trivial on the synthetic corpus: 12/14/43 exact
 def sim_radius_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SIM18: every vector within cosine radius 0.25 of the query, probed
     through the nprobe=2 IVF cells (block comment above)."""
-    ensure_session_conf(spark)
     emb = table(spark, sf_dir, "embeddings").select("vec_id", "embedding", "label")
     cells = _ivf_query_cells(spark, sf_dir)
     q = (
@@ -2184,7 +2164,6 @@ def sim_radius_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     probed cells, never a superset with false positives — the cosine is
     exact on every scored candidate), so recall is the single number that
     decides whether nprobe/cell sizing is adequate for range queries."""
-    ensure_session_conf(spark)
     emb = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     q = (
         emb.filter(F.col("vec_id") == _QUERY_VEC_ID)
@@ -2301,7 +2280,6 @@ def sim_ndcg_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SIM20: one-row NDCG@10 report for the IVF path (block comment
     above) — exact-integer DCG over fixed-point rank discounts, ideal DCG
     from the same table, one final division."""
-    ensure_session_conf(spark)
     from pyspark.sql import Window
 
     exact_ids = (
@@ -2505,7 +2483,6 @@ def _mips_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sim_mips_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SIM21: exact maximum-inner-product top-10 for the standing query
     (block comment above) — the MIPS correctness baseline."""
-    ensure_session_conf(spark)
     return _mips_exact_topk(spark, sf_dir)
 
 
@@ -2517,7 +2494,6 @@ def sim_mips_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sim_mips_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SIM22: MIPS top-10 through norm-augmented IVF cells (block comment
     above) — the probe the 100 TB path runs instead of the full scan."""
-    ensure_session_conf(spark)
     return _mips_ivf_topk(spark, sf_dir)
 
 
@@ -2542,7 +2518,6 @@ def sim_mips_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SIM23: recall@10 of the norm-augmented IVF MIPS probe (SIM22)
     against the exact scan (SIM21) — the honesty audit every approximate
     index ships with."""
-    ensure_session_conf(spark)
     # localCheckpoint: each 10-row ID set is consumed twice (count +
     # intersect) — without it the exact scan and the whole augmented-IVF
     # centroid/probe pipeline would execute twice (same convention as the

@@ -20,7 +20,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register
-from ..session import ensure_session_conf
 from ..sources import table
 
 # --------------------------------------------------------------------------
@@ -181,7 +180,6 @@ def sk_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     REPLACES — drop it at scale, keeping the register MAX only. The 64-row
     spine and 1-row total broadcast; estimate arithmetic is exact-int until
     the two documented roundings."""
-    ensure_session_conf(spark)
     idx, rho = hll_point_cols()
     r = (
         table(spark, sf_dir, "events")
@@ -370,7 +368,6 @@ def sk_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     replaces at scale. Probes are 40 rows; the 2048-cell sketch broadcasts
     to them, so nothing after the two corpus aggregates exceeds a few
     thousand rows."""
-    ensure_session_conf(spark)
     # NULL keys are excluded on both sides: Spark sorts nulls first on
     # asc, DuckDB last, so a NULL heavy hitter would order differently.
     events = table(spark, sf_dir, "events")
@@ -439,7 +436,6 @@ def sk_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     turns the shuffle into k rows per (group, partition). The estimator
     numerator is a shared pre-folded literal; one division is the only
     float op."""
-    ensure_session_conf(spark)
     return kmv_distinct_table(
         table(spark, sf_dir, "events"), "event_type", "user_id"
     )
@@ -575,7 +571,6 @@ def sk_histogram_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     no structural work left to remove."""
     from pyspark.sql import Window
 
-    ensure_session_conf(spark)
     cents = F.floor(F.col("l_extendedprice") * 100).cast("long")
     cdfv = (
         table(spark, sf_dir, "lineitem")
@@ -723,7 +718,6 @@ def sk_kmv_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     the sketch exists to avoid — drop it at scale. Integer hashes and
     pre-folded numerator; the three final divisions are the only float
     ops."""
-    ensure_session_conf(spark)
     hv = F.conv(
         F.substring(F.md5(F.col("user_id").cast("string")), 1, 12), 16, 10
     ).cast("long")
@@ -868,7 +862,6 @@ def sk_bloom_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     count == k — no shuffle of the probe relation beyond its own
     per-key aggregation. The verdict relation reduces to one summary row;
     the two divisions at the end are the only float ops."""
-    ensure_session_conf(spark)
     cust = table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("key"),
         (F.col("c_acctbal") >= 0).alias("is_member"),
@@ -1069,7 +1062,6 @@ def sk_hll_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly as SK1 documents. Register contents are md5 + integer
     arithmetic, so the merge identity (rollup registers == direct
     registers) is checked bit-exactly by the differential oracle."""
-    ensure_session_conf(spark)
     idx, rho = hll_point_cols()
     ev = (
         table(spark, sf_dir, "events")
@@ -1230,7 +1222,6 @@ def sk_ams_f2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SK8: AMS tug-of-war F2 sketch over events.user_id (block comment),
     with the exact self-join size as the audit column the estimator
     exists to replace (at 100 TB: keep the sketch, drop the audit)."""
-    ensure_session_conf(spark)
     return ams_f2_sketch(
         table(spark, sf_dir, "events").select(F.col("user_id").cast("string").alias("v"))
     )

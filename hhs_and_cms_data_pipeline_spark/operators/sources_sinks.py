@@ -32,7 +32,6 @@ from pyspark.sql import types as T
 
 from ..functions.exact import sql_dsum
 from ..registry import register
-from ..session import ensure_session_conf
 from ..sinks import append_new_keys, read_published, write_parquet_atomic
 from ..sources import table
 
@@ -132,7 +131,6 @@ def s1_csv_scan_schema(spark: SparkSession, sf_dir: str) -> DataFrame:
     (helper_load_hhs.py:45-52 reads ~100 raw columns, consumes 17). The
     projection reaches the scan — Spark's CSV reader parses only selected
     columns. Never inferSchema in a production path (SURVEY §1.3)."""
-    ensure_session_conf(spark)
     _write_nation_csv(spark, sf_dir)
     return (
         spark.read.csv(_NATION_CSV, header=True, schema=NATION_SCHEMA)
@@ -155,7 +153,6 @@ def s2_csv_scan_strings(spark: SparkSession, sf_dir: str) -> DataFrame:
     (load-quality.py:56-62), with typed parsing deferred to downstream
     column expressions (F11/F12). Spark streams and partitions the file
     natively; the reference's 1000-row driver batching disappears."""
-    ensure_session_conf(spark)
     _write_nation_csv(spark, sf_dir)
     all_string = T.StructType(
         [T.StructField(f.name, T.StringType(), True) for f in NATION_SCHEMA.fields]
@@ -179,7 +176,6 @@ def s4_json_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S4: newline-delimited JSON scan with explicit schema (the reference's
     GeoJSON fetch, weekly-report.py:140-147, is presentation-side; the engine
     capability is the JSON source itself)."""
-    ensure_session_conf(spark)
     _write_nation_jsonl(spark, sf_dir)
     return (
         spark.read.schema(NATION_SCHEMA)
@@ -225,7 +221,6 @@ def s4_geojson_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     nested-array expressions. The HTTP half is sources/geojson.py
     `fetch_geojson` (untestable offline); this query exercises the full
     parse/compute path on a deterministic synthetic FeatureCollection."""
-    ensure_session_conf(spark)
     from ..sources.geojson import read_geojson_features
 
     _write_geojson()
@@ -297,7 +292,6 @@ def s10_geojson_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     for one-document-per-URL APIs; each task fetches, parses, and hands
     Spark columnar batches. Adding pages = adding partitions, no driver
     bottleneck, no shuffle anywhere in this plan."""
-    ensure_session_conf(spark)
     from ..sources.geojson_datasource import GeoJsonFeaturesDataSource
 
     _write_geojson_shards()
@@ -343,7 +337,6 @@ def k1_partitioned_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference's 1000-row executemany flush has no distributed analogue to
     hand-tune. Partitioning by n_regionkey mirrors the date-partitioned
     fact-table layout that buys partition pruning at 100 TB."""
-    ensure_session_conf(spark)
     # SF-tagged like S6/K4/S7: an untagged reset-then-append path is the
     # documented cross-process race (_tagged_io_path) — two SFs running k1
     # concurrently would double-append or read a half-deleted dir
@@ -379,7 +372,6 @@ def k2_atomic_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K2: all-or-nothing publish (write temp dir + atomic rename), read
     back. Mirrors the reference's single-transaction load with rollback on
     failure (load-hhs.py:28-34): readers never observe a partial table."""
-    ensure_session_conf(spark)
     path = os.path.join(_IO_DIR, "k2_region_counts")
     agg = (
         table(spark, sf_dir, "nation")
@@ -485,7 +477,6 @@ def s5_csv_permissive_corrupt(spark: SparkSession, sf_dir: str) -> DataFrame:
     queryable for quarantine/audit (tests assert both bad lines are captured
     verbatim). The oracle reads the same file leniently and re-derives the
     good subset via TRY_CAST."""
-    ensure_session_conf(spark)
     df = messy_csv_frame(spark, sf_dir)
     return (
         df.filter(F.col("_corrupt").isNull())
@@ -511,7 +502,6 @@ def s6_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     without a conversion pass. The table is written snappy-compressed and
     read back; the oracle is the original relation, so the check proves
     the round-trip is lossless (values, nullability, column order)."""
-    ensure_session_conf(spark)
     path = _tagged_io_path("s6_nation_orc", sf_dir)
     (
         table(spark, sf_dir, "nation")
@@ -548,7 +538,6 @@ def s12_xml_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     files like any text source — parallelism comes from file count
     (staged as 4 part files here); schema is DECLARED (an inference pass
     over 100 TB of XML is a full extra scan)."""
-    ensure_session_conf(spark)
     import xml.sax.saxutils as sx
 
     path = _tagged_io_path("s12_nation_xml", sf_dir)
@@ -632,7 +621,6 @@ def k10_manifest_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     manifest-scoped read trip is lossless, including the exact-decimal
     double sums surviving the JSON round trip (shortest-repr write,
     correctly-rounded parse — both engines' bit pattern)."""
-    ensure_session_conf(spark)
     from ..functions.exact import dsum
     from ..sources.manifest_sink import manifest_files, register_manifest_sink
 
@@ -686,7 +674,6 @@ def k4_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     the compacted layout in so readers never see a half-compacted table.
     The oracle checks the rewrite is content-lossless; the file counts are
     asserted in tests."""
-    ensure_session_conf(spark)
     fragmented = _tagged_io_path("k4_fragmented", sf_dir)
     compacted = _tagged_io_path("k4_compacted", sf_dir)
     shutil.rmtree(fragmented, ignore_errors=True)
@@ -723,7 +710,6 @@ def s7_schema_evolution_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema merging is a footer-read per file at planning time, so at 100 TB
     you pin the merged schema in a catalog instead of re-deriving it per
     query (spark.read.schema(...) over the same files is the fast path)."""
-    ensure_session_conf(spark)
     path = _tagged_io_path("s7_evolved", sf_dir)
     src = table(spark, sf_dir, "nation").select(
         "n_nationkey", "n_name", "n_regionkey"
@@ -789,7 +775,6 @@ def k5_merge_partition_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     table format. The oracle states MERGE semantics declaratively; the
     check proves the partition-scoped rewrite produces exactly them.
     At 100 TB: cost follows the update batch (one day), not the table."""
-    ensure_session_conf(spark)
     from ..sinks import merge_rewrite_partitions
 
     ev = (
@@ -854,7 +839,6 @@ def k6_time_travel_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     a load job republishes under them (reference: the rollback/retention
     behavior around load-hhs.py:28-34).
     """
-    ensure_session_conf(spark)
     from ..sinks import read_published_version
 
     path = _tagged_io_path("k6_versions", sf_dir)
@@ -903,7 +887,6 @@ def k7_file_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     them); this query is the bootstrap/repair path that rebuilds it with
     one column-pruned pass over the table. Oracle: DuckDB's
     read_parquet(filename=true) over the same files."""
-    ensure_session_conf(spark)
     # K7 owns its layout and publishes it ATOMICALLY (symlink swap), so a
     # concurrent republish always leaves SOME complete version readable.
     # Residual caveat (accepted): part-file basenames embed the write
@@ -982,7 +965,6 @@ def k8_incremental_agg_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     per group), not facts. The decimal route keeps the merged SUM
     bit-identical to the from-scratch SUM no matter how the data is split.
     """
-    ensure_session_conf(spark)
     from ..sources import table as _table
 
     ev = (
@@ -1092,7 +1074,6 @@ def k9_snapshot_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
     At scale the diff is one co-partitioned full outer join on the
     natural key — no state, no log shipping — and composes with K7's
     manifest to skip unchanged partitions entirely."""
-    ensure_session_conf(spark)
     from ..sinks import read_published_version
 
     path = _tagged_io_path("k9_versions", sf_dir)
@@ -1172,7 +1153,6 @@ def s9_text_lines_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     parse-count filter): at scale it is how one-off log formats are
     bootstrapped before graduating to a real source. text() scans split
     and parallelize like any file source; the parse is map-only."""
-    ensure_session_conf(spark)
     _write_nation_csv(spark, sf_dir)
     lines = spark.read.text(_NATION_CSV)
     parts = F.split(F.col("value"), ",")
@@ -1225,7 +1205,6 @@ def s11_event_ledger_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     Source's batch reader (one input partition per ledger file) and
     aggregate per event type. The ledger is staged from events.parquet
     into 3 chronological files on first use per (session, sf)."""
-    ensure_session_conf(spark)
     from ..functions.exact import dsum
     from ..sources.ledger_stream import register_event_ledger
     from ..streaming.stateful import stage_chronological_files
@@ -1326,7 +1305,6 @@ def k11_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     The packing window partitions by event_type (parallel at manifest
     scale); only the type-count offset composition — one row per event
     type — runs single-partition, then broadcasts back."""
-    ensure_session_conf(spark)
     from pyspark.sql import Window
 
     files = (
@@ -1448,7 +1426,6 @@ def k11_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 def k12_scd2_user_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K12: SCD Type-2 state history per user (block comment above) —
     consecutive same-type runs as half-open validity intervals."""
-    ensure_session_conf(spark)
     ev = (
         table(spark, sf_dir, "events")
         .filter(

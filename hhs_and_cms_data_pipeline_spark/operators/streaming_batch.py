@@ -13,7 +13,6 @@ from pyspark.sql import functions as F
 from ..functions.exact import dsum, floordiv, sql_dsum, sql_floordiv
 from .ingest_queries import _DRIFT_SCALE, _DRIFT_SPLIT
 from ..registry import register
-from ..session import ensure_session_conf
 from ..sources import table
 
 def _run_drain(spark: SparkSession, start):
@@ -63,7 +62,6 @@ def _run_drain(spark: SparkSession, start):
 def stream_tumbling_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling 1h event-time windows; identical to the streaming plan in
     streaming/events.py:tumbling_counts (epoch-aligned windows == date_trunc)."""
-    ensure_session_conf(spark)
     ev = table(spark, sf_dir, "events").select("ts", "event_type", "value")
     return (
         ev.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
@@ -99,7 +97,6 @@ def stream_tumbling_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """1h windows every 30min — each event lands in 2 windows. The oracle
     expands event->windows explicitly; Spark's F.window does it natively."""
-    ensure_session_conf(spark)
     ev = table(spark, sf_dir, "events").select("ts", "value")
     return (
         ev.groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"))
@@ -199,7 +196,6 @@ def stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch form has identical results on a static table and is SQL-oracle-able.
     Scale: both windows partition by user_id — high cardinality, no skew.
     """
-    ensure_session_conf(spark)
     ev = table(spark, sf_dir, "events").select("user_id", "ts", "event_id")
     return (
         with_session_seq(ev)
@@ -246,7 +242,6 @@ def stream_stateful_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..streaming.stateful import run_stateful_sessionize, stage_chronological_files
 
-    ensure_session_conf(spark)
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
     stage = os.path.join(tempfile.gettempdir(), f"stateful_sessions_{tag}")
     ckpt = tempfile.mkdtemp(prefix="stateful_ckpt_")
@@ -294,7 +289,6 @@ def stream_enrich_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermarked window agg (parity asserted in tests/test_streaming.py).
     At 100 TB the dim side stays broadcast-sized (users, not events), and
     the stream side never shuffles before the windowed aggregation."""
-    ensure_session_conf(spark)
     ev = table(spark, sf_dir, "events").select("ts", "user_id", "value")
     dim = (
         table(spark, sf_dir, "customer")
@@ -345,7 +339,6 @@ def stream_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     against this batch result in tests/test_streaming.py); at 100 TB the
     state store holds only keys inside the watermark horizon, not the
     stream's history."""
-    ensure_session_conf(spark)
     ev = table(spark, sf_dir, "events").select("event_id", "ts", "event_type", "value")
     redelivered = ev.filter(F.col("event_id") % 10 == 0)
     return (
@@ -388,7 +381,6 @@ def session_event_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     ties deterministically, so the path string is unique and both engines
     agree byte-for-byte. Sessions are bounded by the gap rule, so
     collect_list stays session-sized, never user-lifetime-sized."""
-    ensure_session_conf(spark)
     ev = table(spark, sf_dir, "events").select(
         "user_id", "ts", "event_id", "event_type"
     )
@@ -501,7 +493,6 @@ def stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     a standard equi-join with residual, never a cartesian. At 100 TB the
     same plan holds; the streaming deployment bounds state by watermark
     instead of partitioning history."""
-    ensure_session_conf(spark)
     clicks, purchases = _click_purchase_frames(spark, sf_dir)
     return click_purchase_attribution(clicks, purchases).orderBy(
         "click_id", "purchase_id"
@@ -543,7 +534,6 @@ def stream_outer_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     the final watermark advance. Batch scale shape is identical to ST8:
     hash-partition both sides on user_id, residual range predicate, no
     cartesian."""
-    ensure_session_conf(spark)
     clicks, purchases = _click_purchase_frames(spark, sf_dir)
     return click_purchase_attribution(clicks, purchases, how="left").orderBy(
         "click_id", "purchase_id"
@@ -601,7 +591,6 @@ def session_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     4-column scalar aggregate. At 100 TB stage chains longer than ~5 would
     switch to a single sorted pass with applyInPandasWithState rather than
     k joins."""
-    ensure_session_conf(spark)
     ev = table(spark, sf_dir, "events").select(
         "user_id", "ts", "event_id", "event_type"
     )
@@ -680,7 +669,6 @@ def stream_user_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming twin and assert row equality.
 
     Batch shape: one hash-shuffle on user_id with map-side partials."""
-    ensure_session_conf(spark)
     return (
         table(spark, sf_dir, "events")
         .select("user_id", "value")
@@ -790,7 +778,6 @@ def grouped_map_user_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     Lower-median (an exact element, never an interpolated midpoint) keeps
     every emitted double bit-identical to the SQL oracle's order-statistic
     formulation."""
-    ensure_session_conf(spark)
     ev = (
         table(spark, sf_dir, "events")
         .select("user_id", "value")
@@ -868,7 +855,6 @@ def stream_snapshot_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from ..streaming.stateful import stage_chronological_files
 
-    ensure_session_conf(spark)
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
     from ..sinks import clear_published_versions
 
@@ -960,7 +946,6 @@ def stream_session_window_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     it cheaper than the lag+running-sum formulation (two window sorts) at
     100 TB. The oracle re-states the merge rule declaratively (new session
     iff gap >= 30 min)."""
-    ensure_session_conf(spark)
     ev = (
         table(spark, sf_dir, "events")
         # null user_id excluded like the rest of the session family (the
@@ -1030,7 +1015,6 @@ def cogroup_click_context(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    ensure_session_conf(spark)
     ev = table(spark, sf_dir, "events").select(
         "user_id", "ts", "event_id", "event_type"
     )
@@ -1259,7 +1243,6 @@ def stream_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.events import events_raw_schema
     from ..streaming.stateful import stage_chronological_files
 
-    ensure_session_conf(spark)
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
     stage = os.path.join(tempfile.gettempdir(), f"incr_stage_{tag}")
     target = os.path.join(tempfile.gettempdir(), f"incr_rollup_{tag}")
@@ -1493,7 +1476,6 @@ def gx3_theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle compares against the exact path. Users whose points all share
     one timestamp-second have no defined slope and are excluded on both
     sides (HAVING n_pairs > 0 / empty-slopes skip)."""
-    ensure_session_conf(spark)
     ev = (
         table(spark, sf_dir, "events")
         .filter(
@@ -1583,7 +1565,6 @@ def stream_disorder_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     sf0.1), so any watermark delay is loss-free on this corpus — the
     zero row is the certificate. Real ingestion (multi-source, retries,
     mobile clients) is where the drop counts light up."""
-    ensure_session_conf(spark)
     ev = (
         table(spark, sf_dir, "events")
         .select("user_id", "event_id", "ts")
@@ -1719,7 +1700,6 @@ def stream_hll_registers(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.stateful import stage_chronological_files
     from .sketch import _HLL_M, hll_estimate_frame
 
-    ensure_session_conf(spark)
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
     stage = os.path.join(tempfile.gettempdir(), f"hll_stage_{tag}")
     target = os.path.join(tempfile.gettempdir(), f"hll_store_{tag}")
@@ -1889,7 +1869,6 @@ def stream_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.tables import normalize_events_ts
     from .ingest_queries import drift_from_counts
 
-    ensure_session_conf(spark)
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
     stage = os.path.join(tempfile.gettempdir(), f"drift_stage_{tag}")
     target = os.path.join(tempfile.gettempdir(), f"drift_store_{tag}")
@@ -2004,7 +1983,6 @@ def stream_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.stateful import stage_chronological_files
     from .sketch import cms_probe_report, cms_truth_topk
 
-    ensure_session_conf(spark)
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
     stage = os.path.join(tempfile.gettempdir(), f"cms_stage_{tag}")
     target = os.path.join(tempfile.gettempdir(), f"cms_store_{tag}")
@@ -2075,7 +2053,6 @@ def stream_recent_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     Batch shape: one user-keyed window (rank within user) — the windowed
     relation is per-user bounded, so the sort inside each partition's
     groups is O(events per user); n_seen shares the same exchange."""
-    ensure_session_conf(spark)
     # NULL ts/event_id are excluded by contract — the streaming processor
     # (streaming/recent.py) coerces both to int per row and the two
     # statements must stay symmetric (ADVICE r6).
@@ -2138,7 +2115,6 @@ def stream_type_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ST20: per-(user, event_type) counts with the per-user total riding
     along — one hash aggregation on the pair key plus a user-keyed count
     joined back (both with map-side partials)."""
-    ensure_session_conf(spark)
     ev = (
         table(spark, sf_dir, "events")
         .filter(F.col("event_type").isNotNull())
@@ -2214,7 +2190,6 @@ def stream_timer_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ST21: the closable sessions of the timer sessionizer (block comment
     above) — gaps-and-islands over ms timestamps, minus the per-user last
     session when the final watermark has not passed its close timer."""
-    ensure_session_conf(spark)
     ev = (
         table(spark, sf_dir, "events")
         .filter(F.col("ts").isNotNull())
@@ -2309,7 +2284,6 @@ def stream_manifest_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.events import events_raw_schema
     from ..streaming.stateful import stage_chronological_files
 
-    ensure_session_conf(spark)
     from ..functions.exact import dsum
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
     stage = os.path.join(tempfile.gettempdir(), f"manifest_stage_{tag}")
@@ -2451,7 +2425,6 @@ def stream_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.stateful import stage_chronological_files
     from .relational_ext import cusum_from_daily
 
-    ensure_session_conf(spark)
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
     stage = os.path.join(tempfile.gettempdir(), f"cusum_stage_{tag}")
     target = os.path.join(tempfile.gettempdir(), f"cusum_daily_{tag}")

@@ -14,7 +14,6 @@ from pyspark.sql import functions as F
 
 from ..functions.exact import dsum, sql_dsum
 from ..registry import register
-from ..session import ensure_session_conf
 from ..sources import spread, table
 
 # Spark-side shared fragments ------------------------------------------------
@@ -110,7 +109,6 @@ SQL_BIGRAMS = f"""
 )
 def text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Whitespace token counts, vocabulary ratio, average token length."""
-    ensure_session_conf(spark)
     t = tokens()
     n_tok = F.size(t)
     return (
@@ -159,7 +157,6 @@ def text_regex_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BPE-style regex tokenization (word runs + single punctuation marks,
     the shape of GPT-2's pre-tokenizer restricted to ASCII classes so both
     regex engines split identically). Pure map-only column expressions."""
-    ensure_session_conf(spark)
     toks = F.regexp_extract_all(F.col("text"), F.lit(_TOKEN_RE), 0)
     words = F.regexp_extract_all(F.col("text"), F.lit(_WORD_RE), 0)
     return (
@@ -210,7 +207,6 @@ _SQL_STOPS = ", ".join(f"'{s}'" for s in _STOPWORDS)
 def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Composite quality score: vocabulary diversity, stopword density,
     length plausibility — the scalar heuristics LLM corpus filters use."""
-    ensure_session_conf(spark)
     t = tokens()
     n_tokens = F.size(t).cast("double")
     n_stop = F.size(
@@ -281,7 +277,6 @@ def _sql_lang_score(lang: str) -> str:
 )
 def text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Marker-word language ID with a deterministic argmax tie order."""
-    ensure_session_conf(spark)
     t = tokens()
 
     def _score(ws: tuple[str, ...]) -> F.Column:
@@ -357,7 +352,6 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     (order-sensitive, the building block of winnowing-style chunking).
     All map-only except the bigram min, which is one partial-aggregated
     shuffle."""
-    ensure_session_conf(spark)
     docs = table(spark, sf_dir, "documents")
     minhash = (
         word_bigrams(spread(docs))
@@ -435,7 +429,6 @@ def text_winnowing_fps(spark: SparkSession, sf_dir: str) -> DataFrame:
     (hash-partitioned on doc_id — high cardinality, no skew) plus the
     output distinct. The k-gram hash is the same md5-prefix integer both
     engines compute bit-identically."""
-    ensure_session_conf(spark)
     toked = table(spark, sf_dir, "documents").select("doc_id", tokens().alias("toks"))
     n = F.size(F.col("toks"))
     m = n - F.lit(_WIN_K - 1)  # number of complete k-grams
@@ -528,7 +521,6 @@ def text_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     back is vocab x doc-terms on the term key, and the per-doc window runs
     as a rank<=k group-limit (WindowGroupLimit), never ranking full
     vocabularies. No Python anywhere."""
-    ensure_session_conf(spark)
     docs = spread(table(spark, sf_dir, "documents"))
     toks = docs.select("doc_id", F.explode(tokens()).alias("w"))
     tf = toks.groupBy("doc_id", "w").agg(F.count(F.lit(1)).alias("tf"))
@@ -618,7 +610,6 @@ def text_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     normalized DOUBLE score is one exact-int division — bit-identical on
     any partitioning and engine. Swapping in trained weights = replacing
     the md5 expression with a broadcast map lookup; the plan is unchanged."""
-    ensure_session_conf(spark)
     raw = quality_raw_score()
     docs = table(spark, sf_dir, "documents").select("doc_id", "text")
     scored = docs.select(
@@ -686,7 +677,6 @@ def text_rarity_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     subqueries (Q2). Per-term division is exact-int-over-exact-int in
     DOUBLE; the per-doc sum goes through DECIMAL(38,6) so partition order
     cannot perturb the result."""
-    ensure_session_conf(spark)
     docs = spread(table(spark, sf_dir, "documents"))
     toks = docs.select("doc_id", F.explode(tokens()).alias("w"))
     cnt = toks.groupBy("w").agg(F.count(F.lit(1)).alias("cnt"))
@@ -752,7 +742,6 @@ def text_bpe_pair_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts, then pair counts — both map-side partial) and a
     TakeOrderedAndProject top-20; all string slicing is codegen'd column
     arithmetic, no Python."""
-    ensure_session_conf(spark)
     docs = spread(table(spark, sf_dir, "documents"))
     words = docs.select(F.explode(tokens()).alias("w")).filter(F.col("w") != "")
     wc = words.groupBy("w").agg(F.count(F.lit(1)).alias("c"))
@@ -857,7 +846,6 @@ def text_bpe_train_2merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     is this block unrolled k times: the lineage stays a static DAG, and at
     production merge counts the vocabulary relation would be
     localCheckpointed per round exactly like pq_build's Lloyd loop."""
-    ensure_session_conf(spark)
     merges = _bpe_learn_merges(_bpe_word_counts(spark, sf_dir))
     steps = [
         best.select(
@@ -960,7 +948,6 @@ def text_bpe_encode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     1-row broadcasts) and joins back to the per-doc token stream on the
     word — one stream-sized keyed exchange plus the per-doc aggregate.
     The corpus text itself is never rewritten; only counts move."""
-    ensure_session_conf(spark)
     wc = _bpe_word_counts(spark, sf_dir)
     b1, b2 = _bpe_learn_merges(wc)
     rewritten = F.replace(
@@ -1069,7 +1056,6 @@ def text_bigram_lm_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     skew escape if needed). Everything is integer until the single final
     exact-int division, so the result is bit-identical by construction —
     no decimal machinery needed."""
-    ensure_session_conf(spark)
     return bigram_lm_surprisal_table(
         spread(table(spark, sf_dir, "documents"))
     )
@@ -1189,7 +1175,6 @@ def text_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     max-doc-id scalar rides the Q2 broadcast-cross-join pattern. All
     counts are int64; bucket assignment is integer floor division, so the
     curve is bit-deterministic."""
-    ensure_session_conf(spark)
     docs = spread(table(spark, sf_dir, "documents"))
     mx = docs.agg(F.max("doc_id").alias("mid"))
     vtk = (
@@ -1297,7 +1282,6 @@ def text_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     sums are exact int64 (order-insensitive), the 1-row regression scalar
     is broadcast, and the slope is the single final double division —
     bit-deterministic by construction."""
-    ensure_session_conf(spark)
     return zipf_slope_table(spread(table(spark, sf_dir, "documents")))
 
 
@@ -1411,7 +1395,6 @@ _PMI_TOP_K = 50
 def tx16_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TX16: top-50 adjacent-word collocations by PMI lift (block comment
     above), with pair and unigram counts riding along."""
-    ensure_session_conf(spark)
     docs = table(spark, sf_dir, "documents").select("doc_id", "text")
     toked = docs.select(tokens().alias("toks"))
     # unigram counts: vocab-sized, read by BOTH count joins below
@@ -1505,7 +1488,6 @@ _CHUNK_STRIDE = _CHUNK_TOKENS - _CHUNK_OVERLAP
 def tx17_chunk_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TX17: overlapping fixed-size token chunks per document (block
     comment above) — (doc_id, chunk_idx, start/end token, length, text)."""
-    ensure_session_conf(spark)
     toked = (
         table(spark, sf_dir, "documents")
         .select("doc_id", tokens().alias("toks"))
@@ -1600,7 +1582,6 @@ def text_kneser_ney_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TX18: interpolated Kneser-Ney bigram model over the corpus (block
     comment above) — the 50 most frequent bigrams with their smoothed
     conditional probabilities and the model counts behind them."""
-    ensure_session_conf(spark)
     docs = spread(table(spark, sf_dir, "documents"))
     toked = docs.select("doc_id", tokens().alias("toks"))
     bgm = toked.select(

@@ -31,7 +31,6 @@ from pyspark.sql import functions as F
 
 from ..functions.exact import davg, dsum, sql_davg, sql_dsum
 from ..registry import register
-from ..session import ensure_session_conf
 from ..sources import table
 
 
@@ -89,7 +88,6 @@ def tpch_q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     makes the early restriction exact); the correlated MIN becomes a
     groupBy + equality join back. MIN over doubles is order-independent, so
     the float equality is bit-safe across engines without decimal routing."""
-    ensure_session_conf(spark)
     p = (
         table(spark, sf_dir, "part")
         .filter(F.col("p_size").between(10, 20) & (F.col("p_type") == "LARGE"))
@@ -160,7 +158,6 @@ def tpch_q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation pair is an OR-of-ANDs over the two nation dims evaluated after
     both broadcast joins; the shipdate window pushes to the lineitem scan.
     The only shuffle on fact data is the lineitem⋈orders sort-merge."""
-    ensure_session_conf(spark)
     lo = F.lit("1996-01-01").cast("timestamp")
     hi = F.lit("1997-12-31").cast("timestamp")
     li = (
@@ -233,7 +230,6 @@ def tpch_q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape. Both sums are decimal-routed and divided once in double, so the
     engines' quotients are bit-identical. part/supplier/nation/region all
     broadcast; the part filter prunes lineitem before the fact-fact join."""
-    ensure_session_conf(spark)
     lo = F.lit("1996-01-01").cast("timestamp")
     hi = F.lit("1997-12-31").cast("timestamp")
     p = (
@@ -309,7 +305,6 @@ def tpch_q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-row amount keeps the oracle's exact operand order (0.6 * retail *
     qty, left-to-right) so the doubles match bitwise before the decimal-
     routed sum. The name LIKE prunes via the broadcast part dim."""
-    ensure_session_conf(spark)
     p = (
         table(spark, sf_dir, "part")
         .filter(F.col("p_name").like("%red%"))
@@ -366,7 +361,6 @@ def tpch_q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     quarter. Both filters (quarter on orders, returnflag on lineitem) push
     to their scans; the top-20 is TakeOrdered with a c_custkey tiebreak so
     equal-revenue picks are deterministic across engines."""
-    ensure_session_conf(spark)
     o = (
         table(spark, sf_dir, "orders")
         .filter(
@@ -436,7 +430,6 @@ def tpch_q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     region-pruned fact; the scalar joins back as a 1-row broadcast, never
     a collect. The threshold arithmetic stays sum * 2.0 / n_parts in that
     exact order to mirror the oracle bit-for-bit."""
-    ensure_session_conf(spark)
     asia = _regional_suppliers(spark, sf_dir, "ASIA").select("s_suppkey")
     li = table(spark, sf_dir, "lineitem").select(
         "l_partkey", "l_suppkey", "l_extendedprice", "l_quantity"
@@ -490,7 +483,6 @@ def tpch_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange; no recompute); the max arrives as a 1-row broadcast. Equality
     of decimal-routed doubles is exact, so ties surface identically on both
     engines rather than picking an arbitrary winner."""
-    ensure_session_conf(spark)
     rev = (
         table(spark, sf_dir, "lineitem")
         .filter(
@@ -549,7 +541,6 @@ def tpch_q16_supplier_part_counts(spark: SparkSession, sf_dir: str) -> DataFrame
     query's dominant exchange) by the part filter's selectivity instead of
     shuffling every traded pair and discarding most of them afterwards
     (the same prune-before-the-heavy-shuffle move as Q2/Q17)."""
-    ensure_session_conf(spark)
     p = (
         table(spark, sf_dir, "part")
         .filter(
@@ -604,7 +595,6 @@ def tpch_q17_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     applied OUTSIDE the parenthesized average exactly as the oracle does,
     keeping the comparison threshold bit-identical. Per-part independence
     makes restricting the average to qualifying parts exact."""
-    ensure_session_conf(spark)
     p = (
         table(spark, sf_dir, "part")
         .filter((F.col("p_brand") == "Brand#3") & (F.col("p_size") < 10))
@@ -659,7 +649,6 @@ def tpch_q20_part_promotion(spark: SparkSession, sf_dir: str) -> DataFrame:
     join against the ≤100-row regional supplier dim. The HAVING boundary is
     decimal-routed: a float sum one ulp either side of 400 would otherwise
     flip membership between engines."""
-    ensure_session_conf(spark)
     p = (
         table(spark, sf_dir, "part")
         .filter(F.col("p_name").like("%blue%"))
@@ -728,7 +717,6 @@ def tpch_q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     products. The late set is computed once and reused for both l1 and l3;
     the ≤100-row regional supplier dim broadcasts before the heavy
     semi/anti probes so only ASIA's late lines pay them."""
-    ensure_session_conf(spark)
     o = (
         table(spark, sf_dir, "orders")
         .filter(F.col("o_orderstatus") == "F")

@@ -17,7 +17,6 @@ from pyspark.sql import functions as F
 
 from ..functions.exact import davg, dsum, dsum_over, floordiv, sql_dsum, sql_floordiv
 from ..registry import register
-from ..session import ensure_session_conf
 from ..sources import spread, table
 
 # --------------------------------------------------------------------------
@@ -51,7 +50,6 @@ def w4_moving_average(spark: SparkSession, sf_dir: str) -> DataFrame:
     window runs on the pre-aggregated daily frame (thousands of rows even at
     100 TB), so the single-partition window is safe by construction; the
     in-frame sum goes through decimal so both engines agree bitwise."""
-    ensure_session_conf(spark)
     # Undated orders are OUT by contract: a NULL day would occupy a slot in
     # the date-ordered ROWS frame, and the engines place it at opposite ends
     # (Spark NULLS FIRST vs DuckDB NULLS LAST), silently shifting the first
@@ -92,7 +90,6 @@ def w5_rank_ntile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ranking functions over per-nation balance totals (25 rows after the
     aggregate — the window is cheap; the heavy lifting is the broadcast join
     + hash agg that precedes it). Tiebreak on nation keeps NTILE stable."""
-    ensure_session_conf(spark)
     c = table(spark, sf_dir, "customer").select("c_nationkey", "c_acctbal")
     n = table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     by_nation = (
@@ -133,7 +130,6 @@ def cube_flag_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUBE: all 2^k grouping combinations in one scan — Spark expands the
     grouping sets inside a single hash aggregate (same one-pass property as
     ROLLUP, one extra expand factor)."""
-    ensure_session_conf(spark)
     return (
         table(spark, sf_dir, "lineitem")
         .select("l_returnflag", "l_linestatus", "l_extendedprice")
@@ -168,7 +164,6 @@ def grouping_sets_flag_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     (status), grand total — that neither ROLLUP nor CUBE expresses (ROLLUP
     drills right-to-left; CUBE is every subset). One scan, one hash
     aggregate over the expanded sets, exactly like its two special cases."""
-    ensure_session_conf(spark)
     return (
         table(spark, sf_dir, "lineitem")
         .select("l_returnflag", "l_linestatus", "l_extendedprice")
@@ -214,7 +209,6 @@ def salted_skew_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     reducers instead of one. The oracle runs the UNSALTED join: salting must
     be result-invariant. At 100 TB this is the manual fallback when AQE's
     skew split can't help (e.g. a skewed broadcast-ineligible dim)."""
-    ensure_session_conf(spark)
     ev = table(spark, sf_dir, "events").select("event_id", "user_id", "event_type", "value")
     dim = ev.groupBy("user_id").agg(F.count(F.lit(1)).alias("n_events"))
     salts = spark.range(_N_SALTS).withColumnRenamed("id", "salt")
@@ -307,7 +301,6 @@ def bucketed_colocated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     at write, never again at read. The oracle joins the raw parquet.
 
     The bucketed tables are (re)built per process (see _bkt_tag)."""
-    ensure_session_conf(spark)
     tag = _bkt_tag(sf_dir)
     o_name, c_name = f"orders_bkt_{tag}", f"customer_bkt_{tag}"
     catalog = spark.catalog
@@ -441,7 +434,6 @@ def partition_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     at the DIRECTORY level (asserted via PartitionFilters in the plan test) —
     the scan never opens the other years' files. This is what makes
     `WHERE collection_week <= X` affordable on a 100 TB fact."""
-    ensure_session_conf(spark)
     return (
         pruned_year_scan(spark, sf_dir)
         .groupBy("o_orderpriority")
@@ -481,7 +473,6 @@ def tpch_q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     through the exact decimal route so the oracle hash matches bitwise.
     spread() undoes the one-row-group fixture so the 6 decimal partial-sums
     per row run on all cores (at 100 TB many input files make it a no-op)."""
-    ensure_session_conf(spark)
     net = F.col("l_extendedprice") * (F.lit(1) - F.col("l_discount"))
     charge = net * (F.lit(1) + F.col("l_tax"))
     return (
@@ -530,7 +521,6 @@ def tpch_q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     Both date predicates push to their scans; the customer filter shrinks
     the broadcast side before the join; the top-10 is TakeOrdered (extra
     l_orderkey tiebreak keeps equal-revenue picks deterministic)."""
-    ensure_session_conf(spark)
     cutoff = F.lit("1995-03-15").cast("timestamp")
     c = (
         table(spark, sf_dir, "customer")
@@ -587,7 +577,6 @@ def tpch_q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame
     """TPC-H Q5: six-way join with the customer=supplier nation constraint.
     Catalyst orders the joins; all dims broadcast; the region filter prunes
     nations before any fact touches them."""
-    ensure_session_conf(spark)
     c = table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     o = (
         table(spark, sf_dir, "orders")
@@ -640,7 +629,6 @@ def tpch_q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q6: pure filter + ungrouped aggregate — every predicate reaches
     the Parquet scan (PushedFilters), the whole query is one codegen stage
     plus a single-row final merge. The canonical scan-speed probe."""
-    ensure_session_conf(spark)
     li = table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1997-01-01").cast("timestamp"))
@@ -675,7 +663,6 @@ def tpch_q13_customer_distribution(spark: SparkSession, sf_dir: str) -> DataFram
     aggregation: the first shuffles on c_custkey, the second on the tiny
     c_count domain — the classic re-aggregation funnel that gets CHEAPER as
     it goes, ideal at 100 TB."""
-    ensure_session_conf(spark)
     c = table(spark, sf_dir, "customer").select("c_custkey")
     o = table(spark, sf_dir, "orders").select("o_custkey", "o_orderkey")
     return (
@@ -706,7 +693,6 @@ def tpch_q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     pushes to the lineitem scan; part is the broadcast side (dim ≪ fact at
     every SF), so the join is shuffle-free on the fact; both sums ride one
     aggregate pass through the exact decimal route."""
-    ensure_session_conf(spark)
     li = (
         table(spark, sf_dir, "lineitem")
         .filter(
@@ -754,7 +740,6 @@ def tpch_q22_global_sales_opportunity(spark: SparkSession, sf_dir: str) -> DataF
     decimal-exact and joined as a 1-row broadcast (crossJoin of a scalar,
     never a collect), the never-ordered set via LEFT ANTI join on orders —
     both sides shuffle-free on the customer scan at any scale."""
-    ensure_session_conf(spark)
     cust = table(spark, sf_dir, "customer").select(
         "c_custkey", "c_nationkey", "c_acctbal"
     )
@@ -809,7 +794,6 @@ def dpp_star_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan months, not the decade, at 100 TB: static pruning (XS3) handles
     literal predicates, DPP handles join-derived ones. Complements XS2
     (bucketing) which removes the shuffle rather than the scan."""
-    ensure_session_conf(spark)
     fact = spark.read.parquet(partitioned_orders_path(spark, sf_dir))
     years = (
         table(spark, sf_dir, "lineitem")
@@ -856,7 +840,6 @@ def tpch_q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     EXISTS becomes a LEFT SEMI join — the fact side streams through the
     probe, duplicates never materialize, and the quarter predicate is pushed
     to the orders scan."""
-    ensure_session_conf(spark)
     o = table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1995-01-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1995-04-01").cast("timestamp"))
@@ -897,7 +880,6 @@ def tpch_q12_priority_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     in 1996 — the conditional-aggregation (CASE-sum) shape. The year
     predicate pushes to the lineitem scan; the join is fact⋈fact sort-merge
     with only 3 columns read."""
-    ensure_session_conf(spark)
     li = table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1997-01-01").cast("timestamp"))
@@ -945,7 +927,6 @@ def tpch_q18_large_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-100 compiles to TakeOrderedAndProject. Quantity sums are decimal-
     routed for the cross-engine HAVING boundary (a float sum straddling the
     threshold by 1 ulp would flip row membership)."""
-    ensure_session_conf(spark)
     big = (
         table(spark, sf_dir, "lineitem")
         .groupBy("l_orderkey")
@@ -991,7 +972,6 @@ def tpch_q19_discounted_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-side conjuncts (brand/size on part, quantity on lineitem) derived
     via constraint propagation where possible — the shape that defeats
     naive planners into cross joins."""
-    ensure_session_conf(spark)
     li = table(spark, sf_dir, "lineitem").select(
         "l_partkey", "l_quantity", "l_extendedprice", "l_discount"
     )
@@ -1081,7 +1061,6 @@ def xs5_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     dimensional data skipping from a one-dimensional sort. The key is
     pure per-row bit math (no shuffle of its own); the range partition
     of the write is the only exchange."""
-    ensure_session_conf(spark)
     # Rows missing any layout key are NOT layout-eligible by contract: a
     # NULL key makes z NULL (sorted at opposite ends by the two engines,
     # flipping the LIMIT set) and a NULL tie-break column does the same
@@ -1164,7 +1143,6 @@ def w7_scd2_rating_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
     mirrored by the oracle's WHERE, pinning the NULLS FIRST/LAST divergence
     the sessionize operators document (streaming_batch.py).
     """
-    ensure_session_conf(spark)
     hist = (
         table(spark, sf_dir, "events")
         .filter(
@@ -1258,7 +1236,6 @@ def xa6_mode_median_by_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     percentile_approx if the per-group value sets outgrow memory — the
     frequency-table route here already reduces before any ranking).
     """
-    ensure_session_conf(spark)
     rated = (
         table(spark, sf_dir, "events")
         .filter(F.col("value").isNotNull() & F.col("event_type").isNotNull())
@@ -1391,7 +1368,6 @@ def xs6_bloom_prefilter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     their quality: the final semi-join removes every false positive, which
     is why the oracle is the plain IN-subquery.
     """
-    ensure_session_conf(spark)
     pruned, urgent = bloom_prefiltered_lineitem(spark, sf_dir)
     survivors = pruned.join(urgent, pruned.l_orderkey == urgent.o_orderkey, "semi")
     rev = F.col("l_extendedprice") * (F.lit(1) - F.col("l_discount"))
@@ -1456,7 +1432,6 @@ def xa9_user_value_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     degenerate groups
     (single point, or all points in one second) are excluded by the
     HAVING guard on the denominator."""
-    ensure_session_conf(spark)
     ev = (
         table(spark, sf_dir, "events")
         .filter(
@@ -1547,7 +1522,6 @@ def xa10_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     is then a 25-row aggregate and the row totals broadcast back for the
     exact-int share division. At 100 TB only the window stage is
     fact-sized — the matrix itself is |event_types|^2."""
-    ensure_session_conf(spark)
     ev = (
         table(spark, sf_dir, "events")
         .filter(
@@ -1632,7 +1606,6 @@ def xa11_peak_event_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     the key is the high-cardinality user id, so no partition outgrows an
     executor; a skewed celebrity user degrades to one fat sorted partition,
     the same posture as every sessionization operator here."""
-    ensure_session_conf(spark)
     ev = (
         table(spark, sf_dir, "events")
         .filter(F.col("ts").isNotNull() & F.col("user_id").isNotNull())
@@ -1724,7 +1697,6 @@ def xa12_interval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     self-join is O(n^2) per user and needs the same shuffle anyway. The
     n_intervals count rides the sweep rows (d = +1) so no second pass
     over the input and no join."""
-    ensure_session_conf(spark)
     iv = (
         table(spark, sf_dir, "events")
         .filter(

@@ -6,6 +6,11 @@ equivalent ANSI-SQL oracle string for the DuckDB differential check.
 Column names are aliased identically on both sides (the driver sorts columns
 by name before hashing values).
 
+``register`` is the one place that applies the session policy
+(``session.ensure_session_conf``: UTC, AQE, ``nanosAsLong``): it wraps every
+builder so the conf is set on the session before the builder plans, on
+every call. Builders do not call it themselves.
+
 Query *names* are the public contract: ``bench.py``, the benchmark and the
 tests resolve specs by name, so a rename is a breaking change.
 ``all_specs()`` serves the specs in registration order — the order of
@@ -15,11 +20,14 @@ order carries no other meaning.
 
 from __future__ import annotations
 
+import functools
 import importlib
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+
+from .session import ensure_session_conf
 
 Builder = Callable[[SparkSession, str], DataFrame]
 
@@ -52,7 +60,6 @@ class QuerySpec:
     name: str
     builder: Builder
     oracle: str | None  # DuckDB-runnable ANSI SQL; None => rows-only check
-    doc: str = ""
     bench: bool = False  # include in bench.py headline set
     tags: tuple[str, ...] = field(default_factory=tuple)
 
@@ -60,15 +67,20 @@ class QuerySpec:
 def register(
     name: str,
     oracle: str | None = None,
-    doc: str = "",
     bench: bool = False,
     tags: tuple[str, ...] = (),
 ) -> Callable[[Builder], Builder]:
     def deco(fn: Builder) -> Builder:
         if name in _REGISTRY:
             raise ValueError(f"duplicate query spec {name!r}")
-        _REGISTRY[name] = QuerySpec(name, fn, oracle, doc or (fn.__doc__ or ""), bench, tags)
-        return fn
+
+        @functools.wraps(fn)
+        def builder(spark: SparkSession, sf_dir: str) -> DataFrame:
+            ensure_session_conf(spark)
+            return fn(spark, sf_dir)
+
+        _REGISTRY[name] = QuerySpec(name, builder, oracle, bench, tags)
+        return builder
 
     return deco
 

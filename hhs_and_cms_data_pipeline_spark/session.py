@@ -9,6 +9,10 @@ Scale notes (100 TB design; tested on local[32]):
   match the DuckDB oracle.
 - Arrow enabled for the pandas interchange boundary (presentation edge and
   pandas UDFs) — never used in the relational hot path.
+
+A session the driver hands us gets the same runtime confs from
+``ensure_session_conf``, which ``registry.register`` applies before every
+builder call; builders do not call it themselves.
 """
 
 from __future__ import annotations
@@ -56,7 +60,9 @@ def ensure_session_conf(spark: SparkSession) -> SparkSession:
 
     The driver hands us its own SparkSession; correctness of the
     timestamp-bearing queries requires UTC, and the perf posture requires AQE.
-    Only session-level (runtime-settable) confs are touched.
+    Only session-level (runtime-settable) confs are touched. ``registry.register``
+    calls this before every registered builder, so a conf changed mid-session
+    is reset by the next builder; builders do not call it themselves.
     """
     for k, v in _SESSION_CONF.items():
         try:

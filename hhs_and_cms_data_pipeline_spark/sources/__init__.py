@@ -1,1 +1,1 @@
-from .tables import TABLES, load_all, spread, table  # noqa: F401
+from .tables import TABLES, spread, table  # noqa: F401

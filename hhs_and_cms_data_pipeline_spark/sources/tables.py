@@ -8,8 +8,6 @@ only needed columns in operators so `ReadSchema` stays narrow.
 
 from __future__ import annotations
 
-from types import SimpleNamespace
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -65,7 +63,3 @@ def spread(df: DataFrame) -> DataFrame:
     files and this round-robin shuffle of a small table is negligible."""
     spark = df.sparkSession
     return df.repartition(spark.sparkContext.defaultParallelism)
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> SimpleNamespace:
-    return SimpleNamespace(**{t: table(spark, sf_dir, t) for t in TABLES})

@@ -10,6 +10,10 @@ its DuckDB oracle at sf0.01 and compares bit-exactly — the same contract
 as tests/test_oracle_diff.py, packaged for quick ad-hoc checks of freshly
 touched queries without a pytest session.
 
+The session is deliberately foreign (America/Los_Angeles, AQE off), so the
+check also proves that the registry sets up the session the driver hands it
+(UTC, AQE, ``nanosAsLong``) rather than passing only because the host is UTC.
+
 Comparison is DELEGATED to tests/oracle_utils.compare_spark_duckdb — the
 same order-insensitive, bit-exact canonicalization the pytest gate uses —
 so the repo has exactly ONE comparison implementation (r8 VERDICT ask #3:
@@ -48,6 +52,8 @@ def main() -> int:
     spark = (
         SparkSession.builder.master("local[8]")
         .config("spark.sql.shuffle.partitions", "8")
+        .config("spark.sql.session.timeZone", "America/Los_Angeles")
+        .config("spark.sql.adaptive.enabled", "false")
         .getOrCreate()
     )
     n = len(entrymod.entry(spark).collect())

@@ -165,11 +165,11 @@ def test_half_imported_module_queries_are_pruned(monkeypatch, capsys):
         "_OPERATOR_MODULES",
         registry._OPERATOR_MODULES + (broken,),
     )
-    monkeypatch.setitem(
-        registry._REGISTRY,
-        "__orphan_query__",
-        registry.QuerySpec("__orphan_query__", orphan_builder, None),
-    )
+    # Register through the real decorator on a throwaway copy of the
+    # registry: the prune keys on the served builder's ``__module__``, which
+    # the session-conf wrapper must carry over from the wrapped function.
+    monkeypatch.setattr(registry, "_REGISTRY", dict(registry._REGISTRY))
+    registry.register("__orphan_query__")(orphan_builder)
     specs = registry.all_specs()
     assert "__orphan_query__" not in specs, (
         "a half-imported module's early registrations must be pruned"

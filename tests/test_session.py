@@ -36,9 +36,42 @@ def test_static_conf_is_swallowed(spark, monkeypatch):
 
 
 def test_good_confs_apply(spark):
-    S.ensure_session_conf(spark)
-    assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
-    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+    """A foreign session (non-UTC, AQE off) gets the policy confs three
+    ways: directly, through any builder registered with ``register`` (which
+    never calls ``ensure_session_conf`` itself), and through a real query's
+    builder at plan time."""
+    from hhs_and_cms_data_pipeline_spark import registry
+    from tests.conftest import SF_SMOKE
+
+    @registry.register("__conf_probe__")
+    def probe(spark, sf_dir):
+        return spark.range(1)
+
+    try:
+        ways = {
+            "ensure_session_conf": S.ensure_session_conf,
+            "registered builder": lambda s: probe(s, SF_SMOKE),
+            "r8_available_dates": lambda s: registry.all_specs()[
+                "r8_available_dates"
+            ].builder(s, SF_SMOKE),
+        }
+        foreign = {
+            "spark.sql.session.timeZone": "America/Los_Angeles",
+            "spark.sql.adaptive.enabled": "false",
+        }
+        saved = {k: spark.conf.get(k) for k in foreign}
+        for way, apply in ways.items():
+            try:
+                for k, v in foreign.items():
+                    spark.conf.set(k, v)
+                apply(spark)
+                assert spark.conf.get("spark.sql.session.timeZone") == "UTC", way
+                assert spark.conf.get("spark.sql.adaptive.enabled") == "true", way
+            finally:
+                for k, v in saved.items():
+                    spark.conf.set(k, v)
+    finally:
+        registry._REGISTRY.pop("__conf_probe__", None)
 
 
 def test_registered_query_names_are_stable():
