@@ -32,7 +32,12 @@ from pyspark.sql import types as T
 
 from ..functions.exact import sql_dsum
 from ..registry import register
-from ..sinks import append_new_keys, read_published, write_parquet_atomic
+from ..sinks import (
+    append_new_keys,
+    clear_published_versions,
+    read_published,
+    write_parquet_atomic,
+)
 from ..sources import table
 
 _IO_DIR = os.path.join(tempfile.gettempdir(), "spark_graft_io")
@@ -49,13 +54,6 @@ def _tagged_io_path(name: str, sf_dir: str) -> str:
 
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
     return os.path.join(_IO_DIR, f"{name}_{tag}")
-
-def _clear_published_versions(path: str) -> None:
-    """K1/K6/K9's deterministic-rerun reset — delegates to the sink-side
-    helper that owns the .__v__/.__link__ naming."""
-    from ..sinks import clear_published_versions
-
-    clear_published_versions(path)
 
 
 _NATION_CSV = os.path.join(_IO_DIR, "nation.csv")
@@ -341,7 +339,7 @@ def k1_partitioned_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     # documented cross-process race (_tagged_io_path) — two SFs running k1
     # concurrently would double-append or read a half-deleted dir
     path = _tagged_io_path("k1_nation", sf_dir)
-    _clear_published_versions(path)
+    clear_published_versions(path)
     src = table(spark, sf_dir, "nation").select("n_nationkey", "n_name", "n_regionkey")
     for _ in range(2):  # second append must be a no-op
         append_new_keys(spark, src, path, keys=["n_nationkey"], partition_by=["n_regionkey"])
@@ -842,7 +840,7 @@ def k6_time_travel_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sinks import read_published_version
 
     path = _tagged_io_path("k6_versions", sf_dir)
-    _clear_published_versions(path)  # deterministic rerun
+    clear_published_versions(path)  # deterministic rerun
     v1 = (
         table(spark, sf_dir, "nation")
         .groupBy("n_regionkey")
@@ -1077,7 +1075,7 @@ def k9_snapshot_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sinks import read_published_version
 
     path = _tagged_io_path("k9_versions", sf_dir)
-    _clear_published_versions(path)  # deterministic rerun
+    clear_published_versions(path)  # deterministic rerun
     v1 = table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     write_parquet_atomic(v1, path, gc_grace_seconds=3600.0)
     inserts = spark.range(3).select(

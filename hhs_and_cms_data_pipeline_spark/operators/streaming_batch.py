@@ -7,6 +7,12 @@ batch form gives the driver a DuckDB oracle for the windowing semantics.
 
 from __future__ import annotations
 
+import hashlib
+import os
+import shutil
+import tempfile
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -15,27 +21,29 @@ from .ingest_queries import _DRIFT_SCALE, _DRIFT_SPLIT
 from ..registry import register
 from ..sources import table
 
-def _run_drain(spark: SparkSession, start):
-    """Start and fully drain a bounded availableNow stream under the
-    streaming-specific partition count (streaming.stateful
-    .stream_state_partitions — rationale and the ST4 state-store A/B
-    there). For these foreachBatch drains the lever is the per-micro-batch
-    JOB width: every batch schedules scan/agg/merge stages at the session's
-    shuffle.partitions even though each batch carries KB-MB of data, so
-    the fixed per-task cost dominates (guide §2.5). Interleaved A/B at
-    sf0.1, whole builder timed, 5v5 both orders: drift median 4.19s →
-    3.89s, cms 4.28s → 4.02s (consistent medians, overlapping spreads —
-    a fixed-overhead trim, not an algorithmic change). Env-scaled via
-    $SPARK_GRAFT_STREAM_STATE_PARTITIONS on a real cluster; the conf is
-    set/restored around start()..awaitTermination only, so the readout
-    (which may scan the corpus, e.g. ST18's truth audit) keeps the
-    session's full parallelism."""
-    from ..streaming.stateful import stream_drain_confs
 
-    with stream_drain_confs(spark):
-        q = start()
-        q.awaitTermination()
-    return q
+@contextmanager
+def _staged_drain(spark: SparkSession, sf_dir: str, name: str):
+    """Scaffold of this module's bounded drains (ST4, ST11, ST14, ST16,
+    ST17, ST18, ST22, ST23). Stages events.parquet as chronological files,
+    makes a single-use checkpoint and yields ``(stage, ckpt, out)``; the
+    body drains the builder's own sink through streaming.stateful
+    (drain_stream, or a run_* runner). ``out`` is the builder's scratch
+    target ``<tempdir>/<name>_<sf tag>``, cleared first so a rerun is
+    deterministic. The checkpoint is removed on exit, also when the drain
+    fails: the result is read from the sink, never from the checkpoint."""
+    from ..sinks import clear_published_versions
+    from ..streaming.stateful import stage_chronological_files
+
+    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
+    out = os.path.join(tempfile.gettempdir(), f"{name}_{tag}")
+    clear_published_versions(out)
+    stage = stage_chronological_files(spark, sf_dir, f"{out}_stage")
+    ckpt = tempfile.mkdtemp(prefix=f"{name}_ckpt_")
+    try:
+        yield stage, ckpt, out
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
 
 
 # --------------------------------------------------------------------------
@@ -235,26 +243,12 @@ def stream_stateful_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     time-range files, consumed one file per micro-batch, per-user open-session
     state carried across batches, update-mode emission deduped to finals.
     The oracle is the plain batch SQL — the stateful pipeline must agree."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
+    from ..streaming.stateful import run_stateful_sessionize
 
-    from ..streaming.stateful import run_stateful_sessionize, stage_chronological_files
-
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    stage = os.path.join(tempfile.gettempdir(), f"stateful_sessions_{tag}")
-    ckpt = tempfile.mkdtemp(prefix="stateful_ckpt_")
-    stage_chronological_files(spark, sf_dir, stage)
-    try:
+    with _staged_drain(spark, sf_dir, "stateful_sessions") as (stage, ckpt, out):
         final, _ = run_stateful_sessionize(
-            spark, stage, ckpt, f"stateful_sessions_{tag}"
+            spark, stage, ckpt, os.path.basename(out)
         )
-    finally:
-        # final is served from the memory-sink table, not the checkpoint;
-        # the single-use checkpoint must go even when the drain FAILS, or
-        # every failed invocation leaks one /tmp dir
-        shutil.rmtree(ckpt, ignore_errors=True)
     return final
 
 
@@ -841,47 +835,19 @@ def stream_snapshot_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly what the oracle checks. This is the dashboard-table lifecycle
     at 100 TB: bounded aggregate state, atomic swap per refresh, no
     transactional store required."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     from ..sinks import read_published
-    from ..sources.tables import normalize_events_ts
-    from ..streaming.events import (
-        events_raw_schema,
-        stream_snapshot_sink,
-        tumbling_counts,
-    )
-    from ..streaming.stateful import stage_chronological_files
+    from ..streaming.events import stream_snapshot_sink, tumbling_counts
+    from ..streaming.stateful import drain_stream, read_staged_events
 
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    from ..sinks import clear_published_versions
-
-    stage = os.path.join(tempfile.gettempdir(), f"snapshot_stage_{tag}")
-    target = os.path.join(tempfile.gettempdir(), f"snapshot_counts_{tag}")
-    # symlink-aware reset: a bare rmtree on the published SYMLINK raises
-    # and ignore_errors made that a silent no-op — dead code, not cleanup
-    clear_published_versions(target)
-    ckpt = tempfile.mkdtemp(prefix="snapshot_ckpt_")
-    stage_chronological_files(spark, sf_dir, stage)
-    raw = (
-        spark.readStream.schema(events_raw_schema(spark, stage))
-        .option("maxFilesPerTrigger", 1)
-        .format("parquet")
-        .load(stage)
-    )
-    _run_drain(spark, lambda: stream_snapshot_sink(
-        tumbling_counts(normalize_events_ts(raw)),
-        target,
-        ckpt,
-        query_name=f"snapshot_publish_{tag}",
-    ))
-    # The checkpoint is single-use (availableNow drain over a fixed stage):
-    # leaving it would leak one /tmp dir per invocation.
-    shutil.rmtree(ckpt, ignore_errors=True)
+    with _staged_drain(spark, sf_dir, "snapshot_counts") as (stage, ckpt, out):
+        drain_stream(spark, lambda: stream_snapshot_sink(
+            tumbling_counts(read_staged_events(spark, stage)),
+            out,
+            ckpt,
+            query_name=os.path.basename(out),
+        ))
     return (
-        read_published(spark, target)
+        read_published(spark, out)
         .select("window_start", "event_type", "n_events", "sum_value")
         .orderBy("window_start", "event_type")
     )
@@ -1099,8 +1065,6 @@ def _stored_for_merge(batch_df, target: str, batch_id: int, run_id):
 
     Returns ``(stored_df_or_None, is_replay)``.
     """
-    import os
-
     from ..sinks import read_published
 
     if not os.path.islink(target):
@@ -1234,43 +1198,20 @@ def stream_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet between batches and only converts to double at the read-out
     edge, so the maintained store is bit-identical to the from-scratch
     aggregate no matter how arrival slices the stream."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     from ..sinks import read_published
-    from ..streaming.events import events_raw_schema
-    from ..streaming.stateful import stage_chronological_files
+    from ..streaming.stateful import drain_stream, read_staged_events
 
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    stage = os.path.join(tempfile.gettempdir(), f"incr_stage_{tag}")
-    target = os.path.join(tempfile.gettempdir(), f"incr_rollup_{tag}")
-    from ..sinks import clear_published_versions
-
-    clear_published_versions(target)  # deterministic rerun
-    ckpt = tempfile.mkdtemp(prefix="incr_ckpt_")
-    stage_chronological_files(spark, sf_dir, stage)
-    raw = (
-        spark.readStream.schema(events_raw_schema(spark, stage))
-        .option("maxFilesPerTrigger", 1)
-        .format("parquet")
-        .load(stage)
-    )
-
-    _merge = make_rollup_merger(target, run_id=ckpt)  # ST14 merge body (factory above)
-
-    q = _run_drain(spark, lambda: (
-        raw.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .queryName(f"incr_rollup_{tag}")
-        .start()
-    ))
-    # single-use checkpoint (availableNow drain over a fixed stage)
-    shutil.rmtree(ckpt, ignore_errors=True)
+    with _staged_drain(spark, sf_dir, "incr_rollup") as (stage, ckpt, out):
+        drain_stream(spark, lambda: (
+            read_staged_events(spark, stage)
+            .writeStream.foreachBatch(make_rollup_merger(out, run_id=ckpt))
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .queryName(os.path.basename(out))
+            .start()
+        ))
     return (
-        read_published(spark, target)
+        read_published(spark, out)
         .select(
             "user_id",
             "event_type",
@@ -1618,8 +1559,6 @@ def stream_disorder_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 def make_hll_merger(target: str):
     """The ST16 foreachBatch body as a module-level factory (same contract
     as make_rollup_merger, so tests drive the exact production merge)."""
-    import os
-
     from ..sinks import read_published, write_parquet_atomic
     from .sketch import hll_batch_registers
 
@@ -1690,38 +1629,20 @@ def stream_hll_registers(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows; the merge joins 64 rows against 64 rows; publishes are atomic
     symlink swaps. State never grows with cardinality — THE reason this
     replaces stream COUNT(DISTINCT) at 100 TB."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
-    from ..sinks import clear_published_versions, read_published
-    from ..streaming.events import events_raw_schema
-    from ..streaming.stateful import stage_chronological_files
+    from ..sinks import read_published
+    from ..streaming.stateful import drain_stream, read_staged_events
     from .sketch import _HLL_M, hll_estimate_frame
 
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    stage = os.path.join(tempfile.gettempdir(), f"hll_stage_{tag}")
-    target = os.path.join(tempfile.gettempdir(), f"hll_store_{tag}")
-    clear_published_versions(target)  # deterministic rerun
-    ckpt = tempfile.mkdtemp(prefix="hll_ckpt_")
-    stage_chronological_files(spark, sf_dir, stage)
-    raw = (
-        spark.readStream.schema(events_raw_schema(spark, stage))
-        .option("maxFilesPerTrigger", 1)
-        .format("parquet")
-        .load(stage)
-    )
-    q = _run_drain(spark, lambda: (
-        raw.writeStream.foreachBatch(make_hll_merger(target))
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .queryName(f"hll_registers_{tag}")
-        .start()
-    ))
-    # single-use checkpoint (availableNow drain over a fixed stage)
-    shutil.rmtree(ckpt, ignore_errors=True)
-    stored = read_published(spark, target)
+    with _staged_drain(spark, sf_dir, "hll_store") as (stage, ckpt, out):
+        drain_stream(spark, lambda: (
+            read_staged_events(spark, stage)
+            .writeStream.foreachBatch(make_hll_merger(out))
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .queryName(os.path.basename(out))
+            .start()
+        ))
+    stored = read_published(spark, out)
     spine = spark.range(_HLL_M).select(F.col("id").alias("register"))
     reg = (
         spine.join(F.broadcast(stored), spine.register == stored.idx, "left")
@@ -1858,41 +1779,21 @@ def stream_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     store; publishes are atomic symlink swaps. The drift report itself
     never touches the corpus — it is a pure function of the maintained
     counts."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
-    from ..sinks import clear_published_versions, read_published
-    from ..streaming.events import events_raw_schema
-    from ..streaming.stateful import stage_chronological_files
-    from ..sources.tables import normalize_events_ts
+    from ..sinks import read_published
+    from ..streaming.stateful import drain_stream, read_staged_events
     from .ingest_queries import drift_from_counts
 
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    stage = os.path.join(tempfile.gettempdir(), f"drift_stage_{tag}")
-    target = os.path.join(tempfile.gettempdir(), f"drift_store_{tag}")
-    clear_published_versions(target)  # deterministic rerun
-    ckpt = tempfile.mkdtemp(prefix="drift_ckpt_")
-    stage_chronological_files(spark, sf_dir, stage)
-    raw = (
-        spark.readStream.schema(events_raw_schema(spark, stage))
-        .option("maxFilesPerTrigger", 1)
-        .format("parquet")
-        .load(stage)
-    )
-    q = _run_drain(spark, lambda: (
-        normalize_events_ts(raw)
-        .writeStream.foreachBatch(make_drift_merger(target, run_id=ckpt))
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .queryName(f"drift_monitor_{tag}")
-        .start()
-    ))
-    # single-use checkpoint (availableNow drain over a fixed stage)
-    shutil.rmtree(ckpt, ignore_errors=True)
+    with _staged_drain(spark, sf_dir, "drift_store") as (stage, ckpt, out):
+        drain_stream(spark, lambda: (
+            read_staged_events(spark, stage)
+            .writeStream.foreachBatch(make_drift_merger(out, run_id=ckpt))
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .queryName(os.path.basename(out))
+            .start()
+        ))
     return drift_from_counts(
-        read_published(spark, target).select("event_type", "n_ref", "n_cur")
+        read_published(spark, out).select("event_type", "n_ref", "n_cur")
     )
 
 
@@ -1973,38 +1874,20 @@ def stream_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     touches the corpus only for the truth audit (the part the sketch
     replaces in production). State is O(d*w), never O(keys) — THE reason
     this replaces streaming per-key COUNT(*) at 100 TB."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
-    from ..sinks import clear_published_versions, read_published
-    from ..streaming.events import events_raw_schema
-    from ..streaming.stateful import stage_chronological_files
+    from ..sinks import read_published
+    from ..streaming.stateful import drain_stream, read_staged_events
     from .sketch import cms_probe_report, cms_truth_topk
 
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    stage = os.path.join(tempfile.gettempdir(), f"cms_stage_{tag}")
-    target = os.path.join(tempfile.gettempdir(), f"cms_store_{tag}")
-    clear_published_versions(target)  # deterministic rerun
-    ckpt = tempfile.mkdtemp(prefix="cms_ckpt_")
-    stage_chronological_files(spark, sf_dir, stage)
-    raw = (
-        spark.readStream.schema(events_raw_schema(spark, stage))
-        .option("maxFilesPerTrigger", 1)
-        .format("parquet")
-        .load(stage)
-    )
-    q = _run_drain(spark, lambda: (
-        raw.writeStream.foreachBatch(make_cms_merger(target, run_id=ckpt))
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .queryName(f"cms_cells_{tag}")
-        .start()
-    ))
-    # single-use checkpoint (availableNow drain over a fixed stage)
-    shutil.rmtree(ckpt, ignore_errors=True)
-    cells = read_published(spark, target).select("r", "bucket", "c")
+    with _staged_drain(spark, sf_dir, "cms_store") as (stage, ckpt, out):
+        drain_stream(spark, lambda: (
+            read_staged_events(spark, stage)
+            .writeStream.foreachBatch(make_cms_merger(out, run_id=ckpt))
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .queryName(os.path.basename(out))
+            .start()
+        ))
+    cells = read_published(spark, out).select("r", "bucket", "c")
     ev = table(spark, sf_dir, "events").filter(
         F.col("user_id").isNotNull()
     ).select(F.col("user_id").cast("string").alias("s"))
@@ -2273,42 +2156,26 @@ def stream_manifest_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     manifest-committed JSONL sink and aggregate the committed rows per
     type (block comment above; exactly-once by uuid parts + idempotent
     per-batch manifest commits)."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     from pyspark.sql import types as T
 
-    from ..sources.manifest_sink import manifest_files, manifest_stream_writer
-    from ..streaming.events import events_raw_schema
-    from ..streaming.stateful import stage_chronological_files
-
     from ..functions.exact import dsum
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    stage = os.path.join(tempfile.gettempdir(), f"manifest_stage_{tag}")
-    target = os.path.join(tempfile.gettempdir(), f"manifest_sink_{tag}")
-    shutil.rmtree(target, ignore_errors=True)
-    ckpt = tempfile.mkdtemp(prefix="manifest_ckpt_")
-    stage_chronological_files(spark, sf_dir, stage)
-    raw = (
-        spark.readStream.schema(events_raw_schema(spark, stage))
-        .option("maxFilesPerTrigger", 1)
-        .format("parquet")
-        .load(stage)
-        .filter(F.col("event_type").isNotNull())
-        .select("event_id", "user_id", "event_type", "value")
-    )
-    q = _run_drain(spark, lambda: (
-        manifest_stream_writer(
-            raw, target, audit_column="value", checkpointLocation=ckpt
-        )
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    ))
-    # single-use checkpoint (availableNow drain over a fixed stage)
-    shutil.rmtree(ckpt, ignore_errors=True)
+    from ..sources.manifest_sink import manifest_files, manifest_stream_writer
+    from ..streaming.stateful import drain_stream, read_staged_events
+
+    with _staged_drain(spark, sf_dir, "manifest_sink") as (stage, ckpt, out):
+        drain_stream(spark, lambda: (
+            manifest_stream_writer(
+                read_staged_events(spark, stage)
+                .filter(F.col("event_type").isNotNull())
+                .select("event_id", "user_id", "event_type", "value"),
+                out,
+                audit_column="value",
+                checkpointLocation=ckpt,
+            )
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start()
+        ))
     schema = T.StructType(
         [
             T.StructField("event_id", T.LongType()),
@@ -2317,7 +2184,7 @@ def stream_manifest_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("value", T.DoubleType()),
         ]
     )
-    rows = spark.read.schema(schema).json(manifest_files(target))
+    rows = spark.read.schema(schema).json(manifest_files(out))
     return (
         rows.groupBy("event_type")
         .agg(
@@ -2414,37 +2281,18 @@ def stream_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     (availableNow) maintaining the daily-count store additively via
     foreachBatch, then run XT8's CUSUM readout on the maintained store
     (module comment: bit-identical to the batch detector)."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
-    from ..sinks import clear_published_versions, read_published
-    from ..sources.tables import normalize_events_ts
-    from ..streaming.events import events_raw_schema
-    from ..streaming.stateful import stage_chronological_files
+    from ..sinks import read_published
+    from ..streaming.stateful import drain_stream, read_staged_events
     from .relational_ext import cusum_from_daily
 
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    stage = os.path.join(tempfile.gettempdir(), f"cusum_stage_{tag}")
-    target = os.path.join(tempfile.gettempdir(), f"cusum_daily_{tag}")
-    clear_published_versions(target)  # deterministic rerun
-    ckpt = tempfile.mkdtemp(prefix="cusum_ckpt_")
-    stage_chronological_files(spark, sf_dir, stage)
-    raw = normalize_events_ts(
-        spark.readStream.schema(events_raw_schema(spark, stage))
-        .option("maxFilesPerTrigger", 1)
-        .format("parquet")
-        .load(stage)
-    )
-    q = _run_drain(spark, lambda: (
-        raw.writeStream.foreachBatch(make_daily_count_merger(target, run_id=ckpt))
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .queryName(f"cusum_daily_{tag}")
-        .start()
-    ))
-    # single-use checkpoint (availableNow drain over a fixed stage)
-    shutil.rmtree(ckpt, ignore_errors=True)
-    daily = read_published(spark, target).select("event_type", "d", "n")
+    with _staged_drain(spark, sf_dir, "cusum_daily") as (stage, ckpt, out):
+        drain_stream(spark, lambda: (
+            read_staged_events(spark, stage)
+            .writeStream.foreachBatch(make_daily_count_merger(out, run_id=ckpt))
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .queryName(os.path.basename(out))
+            .start()
+        ))
+    daily = read_published(spark, out).select("event_type", "d", "n")
     return cusum_from_daily(daily)

@@ -373,6 +373,7 @@ def partitioned_orders_path(spark: SparkSession, sf_dir: str) -> str:
       fresh tag and the old layout is simply orphaned."""
     import os
     import shutil
+    import tempfile
     import uuid
 
     src = os.path.join(sf_dir, "orders.parquet")
@@ -381,9 +382,7 @@ def partitioned_orders_path(spark: SparkSession, sf_dir: str) -> str:
         f"{sf_dir}|{st.st_mtime_ns}|{st.st_size}".encode()
     ).hexdigest()[:12]
     path = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        "spark-warehouse",
-        f"orders_by_year_{tag}",
+        tempfile.gettempdir(), "spark_graft_io", f"orders_by_year_{tag}"
     )
     if not os.path.exists(path):
         staging = f"{path}.__staging__{uuid.uuid4().hex}"

@@ -18,6 +18,7 @@ from __future__ import annotations
 
 import os
 import tempfile
+from collections.abc import Mapping
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -83,20 +84,30 @@ def tumbling_counts(
 
 
 def run_available_now(
-    result: DataFrame, query_name: str, checkpoint_dir: str
-) -> DataFrame:
-    """Drain all available input in micro-batches, then stop (batch-equivalent
-    semantics with streaming bookkeeping). Returns the materialized result."""
-    q = (
-        result.writeStream.format("memory")
+    result: DataFrame,
+    query_name: str,
+    checkpoint_dir: str,
+    output_mode: str = "complete",
+    confs: Mapping[str, str] | None = None,
+) -> tuple[DataFrame, int]:
+    """Drain all available input into the memory sink ``query_name`` in
+    micro-batches, then stop (batch-equivalent semantics with streaming
+    bookkeeping), under ``stream_drain_confs(spark, confs)``. Returns the
+    emitted table and the number of micro-batches that carried input."""
+    from .stateful import drain_stream  # stateful imports this module
+
+    q = drain_stream(
+        result.sparkSession,
+        lambda: result.writeStream.format("memory")
         .queryName(query_name)
-        .outputMode("complete")
+        .outputMode(output_mode)
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
-        .start()
+        .start(),
+        confs,
     )
-    q.awaitTermination()
-    return result.sparkSession.table(query_name)
+    n_batches = len([p for p in q.recentProgress if p["numInputRows"] > 0])
+    return result.sparkSession.table(query_name), n_batches
 
 
 def _plan_has_aggregate(result: DataFrame) -> bool:

@@ -80,37 +80,21 @@ def run_profile_maintenance(spark, stage_dir: str, checkpoint_dir: str, query_na
     emissions only grow, so the final profile is the max-cnt row per user."""
     from pyspark.sql import functions as F
 
-    from ..sources.tables import normalize_events_ts
-    from .events import events_raw_schema
-    from .stateful import ROCKSDB_STATE_STORE, stream_drain_confs
+    from .events import run_available_now
+    from .stateful import ROCKSDB_STATE_STORE, read_staged_events
 
-    raw = (
-        spark.readStream.schema(events_raw_schema(spark, stage_dir))
-        .option("maxFilesPerTrigger", 1)
-        .format("parquet")
-        .load(stage_dir)
-    )
-    stream = normalize_events_ts(raw).select("user_id", "value")
+    stream = read_staged_events(spark, stage_dir).select("user_id", "value")
     out = stream.groupBy("user_id").transformWithStateInPandas(
         statefulProcessor=UserProfileProcessor(),
         outputStructType=PROFILE_OUTPUT_DDL,
         outputMode="Update",
         timeMode="None",
     )
-    with stream_drain_confs(spark, ROCKSDB_STATE_STORE):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(query_name)
-            .outputMode("update")
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    n_batches = len([p for p in q.recentProgress if p["numInputRows"] > 0])
+    emitted, n_batches = run_available_now(
+        out, query_name, checkpoint_dir, "update", ROCKSDB_STATE_STORE
+    )
     final = (
-        spark.table(query_name)
-        .groupBy("user_id")
+        emitted.groupBy("user_id")
         .agg(F.max("cnt").alias("cnt"), F.max_by("sum_u6", "cnt").alias("sum_u6"))
     )
     return final, n_batches

@@ -86,21 +86,14 @@ def run_recent_events(spark, stage_dir: str, checkpoint_dir: str, query_name: st
     monotone per user, so the final state is the max-n_seen emission."""
     from pyspark.sql import functions as F
 
-    from ..sources.tables import normalize_events_ts
-    from .events import events_raw_schema
-    from .stateful import ROCKSDB_STATE_STORE, stream_drain_confs
+    from .events import run_available_now
+    from .stateful import ROCKSDB_STATE_STORE, read_staged_events
 
-    raw = (
-        spark.readStream.schema(events_raw_schema(spark, stage_dir))
-        .option("maxFilesPerTrigger", 1)
-        .format("parquet")
-        .load(stage_dir)
-    )
     # NULL ts/event_id would arrive as NaN in the pandas batch and crash
     # the processor's int() coercion; the contract (shared with the batch
     # twin and its oracle) excludes them up front.
     stream = (
-        normalize_events_ts(raw)
+        read_staged_events(spark, stage_dir)
         .filter(F.col("ts").isNotNull() & F.col("event_id").isNotNull())
         .select(
             "user_id",
@@ -115,18 +108,9 @@ def run_recent_events(spark, stage_dir: str, checkpoint_dir: str, query_name: st
         outputMode="Update",
         timeMode="None",
     )
-    with stream_drain_confs(spark, ROCKSDB_STATE_STORE):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(query_name)
-            .outputMode("update")
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    n_batches = len([p for p in q.recentProgress if p["numInputRows"] > 0])
-    emissions = spark.table(query_name)
+    emissions, n_batches = run_available_now(
+        out, query_name, checkpoint_dir, "update", ROCKSDB_STATE_STORE
+    )
     # self-join of the memory view needs distinct attribute ids
     last = (
         spark.table(query_name)

@@ -26,10 +26,12 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..sources.tables import normalize_events_ts
-from .events import events_raw_schema
+from .events import events_raw_schema, run_available_now
+
 
 def stream_state_partitions(spark: SparkSession) -> int:
     """State-store partition count for the stateful streaming drains
@@ -73,12 +75,12 @@ def stream_drain_confs(
 ) -> Iterator[None]:
     """Run a bounded drain under ``stream_state_partitions`` (plus any
     ``extra`` confs) and restore the session's prior values on exit, even
-    when the drain fails. Enter it around ``start()``..``awaitTermination()``
-    only: the query binds its confs when it starts (the state store pins
-    the partition count in the checkpoint at the first batch), so building
-    the stream outside the scope cannot leak the reduced width into the
-    shared session, and the readout after the drain keeps its full
-    parallelism."""
+    when the drain fails. Enter it around the start and drain of the query
+    only, as drain_stream does: the query binds its confs when it starts
+    (the state store pins the partition count in the checkpoint at the
+    first batch), so building the stream outside the scope cannot leak the
+    reduced width into the shared session, and the readout after the drain
+    keeps its full parallelism."""
     confs = {
         "spark.sql.shuffle.partitions": str(stream_state_partitions(spark)),
         **(extra or {}),
@@ -94,6 +96,31 @@ def stream_drain_confs(
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
+
+
+def drain_stream(
+    spark: SparkSession, start, confs: Mapping[str, str] | None = None
+) -> StreamingQuery:
+    """Start a bounded availableNow stream with ``start()`` and drain it to
+    completion under ``stream_drain_confs(spark, confs)``; returns the
+    finished query. Every bounded drain in the package goes through here.
+
+    Besides the state-store width (stream_state_partitions), the lever for
+    the stateless foreachBatch drains is the per-micro-batch JOB width:
+    every batch schedules scan/agg/merge stages at the session's
+    shuffle.partitions even though each batch carries KB-MB of data, so
+    the fixed per-task cost dominates (guide §2.5). Interleaved A/B at
+    sf0.1, whole builder timed, 5v5 both orders: drift median 4.19s →
+    3.89s, cms 4.28s → 4.02s (consistent medians, overlapping spreads —
+    a fixed-overhead trim, not an algorithmic change). Env-scaled via
+    $SPARK_GRAFT_STREAM_STATE_PARTITIONS on a real cluster; the confs
+    cover the start and the drain only, so the readout (which may scan
+    the corpus, e.g. ST18's truth audit) keeps the session's full
+    parallelism."""
+    with stream_drain_confs(spark, confs):
+        q = start()
+        q.awaitTermination()
+    return q
 
 
 _GAP_US = 30 * 60 * 1_000_000  # 30 min in us; ts travels as int64 MICROS
@@ -194,6 +221,18 @@ def stage_chronological_files(spark: SparkSession, sf_dir: str, stage_dir: str, 
     return stage_dir
 
 
+def read_staged_events(spark: SparkSession, stage_dir: str) -> DataFrame:
+    """Open a stage_chronological_files dir as the events stream, one file
+    per micro-batch (in mtime order, i.e. chronological), with ``ts``
+    normalized exactly as the batch path does."""
+    return normalize_events_ts(
+        spark.readStream.schema(events_raw_schema(spark, stage_dir))
+        .option("maxFilesPerTrigger", 1)
+        .format("parquet")
+        .load(stage_dir)
+    )
+
+
 def run_stateful_sessionize(
     spark: SparkSession, stage_dir: str, checkpoint_dir: str, query_name: str
 ) -> tuple[DataFrame, int]:
@@ -204,14 +243,8 @@ def run_stateful_sessionize(
     (stream_state_partitions — rationale and A/B numbers there), scoped by
     stream_drain_confs to the bounded availableNow drain; the single-use
     checkpoint means no later run can see a mismatched pinned count."""
-    raw = (
-        spark.readStream.schema(events_raw_schema(spark, stage_dir))
-        .option("maxFilesPerTrigger", 1)
-        .format("parquet")
-        .load(stage_dir)
-    )
     stream = (
-        normalize_events_ts(raw)
+        read_staged_events(spark, stage_dir)
         # null-ts rows are DROPPED to match the oracle's WHERE ts IS NOT
         # NULL (_SQL_SESSIONIZED_CTES): without the filter, unix_micros
         # yields NULL -> pandas NaN -> astype("int64") raises inside the
@@ -232,22 +265,13 @@ def run_stateful_sessionize(
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    with stream_drain_confs(spark):
-        q = (
-            sessions.writeStream.format("memory")
-            .queryName(query_name)
-            .outputMode("update")
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    n_batches = len([p for p in q.recentProgress if p["numInputRows"] > 0])
+    emitted, n_batches = run_available_now(
+        sessions, query_name, checkpoint_dir, "update"
+    )
     # update-mode log: the last emission per (user, session) is the biggest —
     # sessions only grow — so max() collapses snapshots into finals.
     final = (
-        spark.table(query_name)
-        .groupBy("user_id", "session_seq")
+        emitted.groupBy("user_id", "session_seq")
         .agg(
             F.min("start_us").alias("start_us"),
             F.max("end_us").alias("end_us"),

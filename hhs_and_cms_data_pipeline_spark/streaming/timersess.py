@@ -103,19 +103,11 @@ def run_timer_sessions(spark, stage_dir: str, checkpoint_dir: str, query_name: s
     sessions DataFrame, micro-batch count)."""
     from pyspark.sql import functions as F
 
-    from ..sources.tables import normalize_events_ts
-    from .events import events_raw_schema
-    from .stateful import ROCKSDB_STATE_STORE, stream_drain_confs
+    from .events import run_available_now
+    from .stateful import ROCKSDB_STATE_STORE, read_staged_events
 
-
-    raw = (
-        spark.readStream.schema(events_raw_schema(spark, stage_dir))
-        .option("maxFilesPerTrigger", 1)
-        .format("parquet")
-        .load(stage_dir)
-    )
     stream = (
-        normalize_events_ts(raw)
+        read_staged_events(spark, stage_dir)
         .withWatermark("ts", WATERMARK_DELAY)
         .select(
             "user_id",
@@ -129,15 +121,6 @@ def run_timer_sessions(spark, stage_dir: str, checkpoint_dir: str, query_name: s
         outputMode="Append",
         timeMode="EventTime",
     )
-    with stream_drain_confs(spark, ROCKSDB_STATE_STORE):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(query_name)
-            .outputMode("append")
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    n_batches = len([p for p in q.recentProgress if p["numInputRows"] > 0])
-    return spark.table(query_name), n_batches
+    return run_available_now(
+        out, query_name, checkpoint_dir, "append", ROCKSDB_STATE_STORE
+    )

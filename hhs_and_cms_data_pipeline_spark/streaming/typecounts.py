@@ -94,19 +94,12 @@ def run_type_counts(
     micro-batch."""
     from pyspark.sql import functions as F
 
-    from ..sources.tables import normalize_events_ts
-    from .events import events_raw_schema
-    from .stateful import ROCKSDB_STATE_STORE, stream_drain_confs
+    from .events import run_available_now
+    from .stateful import ROCKSDB_STATE_STORE, read_staged_events
 
-    raw = (
-        spark.readStream.schema(events_raw_schema(spark, stage_dir))
-        .option("maxFilesPerTrigger", 1)
-        .format("parquet")
-        .load(stage_dir)
-    )
     # match the batch twin's NULL policy: n_seen counts TYPED events only
     stream = (
-        normalize_events_ts(raw)
+        read_staged_events(spark, stage_dir)
         .filter(F.col("event_type").isNotNull())
         .select("user_id", "event_type")
     )
@@ -119,18 +112,9 @@ def run_type_counts(
             initial_state.groupBy("user_id") if initial_state is not None else None
         ),
     )
-    with stream_drain_confs(spark, ROCKSDB_STATE_STORE):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(query_name)
-            .outputMode("update")
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    n_batches = len([p for p in q.recentProgress if p["numInputRows"] > 0])
-    emissions = spark.table(query_name)
+    emissions, n_batches = run_available_now(
+        out, query_name, checkpoint_dir, "update", ROCKSDB_STATE_STORE
+    )
     last = (
         spark.table(query_name)
         .groupBy(F.col("user_id").alias("l_user_id"))

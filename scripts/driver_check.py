@@ -5,10 +5,10 @@ Usage:
     PYTHONPATH=. python scripts/driver_check.py [name ...]
 
 Runs `__spark_entry__.entry()` as a smoke, then for each requested query
-name (default: a fixed 8-name spot sample) executes the Spark builder AND
-its DuckDB oracle at sf0.01 and compares bit-exactly — the same contract
-as tests/test_oracle_diff.py, packaged for quick ad-hoc checks of freshly
-touched queries without a pytest session.
+name (default: a fixed 9-name spot sample, one of them a streaming drain)
+executes the Spark builder AND its DuckDB oracle at sf0.01 and compares
+bit-exactly — the same contract as tests/test_oracle_diff.py, packaged for
+quick ad-hoc checks of freshly touched queries without a pytest session.
 
 The session is deliberately foreign (America/Los_Angeles, AQE off), so the
 check also proves that the registry sets up the session the driver hands it
@@ -37,6 +37,7 @@ DEFAULT_SAMPLE = [
     "sim_radius_search",
     "curation_hashed_linear_score",
     "u4_debounce_dedup",
+    "stream_hll_registers",
 ]
 
 

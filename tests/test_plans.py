@@ -94,11 +94,20 @@ def test_bucketed_join_has_no_shuffle(spark, specs):
 
 
 def test_partitioned_fact_prunes_directories(spark, specs):
+    import os
+    import tempfile
+
     from hhs_and_cms_data_pipeline_spark.operators.windows_scale import (
+        partitioned_orders_path,
         pruned_year_scan,
     )
 
     specs["partition_pruned_scan"].builder(spark, SF_SMOKE)  # materialize
+    # the layout is builder scratch: under the temp dir, never the checkout
+    path = os.path.realpath(partitioned_orders_path(spark, SF_SMOKE))
+    repo = os.path.realpath(os.path.join(os.path.dirname(__file__), ".."))
+    assert path.startswith(os.path.realpath(tempfile.gettempdir()) + os.sep)
+    assert not path.startswith(repo + os.sep)
     plan = formatted_plan(pruned_year_scan(spark, SF_SMOKE))
     assert "PartitionFilters" in plan and "o_year" in plan.split("PartitionFilters")[1][:200], (
         "year predicate must prune at the partition level"

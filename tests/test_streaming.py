@@ -24,7 +24,8 @@ def _canon(rows):
 def test_available_now_matches_batch(spark, tmp_path):
     stream = read_events_stream(spark, SF_SMOKE)
     result = tumbling_counts(stream)
-    out = run_available_now(result, "t_stream_hourly", str(tmp_path / "ckpt"))
+    out, n_batches = run_available_now(result, "t_stream_hourly", str(tmp_path / "ckpt"))
+    assert n_batches == 1  # one staged file, no per-trigger file cap
 
     from hhs_and_cms_data_pipeline_spark.registry import all_specs
 
@@ -102,7 +103,7 @@ def test_stream_static_enrichment_matches_batch(spark, tmp_path):
         )
         .select(F.col("w.start").alias("window_start"), "nation", "n_events", "sum_value")
     )
-    out = run_available_now(enriched, "t_stream_enrich", str(tmp_path / "ckpt"))
+    out, _ = run_available_now(enriched, "t_stream_enrich", str(tmp_path / "ckpt"))
     batch = all_specs()["stream_enrich_tumbling"].builder(spark, SF_SMOKE)
     canon = lambda rows: sorted(
         (str(r["window_start"]), r["nation"], r["n_events"], repr(r["sum_value"]))
@@ -1160,7 +1161,7 @@ def test_stream_ohlc_daily_matches_batch(spark, tmp_path):
         F.count(F.lit(1)).cast("long").alias("n_events"),
         dsum("value", "sum_value"),
     )
-    out = run_available_now(bars, "t_stream_ohlc", str(tmp_path / "ckpt"))
+    out, _ = run_available_now(bars, "t_stream_ohlc", str(tmp_path / "ckpt"))
     batch = all_specs()["xt5_ohlc_daily"].builder(spark, SF_SMOKE)
     canon = lambda rows: sorted(  # noqa: E731
         (
@@ -1291,3 +1292,38 @@ def test_malformed_state_partitions_env_names_the_variable(monkeypatch):
         stream_state_partitions(None)
     monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "6")
     assert stream_state_partitions(None) == 6
+
+
+@pytest.mark.parametrize("case", ["hll", "cusum"])
+def test_failed_drain_removes_its_checkpoint(spark, tmp_path, monkeypatch, case):
+    """A drain builder that fails must still remove its single-use
+    checkpoint: ``hll`` fails inside the first micro-batch (the
+    foreachBatch merge raises), ``cusum`` while building its stream (the
+    schema probe raises)."""
+    import tempfile
+
+    from hhs_and_cms_data_pipeline_spark.operators import streaming_batch
+    from hhs_and_cms_data_pipeline_spark.streaming import events, stateful
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    if case == "hll":
+
+        def broken_merger(target):
+            def _merge(batch_df, batch_id):
+                raise RuntimeError("injected: merge failed")
+
+            return _merge
+
+        monkeypatch.setattr(streaming_batch, "make_hll_merger", broken_merger)
+        build = streaming_batch.stream_hll_registers
+    else:
+
+        def broken_schema(spark, src):
+            raise RuntimeError("injected: schema probe failed")
+
+        monkeypatch.setattr(events, "events_raw_schema", broken_schema)
+        monkeypatch.setattr(stateful, "events_raw_schema", broken_schema)
+        build = streaming_batch.stream_cusum_changepoint
+    with pytest.raises(Exception, match="injected"):
+        build(spark, SF_SMOKE)
+    assert not list(tmp_path.rglob("*ckpt*"))
