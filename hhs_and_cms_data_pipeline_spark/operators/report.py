@@ -15,7 +15,6 @@ are bit-identical to the DuckDB oracle and invariant to partitioning.
 from __future__ import annotations
 
 import datetime
-import weakref
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -29,7 +28,7 @@ from ..functions.exact import (
     sql_round1,
 )
 from ..registry import register
-from ..sources import table
+from ..sources import derived, table
 
 # "Selected date" analogue of the report's date picker (weekly-report.py:536).
 CUTOFF = "2000-06-01"
@@ -210,17 +209,6 @@ ORDER BY 1
 """
 
 
-# The 5-newest-weeks set per (session, sf_dir): deterministic for fixed
-# input files, so computing it once per session is safe; recomputing it per
-# run was the r2 bench creep round-3 VERDICT item 7 flagged.
-# Keyed on the LIVE session object (weakly): a plain dict keyed on
-# id(spark) could serve a stale week set if a dead session's id were
-# recycled; the weak key also lets an entry die with its session.
-_R2_WEEKS: "weakref.WeakKeyDictionary[SparkSession, dict[str, list]]" = (
-    weakref.WeakKeyDictionary()
-)
-
-
 @register(
     "r2_recent_weeks_summary",
     oracle=_R2_ORACLE,
@@ -250,10 +238,11 @@ def r2_recent_weeks_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
             "l_shipdate",
         )
     )
-    per_session = _R2_WEEKS.setdefault(spark, {})
-    weeks = per_session.get(sf_dir)
-    if weeks is None:
-        weeks = [
+    # memoized: the page reruns r2 on every render, and recollecting the
+    # week set each time costs two jobs
+    weeks = derived(
+        spark, sf_dir, "r2_recent_weeks", ("lineitem",),
+        lambda: [
             r[0]
             for r in (
                 li.filter(F.col("l_shipdate") <= F.lit(CUTOFF).cast("timestamp"))
@@ -263,8 +252,8 @@ def r2_recent_weeks_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .limit(5)
                 .collect()
             )
-        ]
-        per_session[sf_dir] = weeks
+        ],
+    )
     disc = F.col("l_extendedprice") * (F.lit(1) - F.col("l_discount"))
     agg = [
         dsum("l_quantity", "sum_qty"),

@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register
-from ..sources import table
+from ..sources import derived, table
 from ..functions.exact import davg, dsum, sql_davg, sql_dsum
 from .dedup import SQL_EMB_NORMS, _SQL_EMB_BANDS_CTES, emb_dot, emb_norm2, sql_emb_dot
 
@@ -534,27 +534,17 @@ def sim_ivf_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Trained coarse-quantizer cache, same contract as _PQ_BUILD_CACHE below:
-# the assignment is an offline index artifact consumed by SIM6's report and
-# SIM12's cell restriction — training per query would re-pay the Lloyd
-# shuffles on every search. Cleared alongside the PQ cache by the
-# partition-invariance matrix so cached artifacts can't mask a
-# partition-dependence bug in the training path.
-_IVF_BUILD_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def ivf_coarse_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Train the k=8 coarse quantizer (deterministic init, 2 decimal-exact
     Lloyd rounds — sim_ivf_build's docstring has the full account) and
-    return the final (vec_id, cl) assignment, memoized per
-    (application, sf_dir) and localCheckpointed."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _IVF_BUILD_CACHE.get(key)
-    if hit is not None:
-        return hit
-    assign = _ivf_train_assign(spark, sf_dir).localCheckpoint(eager=False)
-    _IVF_BUILD_CACHE[key] = assign
-    return assign
+    return the final (vec_id, cl) assignment, localCheckpointed and
+    memoized on ``embeddings``: SIM6's report and SIM12's cell restriction
+    both consume it, and training per query would re-pay the Lloyd
+    shuffles on every search."""
+    return derived(
+        spark, sf_dir, "ivf_coarse_assign", ("embeddings",),
+        lambda: _ivf_train_assign(spark, sf_dir).localCheckpoint(eager=False),
+    )
 
 
 def _ivf_train_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -862,29 +852,25 @@ def _sql_pq_round(r: int, prev_cent: str) -> str:
       GROUP BY 1, 2, 3)"""
 
 
-# Trained-index cache keyed by (application, sf_dir): the offline-build /
-# online-query split at 100 TB — codebooks + codes are persisted artifacts a
-# real deployment writes once and serves many queries from; retraining per
-# query (what SIM9 did through round 5) buries the ADC lookup's actual cost
-# under Lloyd iterations. Both frames are localCheckpointed, so the first
-# consumer pays the two-shuffle-per-round training and every later consumer
-# (including sim_pq_adc_topk after sim_pq_build, or a repeated query) reads
-# the materialized 512-row codebook / 4-rows-per-vector codes directly.
-_PQ_BUILD_CACHE: dict[tuple[str, str], tuple[DataFrame, DataFrame]] = {}
-
-
 def pq_build(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     """Train the 4x8 PQ codebooks (deterministic init, 2 decimal-exact Lloyd
     rounds — module comment) and encode every vector. Returns
     (codebook, codes): codebook is (cl, sub, i, c) — M*K*subdim rows,
     broadcastable; codes is (vec_id, sub, cl) — M rows per vector.
-    Memoized per (application, sf_dir); see _PQ_BUILD_CACHE."""
+
+    Both frames are localCheckpointed and memoized on ``embeddings``: the
+    offline-build / online-query split. Retraining per query would bury
+    the ADC lookup's cost under Lloyd iterations; with the memo every
+    later consumer (sim_pq_adc_topk after sim_pq_build, or a repeated
+    query) reads the materialized codebook and codes directly."""
+    return derived(
+        spark, sf_dir, "pq_build", ("embeddings",), lambda: _train_pq(spark, sf_dir)
+    )
+
+
+def _train_pq(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     from pyspark.sql import Window
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _PQ_BUILD_CACHE.get(key)
-    if hit is not None:
-        return hit
     emb = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     # materialized once: every Lloyd round's scoring AND means join back to
     # this frame, and without lineage truncation the DAG re-reads + re-
@@ -927,12 +913,10 @@ def pq_build(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
             .groupBy("cl", "sub", "i")
             .agg(davg("v", "c", scale=18))
         )
-    built = (
+    return (
         cent.localCheckpoint(eager=False),
         assign.localCheckpoint(eager=False),
     )
-    _PQ_BUILD_CACHE[key] = built
-    return built
 
 
 def _pq_probe_lut(spark: SparkSession, sf_dir: str, cent: DataFrame) -> DataFrame:
@@ -1879,11 +1863,6 @@ def sim_matryoshka_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 _INC_MOD = 10
 _INC_REM = 7
 
-# Memoized base index (assignment + FINAL centroids), cleared by the
-# partition-invariance matrix alongside the other build caches.
-_IVF_INC_CACHE: dict[tuple[str, str], tuple[DataFrame, DataFrame]] = {}
-
-
 def _ivf_base_index(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
@@ -1893,13 +1872,20 @@ def _ivf_base_index(
     artifact SIM17's online add consumes. Same Lloyd machinery as SIM6
     (broadcast centroids, two keyed shuffles per unrolled round), one
     extra means aggregation at the end because the incremental assign
-    needs the POST-final-assignment centroids (the oracle's c2)."""
+    needs the POST-final-assignment centroids (the oracle's c2).
+
+    Both frames are localCheckpointed and memoized on ``embeddings``: the
+    frozen index is what every online add joins, so an add never re-pays
+    the base corpus's Lloyd rounds."""
+    return derived(
+        spark, sf_dir, "ivf_base_index", ("embeddings",),
+        lambda: _train_ivf_base(spark, sf_dir),
+    )
+
+
+def _train_ivf_base(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     from pyspark.sql import Window
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _IVF_INC_CACHE.get(key)
-    if hit is not None:
-        return hit
     base = (
         table(spark, sf_dir, "embeddings")
         .select("vec_id", "embedding")
@@ -1942,12 +1928,10 @@ def _ivf_base_index(
             .groupBy("cl", "i")
             .agg(davg("v", "c", scale=18))
         )
-    built = (
+    return (
         assign.localCheckpoint(eager=False),
         cent.localCheckpoint(eager=False),
     )
-    _IVF_INC_CACHE[key] = built
-    return built
 
 
 @register(

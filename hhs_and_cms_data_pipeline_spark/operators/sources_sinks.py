@@ -24,7 +24,6 @@ import json
 import os
 import shutil
 import tempfile
-import weakref
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -38,7 +37,7 @@ from ..sinks import (
     read_published,
     write_parquet_atomic,
 )
-from ..sources import table
+from ..sources import derived, table
 
 _IO_DIR = os.path.join(tempfile.gettempdir(), "spark_graft_io")
 
@@ -410,46 +409,29 @@ MESSY_SCHEMA = T.StructType(
 )
 
 
-# One cached parse per live session: the .cache() below pins the parsed
-# fixture for the session's lifetime, so the write-then-parse must happen
-# exactly once — re-writing the file under an existing cache entry would
-# leave the (stale) cached parse serving a different file.
-# Weakly keyed on the live session object: a plain id(spark) key could
-# collide with a recycled id after the original session is GC'd, serving
-# a cached frame bound to a DEAD session. NOTE the eviction is only
-# best-effort: the cached DataFrame itself holds a strong reference to
-# its session, so an entry keeps its (discarded) session reachable and
-# never auto-evicts — accepted, because the leak is bounded at one
-# 26-row cached frame per SparkSession ever created in the process, and
-# real usage (driver, tests, bench) runs one session per process.
-_MESSY_CACHE: "weakref.WeakKeyDictionary[SparkSession, DataFrame]" = (
-    weakref.WeakKeyDictionary()
-)
-
-
 def messy_csv_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The PERMISSIVE read with the corrupt-record column — shared by the
     registered query (good rows) and the quarantine test (bad rows).
 
-    Cached: Spark refuses plans over a raw CSV that reference ONLY the
-    internal corrupt-record column (QUERY_ONLY_CORRUPT_RECORD_COLUMN),
+    Checkpointed: Spark refuses plans over a raw CSV that reference ONLY
+    the internal corrupt-record column (QUERY_ONLY_CORRUPT_RECORD_COLUMN),
     which is exactly what column pruning produces for a bare count() on
-    the filtered frame; caching materializes the parse once (the fixture
-    is tiny — nation is SF-invariant) and every downstream shape is then
-    legal. Memoized per session so write+parse+cache happen exactly once
-    and the cache can never serve a stale regeneration."""
-    df = _MESSY_CACHE.get(spark)
-    if df is None:
+    the filtered frame; the checkpoint materializes the parse once (the
+    fixture is tiny — nation is SF-invariant) and every downstream shape
+    is then legal. Memoized on ``nation``, so the fixture is written and
+    parsed once per version of its input."""
+
+    def build() -> DataFrame:
         _write_messy_csv(spark, sf_dir)
-        df = spark.read.csv(
+        return spark.read.csv(
             _MESSY_CSV,
             header=True,
             schema=MESSY_SCHEMA,
             mode="PERMISSIVE",
             columnNameOfCorruptRecord="_corrupt",
-        ).cache()
-        _MESSY_CACHE[spark] = df
-    return df
+        ).localCheckpoint(eager=True)
+
+    return derived(spark, sf_dir, "messy_csv", ("nation",), build)
 
 
 @register(

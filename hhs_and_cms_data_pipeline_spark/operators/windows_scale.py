@@ -11,6 +11,11 @@ results to the naive formulation the oracle runs.
 from __future__ import annotations
 
 import hashlib
+import os
+import re
+import shutil
+import tempfile
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -239,8 +244,6 @@ def _bkt_tag(sf_dir: str) -> str:
     can check process liveness instead of guessing from mtime (parquet
     files age from write time, not last read — a long-lived session's
     tables would look "stale" after an hour)."""
-    import os
-
     return f"{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}_p{os.getpid()}"
 
 
@@ -251,9 +254,6 @@ def _bkt_owner_alive(dir_name: str) -> bool:
     would classify every live foreign session as dead (deleting its
     in-use tables mid-query). Dirs without a parseable pid (pre-pid-tag
     layout) are treated as dead so they get collected."""
-    import os
-    import re
-
     m = re.search(r"_p(\d+)$", dir_name)
     if not m:
         return False
@@ -304,34 +304,31 @@ def bucketed_colocated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     tag = _bkt_tag(sf_dir)
     o_name, c_name = f"orders_bkt_{tag}", f"customer_bkt_{tag}"
     catalog = spark.catalog
-    # the catalog is in-memory per session but the warehouse dir persists:
-    # drop THIS tag's orphaned locations (a crashed same-pid run) and any
-    # foreign-tag bucketed dirs whose owner process is DEAD (liveness via
-    # the pid embedded in the tag — never mtime, which ages from write
-    # time and would condemn a live long-running session after an hour).
-    import os
-    import shutil
-
-    warehouse = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse").removeprefix(
-        "file:"
-    )
+    # External tables under the fixture dir, never the cwd's warehouse. The
+    # catalog is in-memory per session but the dirs persist: drop THIS
+    # tag's orphaned locations (a crashed same-pid run) and any foreign-tag
+    # bucketed dirs whose owner process is DEAD (liveness via the pid
+    # embedded in the tag — never mtime, which ages from write time and
+    # would condemn a live long-running session after an hour).
+    io_dir = os.path.join(tempfile.gettempdir(), "spark_graft_io")
     for name in (o_name, c_name):
         if not catalog.tableExists(name):
-            shutil.rmtree(os.path.join(warehouse, name), ignore_errors=True)
-    if os.path.isdir(warehouse):
-        for name in os.listdir(warehouse):
+            shutil.rmtree(os.path.join(io_dir, name), ignore_errors=True)
+    if os.path.isdir(io_dir):
+        for name in os.listdir(io_dir):
             if (
                 name.startswith(("orders_bkt_", "customer_bkt_"))
                 and not name.endswith(tag)
                 and not _bkt_owner_alive(name)
             ):
-                shutil.rmtree(os.path.join(warehouse, name), ignore_errors=True)
+                shutil.rmtree(os.path.join(io_dir, name), ignore_errors=True)
     if not catalog.tableExists(o_name):
         (
             table(spark, sf_dir, "orders")
             .select("o_orderkey", "o_custkey", "o_orderpriority", "o_totalprice")
             .write.bucketBy(8, "o_custkey")
             .sortBy("o_custkey")
+            .option("path", os.path.join(io_dir, o_name))
             .mode("overwrite")
             .saveAsTable(o_name)
         )
@@ -341,6 +338,7 @@ def bucketed_colocated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("c_custkey", "c_mktsegment")
             .write.bucketBy(8, "c_custkey")
             .sortBy("c_custkey")
+            .option("path", os.path.join(io_dir, c_name))
             .mode("overwrite")
             .saveAsTable(c_name)
         )
@@ -371,11 +369,6 @@ def partitioned_orders_path(spark: SparkSession, sf_dir: str) -> str:
       SAME path between rounds, so the cache tag covers the source file's
       (mtime_ns, size) as well as its path; a regenerated source gets a
       fresh tag and the old layout is simply orphaned."""
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
     src = os.path.join(sf_dir, "orders.parquet")
     st = os.stat(src)
     tag = hashlib.md5(

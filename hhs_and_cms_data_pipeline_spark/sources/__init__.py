@@ -1,1 +1,1 @@
-from .tables import TABLES, spread, table  # noqa: F401
+from .tables import TABLES, derived, reset_derived, spread, table  # noqa: F401

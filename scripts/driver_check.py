@@ -5,9 +5,9 @@ Usage:
     PYTHONPATH=. python scripts/driver_check.py [name ...]
 
 Runs `__spark_entry__.entry()` as a smoke, then for each requested query
-name (default: a fixed 9-name spot sample, one of them a streaming drain)
-executes the Spark builder AND its DuckDB oracle at sf0.01 and compares
-bit-exactly — the same contract as tests/test_oracle_diff.py, packaged for
+name (default: a fixed 10-name spot sample, one of them a streaming drain
+and one, r2, built on a memoized artifact) executes the Spark builder AND
+its DuckDB oracle at sf0.01 and compares bit-exactly — the same contract as tests/test_oracle_diff.py, packaged for
 quick ad-hoc checks of freshly touched queries without a pytest session.
 
 The session is deliberately foreign (America/Los_Angeles, AQE off), so the
@@ -30,6 +30,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 DEFAULT_SAMPLE = [
     "flagship_utilization",
+    "r2_recent_weeks_summary",
     "tpch_q1_pricing_summary",
     "dedup_minhash_lsh",
     "graph_pagerank",

@@ -84,13 +84,28 @@ def test_recent_weeks_filter_pushes_to_scan(spark, specs):
 
 
 def test_bucketed_join_has_no_shuffle(spark, specs):
-    from hhs_and_cms_data_pipeline_spark.operators.windows_scale import bucketed_join
+    import os
+    import tempfile
+
+    from hhs_and_cms_data_pipeline_spark.operators.windows_scale import (
+        _bkt_tag,
+        bucketed_join,
+    )
 
     # materialize the bucketed tables first
     specs["bucketed_colocated_join"].builder(spark, SF_SMOKE).collect()
     plan = formatted_plan(bucketed_join(spark, SF_SMOKE))
     assert "SortMergeJoin" in plan, "merge hint must force SMJ over broadcast"
     assert count_exchanges(plan) == 0, "bucketed join must be shuffle-free"
+    # the tables live under the temp dir, never in the checkout
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    tmp = os.path.realpath(tempfile.gettempdir())
+    tag = _bkt_tag(SF_SMOKE)
+    for name in (f"orders_bkt_{tag}", f"customer_bkt_{tag}"):
+        desc = spark.sql(f"DESCRIBE TABLE EXTENDED {name}").collect()
+        loc = next(r.data_type for r in desc if r.col_name == "Location")
+        loc = os.path.realpath(loc.removeprefix("file:"))
+        assert loc.startswith(tmp + os.sep) and not loc.startswith(repo + os.sep), loc
 
 
 def test_partitioned_fact_prunes_directories(spark, specs):
@@ -783,9 +798,9 @@ def test_ivf_incremental_add_never_rescans_base_corpus(spark, specs):
     artifact, and touches the base only through its checkpointed k-row
     aggregate. Any SortMergeJoin or second parquet scan means the add path
     is re-shuffling the corpus."""
-    from hhs_and_cms_data_pipeline_spark.operators import similarity as sim
+    from hhs_and_cms_data_pipeline_spark.sources import reset_derived
 
-    sim._IVF_INC_CACHE.clear()
+    reset_derived()
     plan = formatted_plan(
         specs["sim_ivf_incremental_add"].builder(spark, SF_SMOKE)
     )

@@ -223,6 +223,7 @@ def test_partition_count_invariant_registry_wide(name, spark):
 
 def _partition_invariance_check(name, spark):
     from hhs_and_cms_data_pipeline_spark.registry import all_specs
+    from hhs_and_cms_data_pipeline_spark.sources import reset_derived
     from tests.conftest import SF_SMOKE
 
     if name in _PARTITION_VARIANT_ALLOWLIST:
@@ -233,18 +234,12 @@ def _partition_invariance_check(name, spark):
     # cube/grouping-sets emit None in key columns, which plain sorted()
     # cannot compare); any deterministic total order works — only equality
     # of the two sorted lists matters.
-    # The memoized index builds (PQ codebooks, IVF coarse assignment) are
-    # cleared before EVERY run: a cached artifact trained under the
-    # baseline partitioning would otherwise be reused by the 7-way rerun,
-    # silently exempting the training exchanges from this test.
+    # The memoized artifacts (index builds, edge lists) are reset before
+    # EVERY run: an artifact built under the baseline partitioning would
+    # otherwise be reused by the 7-way rerun, silently exempting the
+    # build's exchanges from this test.
     def rows(sf: str) -> list[tuple]:
-        from hhs_and_cms_data_pipeline_spark.operators import similarity as sim
-
-        sim._PQ_BUILD_CACHE.clear()
-        sim._IVF_BUILD_CACHE.clear()
-        sim._IVF_INC_CACHE.clear()
-        from hhs_and_cms_data_pipeline_spark.operators import graph as _g
-        _g._EDGE_CACHE.clear()
+        reset_derived()
         return sorted(map(tuple, spec.builder(spark, sf).collect()), key=repr)
 
     sf = SF_SMOKE
@@ -274,8 +269,8 @@ def test_concurrent_planning_sees_consistent_confs(spark):
     build is in flight."""
     import threading
 
-    from hhs_and_cms_data_pipeline_spark.operators import graph
     from hhs_and_cms_data_pipeline_spark.registry import all_specs
+    from hhs_and_cms_data_pipeline_spark.sources import reset_derived
     from tests.conftest import SF_SMOKE
 
     specs = all_specs()
@@ -288,12 +283,12 @@ def test_concurrent_planning_sees_consistent_confs(spark):
         "xa15_rollup_totals",
     ]
     # force a rebuild so the AQE-off window actually opens during the test
-    graph._EDGE_CACHE.clear()
+    reset_derived()
     sequential = {
         n: [tuple(r) for r in specs[n].builder(spark, SF_SMOKE).collect()]
         for n in names
     }
-    graph._EDGE_CACHE.clear()
+    reset_derived()
 
     results: dict[str, list] = {}
     aqe_reads: list[str] = []
@@ -318,3 +313,109 @@ def test_concurrent_planning_sees_consistent_confs(spark):
     for n in names:
         assert results[n] == sequential[n], f"{n} diverged under concurrency"
     assert all(v == "true" for v in aqe_reads), aqe_reads
+
+
+def _keep_shipped_before_april_2000(t):
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    cut = pa.scalar(datetime.datetime(2000, 4, 1), t.schema.field("l_shipdate").type)
+    return t.filter(pc.less(t["l_shipdate"], cut))
+
+
+def _drop_every_third_vector(t):
+    import numpy as np
+    import pyarrow as pa
+
+    return t.filter(pa.array(np.asarray(t["vec_id"]) % 3 != 0))
+
+
+# query -> (the input table its memoized artifact is built from, a rewrite)
+_REWRITES = {
+    "r2_recent_weeks_summary": ("lineitem", _keep_shipped_before_april_2000),
+    "graph_degree_distribution": ("lineitem", _keep_shipped_before_april_2000),
+    "graph_pagerank": ("lineitem", _keep_shipped_before_april_2000),
+    "sim_ivf_build": ("embeddings", _drop_every_third_vector),
+    "sim_pq_build": ("embeddings", _drop_every_third_vector),
+    "sim_ivf_incremental_add": ("embeddings", _drop_every_third_vector),
+}
+
+
+@pytest.mark.parametrize("name", list(_REWRITES))
+def test_derived_artifact_follows_input_rewrite(spark, tmp_path, name):
+    """A memoized artifact is reused while its input table is unchanged and
+    rebuilt once the table is rewritten in place: the second build of a
+    query launches no job beyond the parquet schema reads of its own scans
+    (``table()`` resolves a schema with a one-task job on every call), and
+    after an ``os.replace`` of the input the rebuild matches the oracle on
+    the rewritten data."""
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from hhs_and_cms_data_pipeline_spark.registry import all_specs
+    from tests.conftest import SF_SMOKE
+    from tests.oracle_utils import compare_spark_duckdb, duckdb_connection
+
+    sf = str(tmp_path / "sf")
+    shutil.copytree(SF_SMOKE, sf)
+    spec = all_specs()[name]
+    spec.builder(spark, sf).collect()
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def job_ids() -> set[int]:
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return set(tracker.getJobIdsForGroup(None))
+
+    def schema_read(job: int) -> bool:
+        stages = [tracker.getStageInfo(s) for s in tracker.getJobInfo(job).stageIds]
+        return all(s is not None and s.name.startswith("parquet at ") for s in stages)
+
+    before = job_ids()
+    spec.builder(spark, sf)
+    assert [j for j in job_ids() - before if not schema_read(j)] == []
+
+    input_table, rewrite = _REWRITES[name]
+    src = f"{sf}/{input_table}.parquet"
+    pq.write_table(rewrite(pq.read_table(src)), f"{src}.new")
+    os.replace(f"{src}.new", src)
+    compare_spark_duckdb(spec.builder(spark, sf), duckdb_connection(sf), spec.oracle)
+
+
+def test_derived_memo_keeps_every_concurrent_insert():
+    """Threads filling the artifact memo for one session at once lose no
+    entry: every name is built, and afterwards every lookup is a hit."""
+    import sys
+    import threading
+
+    from hhs_and_cms_data_pipeline_spark.sources import derived
+    from tests.conftest import SF_SMOKE
+
+    class Session:  # any weakly referenceable key stands in for a session
+        pass
+
+    session, names, built = Session(), [f"a{i}" for i in range(64)], []
+
+    def fill() -> None:
+        for n in names:
+            derived(session, SF_SMOKE, n, ("nation",), lambda n=n: built.append(n) or n)
+
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=fill) for _ in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(switch)
+    assert not any(t.is_alive() for t in threads)
+    assert set(built) == set(names)
+    n_built = len(built)
+    hits = [derived(session, SF_SMOKE, n, ("nation",), lambda: None) for n in names]
+    assert hits == names and len(built) == n_built
