@@ -67,6 +67,14 @@ def prep_hhs(raw: DataFrame) -> DataFrame:
     order, so the window orders by EVERY remaining column; exact ties are
     then fully identical rows and the pick is immaterial. The oracle ranks
     by the identical column list.
+
+    The result is staged (an eager ``localCheckpoint``): it is the input of
+    every lake write of the week (location, hospital and fact splits, the
+    merge's partition probe), so the CSV parse and the dedup window run once
+    per batch instead of once per consumer. Not ``.cache()``: Spark's cache
+    manager matches a cached plan by input path, so a weekly file re-issued
+    at the same path would be served the old parse (see
+    ``sources.tables.derived``).
     """
     df = scrub_sentinels(raw)
     lon, lat = parse_wkt_point(F.col("geocoded_hospital_address"))
@@ -87,6 +95,7 @@ def prep_hhs(raw: DataFrame) -> DataFrame:
         df.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
         .drop("__rn", "geocoded_hospital_address")
+        .localCheckpoint(eager=True)
     )
 
 
@@ -193,15 +202,19 @@ def upsert_new_keys(
     the same batch is a no-op for every row. (PostgreSQL sidesteps this by
     forbidding NULL in primary keys; a lake table has no such constraint.)
 
-    At scale: existing is read key-columns-only (column pruning) and the anti
-    join uses a broadcast when the key set is small; for fact-sized targets,
-    partition-prune `existing` to the incoming date range first. eqNullSafe
-    (<=>) is still a hash-join key in Spark, not a cartesian degradation.
+    At scale: existing is read key-columns-only (column pruning; `sinks`
+    reads it with the batch's key schema) and the anti join uses a broadcast
+    when the key set is small; for fact-sized targets, partition-prune
+    `existing` to the incoming date range first. The build side is not
+    deduplicated: a left-anti join keeps the same rows whatever the
+    multiplicity on its right, and a distinct would add a shuffle under the
+    broadcast. eqNullSafe (<=>) is still a hash-join key in Spark, not a
+    cartesian degradation.
     """
     if existing is None:
         return incoming
     inc = incoming.alias("inc")
-    ex = existing.select(*keys).dropDuplicates(keys).alias("ex")
+    ex = existing.select(*keys).alias("ex")
     cond = None
     for k in keys:
         term = F.col(f"inc.{k}").eqNullSafe(F.col(f"ex.{k}"))

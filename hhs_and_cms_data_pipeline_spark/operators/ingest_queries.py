@@ -270,7 +270,7 @@ def dq_constraint_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # ING3 — the reference's WHOLE nightly flow as one declarative job:
 # load-hhs (prep) + load-quality (normalize) + weekly-report (join + state
-# rollup), chained without intermediate materialization. A reference user
+# rollup), chained on the staged prep batch. A reference user
 # switching engines runs THIS — not the stage queries one by one.
 # --------------------------------------------------------------------------
 
@@ -341,12 +341,13 @@ def ingest_to_report_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     normalize (guarded rating parse) -> hospital join -> per-state report
     (hospital count, rated count, exact bed totals, average rating) — the
     reference's three scripts (load-hhs.py, load-quality.py,
-    weekly-report.py) as ONE Catalyst plan.
+    weekly-report.py) chained on one session.
 
-    Chaining instead of materializing means the prep projections, the
-    rating parse, and the join all fuse: the only exchanges are the
-    per-hospital dedup window and the state rollup. The oracle re-derives
-    the entire flow from the raw fixture CSVs independently."""
+    The prep is the staged batch every lake write of a week reads (see
+    ``prep_hhs``), so its dedup window runs while this query plans, and the
+    rating parse, the join and the state rollup run over the staged rows.
+    The oracle re-derives the entire flow from the raw fixture CSVs
+    independently."""
     _materialize()
     prepped = prep_hhs(read_hhs_weekly(spark, _HHS_CSV)).select(
         "hospital_pk",

@@ -19,9 +19,14 @@ PER TABLE — MERGE and append carry from the version they read, so of two
 concurrent commits the later drops the earlier's rows (there is no lock).
 
 Scale notes: fact tables partition by their date column at write so readers
-get partition pruning for every `WHERE collection_week <= X`; the anti-join
-reads existing keys column-pruned and (for incremental loads) should be
-partition-pruned to the incoming date range.
+get partition pruning for every `WHERE collection_week <= X`. A writer never
+infers a table's schema from its data files (Delta reads it from its log;
+here the batch supplies it): it reads the current version with the incoming
+batch's schema, so a commit launches no schema job, and a batch whose types
+the files cannot be read as fails inside the commit. The anti-join reads the
+existing keys column-pruned and not deduplicated (a left-anti join's output
+does not depend on duplicates on its build side), and for incremental loads
+should be partition-pruned to the incoming date range.
 """
 
 from __future__ import annotations
@@ -36,6 +41,7 @@ import uuid
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from .operators.ingest import upsert_new_keys
 
@@ -146,8 +152,8 @@ def merge_rewrite_partitions(
     MERGE at scale (reference: ON CONFLICT upserts, helper_load_hhs.py:96).
 
     A version commit: touched partitions are read-modify-written (anti-join
-    the old partition on `keys`, union the batch rows); the rest of the
-    current version is carried by hardlink.
+    the old partition, read with the batch's schema, on `keys`, union the
+    batch rows); the rest of the current version is carried by hardlink.
 
     At 100 TB the cost is proportional to the TOUCHED partitions plus one
     dim-sized driver fetch (the batch's distinct partition values), not to
@@ -156,6 +162,7 @@ def merge_rewrite_partitions(
 
     Returns the rewritten partition values (as strings, sorted).
     """
+    import pyarrow.parquet as pq
     from pyspark.sql import functions as F
 
     # Dim-sized by contract: one row per touched partition.
@@ -190,13 +197,22 @@ def merge_rewrite_partitions(
             ).drop(partition_col)
             prev_part = os.path.join(prev, pname)
             if os.path.isdir(prev_part):
-                old = spark.read.parquet(prev_part)
+                # Read with the batch's schema, a column the batch lacks
+                # would silently vanish from the rewritten partition.
+                some_file = next(glob.iglob(os.path.join(prev_part, "*.parquet")))
+                lacking = set(pq.read_schema(some_file).names) - set(batch_v.columns)
+                if lacking:
+                    raise ValueError(
+                        f"the update batch lacks columns {sorted(lacking)} of "
+                        f"{path}; rewriting {pname} would drop them"
+                    )
+                old = spark.read.schema(batch_v.schema).parquet(prev_part)
                 # anti-join on THIS partition's batch keys: a key updated in
                 # another partition must not delete rows here (only touched
                 # partitions are rewritten, so cross-partition key moves are
                 # out of contract anyway)
                 merged = old.join(
-                    batch_v.select(*keys).distinct(), keys, "left_anti"
+                    batch_v.select(*keys), keys, "left_anti"
                 ).unionByName(batch_v)
             else:  # insert-only partition: nothing to rewrite, just write
                 merged = batch_v
@@ -267,12 +283,18 @@ def append_new_keys(
     new version, which carries every current file but the job markers; a
     batch with no new rows publishes nothing. Single writer per table.
 
+    The current version's keys are read with the batch's key fields as the
+    schema, never inferred from its files: no schema job per call, and a
+    key type the files cannot be read as raises inside the commit.
+
     Returns the number of rows appended, read from the new files' footers.
     """
     import pyarrow.parquet as pq
 
+    key_schema = StructType([incoming.schema[k] for k in keys])
+
     def write(data_dir: str, prev: str | None) -> int:
-        existing = spark.read.parquet(prev) if prev else None
+        existing = spark.read.schema(key_schema).parquet(prev) if prev else None
         new_rows = upsert_new_keys(incoming, existing, keys)
         new_rows.write.partitionBy(*(partition_by or [])).parquet(data_dir)
         n = sum(

@@ -5,8 +5,9 @@ Usage:
     PYTHONPATH=. python scripts/driver_check.py [name ...]
 
 Runs `__spark_entry__.entry()` as a smoke, then for each requested query
-name (default: a fixed 10-name spot sample, one of them a streaming drain
-and one, r2, built on a memoized artifact) executes the Spark builder AND
+name (default: a fixed 11-name spot sample, one of them a streaming drain,
+one, r2, built on a memoized artifact, and one, ING3, planned on the staged
+HHS prep batch) executes the Spark builder AND
 its DuckDB oracle at sf0.01 and compares bit-exactly — the same contract as tests/test_oracle_diff.py, packaged for
 quick ad-hoc checks of freshly touched queries without a pytest session.
 
@@ -39,6 +40,7 @@ DEFAULT_SAMPLE = [
     "curation_hashed_linear_score",
     "u4_debounce_dedup",
     "stream_hll_registers",
+    "ingest_to_report_e2e",
 ]
 
 

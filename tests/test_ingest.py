@@ -17,6 +17,7 @@ from hhs_and_cms_data_pipeline_spark.operators.ingest import (
     split_location,
     split_weekly_report,
 )
+from hhs_and_cms_data_pipeline_spark.plans.audit import formatted_plan
 from hhs_and_cms_data_pipeline_spark.sources.csvsrc import (
     read_cms_quality,
     read_hhs_weekly,
@@ -110,6 +111,11 @@ def test_hhs_split_tables(spark, hhs_csv):
     assert weekly.count() == 3
     assert "hospital_weekly_id" in weekly.columns
 
+    # the splits read the staged batch: the CSV is parsed once, by prep_hhs
+    # (EXPLAIN FORMATTED names the scan node "Scan csv", simple mode "FileScan csv")
+    for split in (loc, hosp, weekly):
+        assert "Scan csv" not in formatted_plan(split)
+
 
 def test_cms_normalize_semantics(spark, cms_csv):
     norm = normalize_cms(read_cms_quality(spark, cms_csv), "2023-02-01")
@@ -200,6 +206,29 @@ def test_idempotent_reload_null_safe_keys(spark, tmp_path):
     # a genuinely new row (distinct only in its NULL pattern) still appends
     extra = spark.createDataFrame([(2, "b", 5.0)], "k1 int, k2 string, v double")
     assert append_new_keys(spark, extra, path, ["k1", "k2"]) == 1
+
+
+def test_append_refuses_incompatible_key_type(spark, tmp_path):
+    """The current version is read with the batch's key schema, so a key
+    type its files cannot be read as (a string key onto an int table) fails
+    inside the commit: nothing is published, and the table still reads back
+    its rows. An inferred read compared the keys across types and published
+    string files beside int32 ones, and the table no longer read back."""
+    import glob
+
+    from hhs_and_cms_data_pipeline_spark.sinks import append_new_keys
+
+    path = str(tmp_path / "tbl")
+    ints = spark.createDataFrame([(1, 1.0), (2, 2.0)], "k int, v double")
+    assert append_new_keys(spark, ints, path, ["k"]) == 2
+    published, versions = os.path.realpath(path), glob.glob(f"{path}.__v__*")
+
+    strings = spark.createDataFrame([("3", 3.0)], "k string, v double")
+    with pytest.raises(Exception, match="PARQUET_COLUMN_DATA_TYPE_MISMATCH"):
+        append_new_keys(spark, strings, path, ["k"])
+    assert os.path.realpath(path) == published
+    assert glob.glob(f"{path}.__v__*") == versions
+    assert sorted(tuple(r) for r in spark.read.parquet(path).collect()) == [(1, 1.0), (2, 2.0)]
 
 
 def test_atomic_write(spark, tmp_path):
@@ -1050,6 +1079,28 @@ def test_merge_refuses_escaped_partition_values(spark, tmp_path):
     )
     with pytest.raises(ValueError, match="unsupported partition value"):
         merge_rewrite_partitions(spark, bad, path, keys=["k"], partition_col="p")
+
+
+def test_merge_refuses_a_batch_lacking_a_column(spark, tmp_path):
+    """A touched partition is read with the batch's schema, so a batch
+    without one of the table's columns must be refused before the rewrite,
+    not drop that column's values from the partition."""
+    from hhs_and_cms_data_pipeline_spark.sinks import (
+        merge_rewrite_partitions,
+        write_parquet_atomic,
+    )
+
+    path = str(tmp_path / "tbl")
+    table = spark.createDataFrame(
+        [(1, 0, 1.0, "a"), (2, 0, 2.0, "b")], "k int, p int, v double, note string"
+    )
+    write_parquet_atomic(table, path, partition_by=["p"])
+    published = os.path.realpath(path)
+    narrow = spark.createDataFrame([(1, 0, 9.0)], "k int, p int, v double")
+    with pytest.raises(ValueError, match="lacks columns \\['note'\\]"):
+        merge_rewrite_partitions(spark, narrow, path, ["k"], "p")
+    assert os.path.realpath(path) == published
+    assert sorted(r["note"] for r in spark.read.parquet(path).collect()) == ["a", "b"]
 
 
 def test_time_travel_rejects_negative_steps(spark, tmp_path):

@@ -358,26 +358,16 @@ def test_derived_artifact_follows_input_rewrite(spark, tmp_path, name):
     from hhs_and_cms_data_pipeline_spark.registry import all_specs
     from tests.conftest import SF_SMOKE
     from tests.oracle_utils import compare_spark_duckdb, duckdb_connection
+    from tests.spark_jobs import job_ids, schema_read
 
     sf = str(tmp_path / "sf")
     shutil.copytree(SF_SMOKE, sf)
     spec = all_specs()[name]
     spec.builder(spark, sf).collect()
 
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
-
-    def job_ids() -> set[int]:
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        return set(tracker.getJobIdsForGroup(None))
-
-    def schema_read(job: int) -> bool:
-        stages = [tracker.getStageInfo(s) for s in tracker.getJobInfo(job).stageIds]
-        return all(s is not None and s.name.startswith("parquet at ") for s in stages)
-
-    before = job_ids()
+    before = job_ids(spark)
     spec.builder(spark, sf)
-    assert [j for j in job_ids() - before if not schema_read(j)] == []
+    assert [j for j in job_ids(spark) - before if not schema_read(spark, j)] == []
 
     input_table, rewrite = _REWRITES[name]
     src = f"{sf}/{input_table}.parquet"

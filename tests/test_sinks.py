@@ -16,7 +16,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from hhs_and_cms_data_pipeline_spark import sinks
+from hhs_and_cms_data_pipeline_spark.operators.ingest import upsert_new_keys
+from hhs_and_cms_data_pipeline_spark.plans.audit import count_exchanges, formatted_plan
 from tests import lake_crash
+from tests.spark_jobs import job_ids, schema_read
 
 CHILD_TIMEOUT_S = 300
 
@@ -139,3 +142,35 @@ def test_writers_refuse_a_plain_directory(spark, tmp_path):
         assert listing() == files, name
     sinks.clear_published_versions(path)
     assert not os.path.lexists(path)
+
+
+def test_lake_writes_infer_no_schema(spark, tmp_path):
+    """A commit reads the current version with the batch's own schema: an
+    append onto an existing table and a merge into a touched partition
+    launch no Parquet schema-inference job, and the anti-join's build side
+    is broadcast as it is, with no distinct shuffled under it."""
+    rows = lambda lo, hi: spark.range(lo, hi).select(  # noqa: E731
+        F.col("id").alias("k"), (F.col("id") % 3).alias("p"), (F.col("id") * 0.5).alias("v")
+    )
+    appended, merged = str(tmp_path / "appended"), str(tmp_path / "merged")
+    writes = {
+        "append_new_keys": lambda df: sinks.append_new_keys(spark, df, appended, ["k"]),
+        "merge_rewrite_partitions": lambda df: sinks.merge_rewrite_partitions(
+            spark, df, merged, ["k"], "p"
+        ),
+    }
+    sinks.write_parquet_atomic(rows(0, 30), merged, partition_by=["p"])
+    writes["append_new_keys"](rows(0, 30))
+    # both calls anti-join a broadcast, so their write stages are not named
+    # like a schema read (see schema_read)
+    for name, write in writes.items():
+        before = job_ids(spark)
+        write(rows(20, 40))
+        launched = job_ids(spark) - before
+        assert launched, name
+        assert [j for j in launched if schema_read(spark, j)] == [], name
+    existing = sinks.read_published(spark, appended)
+    assert existing.count() == sinks.read_published(spark, merged).count() == 40
+    # `existing` is a file scan, so Spark cannot prove its keys distinct
+    # (a spark.range key would let the optimizer drop any dedup on its own)
+    assert count_exchanges(formatted_plan(upsert_new_keys(rows(30, 50), existing, ["k"]))) == 0
