@@ -9,10 +9,22 @@ Scale notes (100 TB design; tested on local[32]):
   match the DuckDB oracle.
 - Arrow enabled for the pandas interchange boundary (presentation edge and
   pandas UDFs) — never used in the relational hot path.
+- Codegen cache sized to the dashboard page's working set (static, so set
+  only at session build): a cold page (date picker + 8 report queries)
+  generates 136 classes, but Spark's cache of compiled classes holds 100 by
+  default (``spark.sql.codegen.cache.maxEntries``). The page visits its
+  queries in a cycle, so the LRU evicted each class before its next use and
+  every warm page recompiled about 120 of them with Janino. 1000 entries
+  hold the page several times over; a warm page now compiles none. The
+  cache is keyed on the generated source, and AQE numbers codegen stages in
+  the order its query stages finish, which varies run to run (r7's two
+  stages swap ids now and then); with the stage id left out of the class
+  name (``spark.sql.codegen.useIdInClassName``) such a plan hits too.
 
 A session the driver hands us gets the same runtime confs from
 ``ensure_session_conf``, which ``registry.register`` applies before every
-builder call; builders do not call it themselves.
+builder call; builders do not call it themselves. Static confs cannot be
+changed on a live session, so that session keeps its own codegen cache.
 """
 
 from __future__ import annotations
@@ -21,6 +33,12 @@ import os
 
 from pyspark.sql import SparkSession
 
+# Fixed when the session's shared state is built: set by get_spark only.
+_STATIC_CONF = {
+    "spark.sql.codegen.cache.maxEntries": "1000",
+}
+
+# Runtime-settable: set at build and re-applied by ensure_session_conf.
 _SESSION_CONF = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
@@ -35,6 +53,9 @@ _SESSION_CONF = {
     # timestamp[us]/NTZ in others; sources.tables.normalize_events_ts
     # canonicalizes whichever form is on disk to session-tz TIMESTAMP.
     "spark.sql.legacy.parquet.nanosAsLong": "true",
+    # Keeps AQE's run-to-run stage numbering out of the generated source,
+    # the codegen cache's key (see the module docstring).
+    "spark.sql.codegen.useIdInClassName": "false",
 }
 
 
@@ -50,7 +71,7 @@ def get_spark(app_name: str = "hhs-cms-spark-engine") -> SparkSession:
         .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
-    for k, v in _SESSION_CONF.items():
+    for k, v in {**_STATIC_CONF, **_SESSION_CONF}.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
 
@@ -60,7 +81,8 @@ def ensure_session_conf(spark: SparkSession) -> SparkSession:
 
     The driver hands us its own SparkSession; correctness of the
     timestamp-bearing queries requires UTC, and the perf posture requires AQE.
-    Only session-level (runtime-settable) confs are touched. ``registry.register``
+    Only the runtime-settable confs (``_SESSION_CONF``) are touched, never
+    ``_STATIC_CONF``, so no call pays for a rejected set. ``registry.register``
     calls this before every registered builder, so a conf changed mid-session
     is reset by the next builder; builders do not call it themselves.
     """

@@ -22,8 +22,11 @@ Scale notes: fact tables partition by their date column at write so readers
 get partition pruning for every `WHERE collection_week <= X`. A writer never
 infers a table's schema from its data files (Delta reads it from its log;
 here the batch supplies it): it reads the current version with the incoming
-batch's schema, so a commit launches no schema job, and a batch whose types
-the files cannot be read as fails inside the commit. The anti-join reads the
+batch's schema, so a commit launches no schema job; an append whose key types
+differ from one footer of the current version is refused before it writes,
+and a merge batch whose types the files cannot be read as fails inside the
+commit. Readers resolve a version's schema once per session through the
+catalog (`sources.tables.scan`). The anti-join reads the
 existing keys column-pruned and not deduplicated (a left-anti join's output
 does not depend on duplicates on its build side), and for incremental loads
 should be partition-pruned to the incoming date range.
@@ -33,6 +36,7 @@ from __future__ import annotations
 
 import contextlib
 import glob
+import json
 import os
 import re
 import shutil
@@ -44,6 +48,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
 from .operators.ingest import upsert_new_keys
+from .sources.tables import scan
 
 # Job-completion markers: every Spark write leaves its own.
 _MARKERS = ("_SUCCESS", "._SUCCESS.crc")
@@ -259,15 +264,46 @@ def read_published_version(
             f"time travel {steps_back} steps requested but only "
             f"{len(old)} dethroned versions of {path!r} are retained"
         )
-    return spark.read.parquet(old[steps_back - 1])
+    return scan(spark, old[steps_back - 1])
 
 
 def read_published(spark: SparkSession, path: str) -> DataFrame:
     """Snapshot read of a published table: resolve the symlink ONCE and scan
     the pinned version dir. Reading through the link itself would re-resolve
     per file — a concurrent publish mid-scan would mix two versions. The
-    pinned dir survives at least `gc_grace_seconds` after being replaced."""
-    return spark.read.parquet(os.path.realpath(path))
+    pinned dir survives at least `gc_grace_seconds` after being replaced.
+
+    The schema comes from the session catalog (`sources.tables.scan`),
+    keyed on the version dir: a publish misses it, a re-read of the same
+    version runs no schema job."""
+    return scan(spark, path)
+
+
+def _refuse_key_type_change(prev: str, key_schema: StructType, path: str) -> None:
+    """Raise if a key's type in the batch differs from its type in one
+    footer of the current version `prev` (read with pyarrow, no Spark job).
+    Reading with the batch's schema cannot catch a widening: int32 files
+    read fine as bigint, and the append would publish int32 and int64 files
+    for one column. Every lake file is written by Spark, whose footer holds
+    the exact Spark schema; partition columns are not in it and pass."""
+    import pyarrow.parquet as pq
+
+    some_file = next(glob.iglob(os.path.join(prev, "**", "*.parquet"), recursive=True), None)
+    if some_file is None:
+        return
+    spark_json = pq.read_schema(some_file).metadata[b"org.apache.spark.sql.parquet.row.metadata"]
+    # simpleString: the types, not their nullability
+    stored = {f.name: f.dataType.simpleString() for f in StructType.fromJson(json.loads(spark_json))}
+    changed = {
+        f.name: (stored[f.name], f.dataType.simpleString())
+        for f in key_schema
+        if f.name in stored and stored[f.name] != f.dataType.simpleString()
+    }
+    if changed:
+        raise ValueError(
+            f"key types of the batch differ from {path} (table, batch): {changed}; "
+            "appending would mix physical types in one column"
+        )
 
 
 def append_new_keys(
@@ -284,8 +320,9 @@ def append_new_keys(
     batch with no new rows publishes nothing. Single writer per table.
 
     The current version's keys are read with the batch's key fields as the
-    schema, never inferred from its files: no schema job per call, and a
-    key type the files cannot be read as raises inside the commit.
+    schema, never inferred from its files: no schema job per call. A key
+    type that differs from the table's (a widening bigint onto int as much
+    as a string onto int) raises `ValueError` before anything is written.
 
     Returns the number of rows appended, read from the new files' footers.
     """
@@ -294,7 +331,10 @@ def append_new_keys(
     key_schema = StructType([incoming.schema[k] for k in keys])
 
     def write(data_dir: str, prev: str | None) -> int:
-        existing = spark.read.schema(key_schema).parquet(prev) if prev else None
+        existing = None
+        if prev:
+            _refuse_key_type_change(prev, key_schema, path)
+            existing = spark.read.schema(key_schema).parquet(prev)
         new_rows = upsert_new_keys(incoming, existing, keys)
         new_rows.write.partitionBy(*(partition_by or [])).parquet(data_dir)
         n = sum(

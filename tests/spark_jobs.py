@@ -1,5 +1,6 @@
-"""Spark job probes shared by the tests: which jobs a call launched, and
-whether a job was a Parquet schema read."""
+"""Spark job probes shared by the tests: which jobs a call launched,
+whether a job was a Parquet schema read, and how many classes codegen has
+compiled."""
 
 from __future__ import annotations
 
@@ -25,3 +26,11 @@ def schema_read(spark: SparkSession, job: int) -> bool:
     tracker = spark.sparkContext.statusTracker()
     stages = [tracker.getStageInfo(s) for s in tracker.getJobInfo(job).stageIds]
     return all(s is not None and s.name.startswith("parquet at ") for s in stages)
+
+
+def compiles(spark: SparkSession) -> int:
+    """Classes Janino has compiled in this JVM so far: the count of Spark's
+    codegen compile-time histogram (``CodegenMetrics``), which records one
+    sample per compile, that is per codegen cache miss."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())

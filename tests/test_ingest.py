@@ -209,11 +209,11 @@ def test_idempotent_reload_null_safe_keys(spark, tmp_path):
 
 
 def test_append_refuses_incompatible_key_type(spark, tmp_path):
-    """The current version is read with the batch's key schema, so a key
-    type its files cannot be read as (a string key onto an int table) fails
-    inside the commit: nothing is published, and the table still reads back
-    its rows. An inferred read compared the keys across types and published
-    string files beside int32 ones, and the table no longer read back."""
+    """A key type its files cannot be read as (a string key onto an int
+    table) is refused with a ``ValueError`` before anything is written:
+    nothing is published, and the table still reads back its rows. An
+    inferred read compared the keys across types and published string
+    files beside int32 ones, and the table no longer read back."""
     import glob
 
     from hhs_and_cms_data_pipeline_spark.sinks import append_new_keys
@@ -224,11 +224,37 @@ def test_append_refuses_incompatible_key_type(spark, tmp_path):
     published, versions = os.path.realpath(path), glob.glob(f"{path}.__v__*")
 
     strings = spark.createDataFrame([("3", 3.0)], "k string, v double")
-    with pytest.raises(Exception, match="PARQUET_COLUMN_DATA_TYPE_MISMATCH"):
+    with pytest.raises(ValueError, match="key types"):
         append_new_keys(spark, strings, path, ["k"])
     assert os.path.realpath(path) == published
     assert glob.glob(f"{path}.__v__*") == versions
     assert sorted(tuple(r) for r in spark.read.parquet(path).collect()) == [(1, 1.0), (2, 2.0)]
+
+
+def test_append_refuses_widening_key_type(spark, tmp_path):
+    """A key type the files CAN be read as but that differs from the
+    table's (a bigint key onto an int table) is refused too, before anything
+    is written. Reading the current version with the batch's schema let it
+    through (int32 files read fine as bigint), and the append published a
+    version with int32 and int64 files for one column."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    from hhs_and_cms_data_pipeline_spark.sinks import append_new_keys
+
+    path = str(tmp_path / "tbl")
+    ints = spark.createDataFrame([(1, 1.0), (2, 2.0)], "k int, v double")
+    assert append_new_keys(spark, ints, path, ["k"]) == 2
+    published, versions = os.path.realpath(path), glob.glob(f"{path}.__v__*")
+
+    longs = spark.createDataFrame([(3, 3.0)], "k bigint, v double")
+    with pytest.raises(ValueError, match=r"key types.*'k': \('int', 'bigint'\)"):
+        append_new_keys(spark, longs, path, ["k"])
+    assert os.path.realpath(path) == published
+    assert glob.glob(f"{path}.__v__*") == versions
+    files = glob.glob(os.path.join(published, "*.parquet"))
+    assert {str(pq.read_schema(f).field("k").type) for f in files} == {"int32"}
 
 
 def test_atomic_write(spark, tmp_path):

@@ -347,10 +347,9 @@ _REWRITES = {
 def test_derived_artifact_follows_input_rewrite(spark, tmp_path, name):
     """A memoized artifact is reused while its input table is unchanged and
     rebuilt once the table is rewritten in place: the second build of a
-    query launches no job beyond the parquet schema reads of its own scans
-    (``table()`` resolves a schema with a one-task job on every call), and
-    after an ``os.replace`` of the input the rebuild matches the oracle on
-    the rewritten data."""
+    query launches no job at all (the artifact and its scans' schemas are
+    memo hits), and after an ``os.replace`` of the input the rebuild matches
+    the oracle on the rewritten data."""
     import shutil
 
     import pyarrow.parquet as pq
@@ -358,7 +357,7 @@ def test_derived_artifact_follows_input_rewrite(spark, tmp_path, name):
     from hhs_and_cms_data_pipeline_spark.registry import all_specs
     from tests.conftest import SF_SMOKE
     from tests.oracle_utils import compare_spark_duckdb, duckdb_connection
-    from tests.spark_jobs import job_ids, schema_read
+    from tests.spark_jobs import job_ids
 
     sf = str(tmp_path / "sf")
     shutil.copytree(SF_SMOKE, sf)
@@ -367,7 +366,7 @@ def test_derived_artifact_follows_input_rewrite(spark, tmp_path, name):
 
     before = job_ids(spark)
     spec.builder(spark, sf)
-    assert [j for j in job_ids(spark) - before if not schema_read(spark, j)] == []
+    assert job_ids(spark) - before == set()
 
     input_table, rewrite = _REWRITES[name]
     src = f"{sf}/{input_table}.parquet"
@@ -409,3 +408,72 @@ def test_derived_memo_keeps_every_concurrent_insert():
     n_built = len(built)
     hits = [derived(session, SF_SMOKE, n, ("nation",), lambda: None) for n in names]
     assert hits == names and len(built) == n_built
+
+
+def test_table_follows_an_in_place_rewrite(spark, tmp_path):
+    """The catalog keys a table's schema on its version: a re-read of an
+    unchanged table launches no job, and after an ``os.replace`` of the
+    file with a key column rewritten as strings, ``table()`` returns the
+    new schema and the new rows."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import StringType
+
+    from hhs_and_cms_data_pipeline_spark.sources import table
+    from tests.conftest import SF_SMOKE
+    from tests.spark_jobs import job_ids
+
+    sf = str(tmp_path / "sf")
+    os.makedirs(sf)
+    src = f"{sf}/nation.parquet"
+    shutil.copy(f"{SF_SMOKE}/nation.parquet", src)
+    old = table(spark, sf, "nation")
+    assert not isinstance(old.schema["n_nationkey"].dataType, StringType)
+    before = job_ids(spark)
+    table(spark, sf, "nation")
+    assert job_ids(spark) - before == set()
+
+    t = pq.read_table(src)
+    i = t.schema.get_field_index("n_nationkey")
+    t = t.set_column(i, "n_nationkey", t["n_nationkey"].cast(pa.string()))
+    pq.write_table(t, f"{src}.new")
+    os.replace(f"{src}.new", src)
+    new = table(spark, sf, "nation")
+    assert isinstance(new.schema["n_nationkey"].dataType, StringType)
+    assert sorted(new.select("n_nationkey").collect()) == sorted(
+        (k,) for k in t["n_nationkey"].to_pylist()
+    )
+
+
+_PAGE = (
+    "r8_available_dates", "r1_weekly_count_trend", "r2_recent_weeks_summary",
+    "r3_utilization_by_rating", "r4_weekly_state_totals", "r5_sum_by_state",
+    "r6_bottom10_states", "r7_not_reporting", "flagship_utilization",
+)
+
+
+def test_warm_page_compiles_nothing_and_reads_no_schema(spark):
+    """The dashboard page (date picker + 8 report queries) rendered twice:
+    the second render compiles no class (the codegen cache holds the whole
+    page) and launches no schema-inference job (the catalog holds every
+    table's schema), and returns the same rows. With Spark's default
+    100-entry cache the LRU evicted most of the page's 136 classes before
+    their reuse, and every ``table()`` call inferred its schema."""
+    from hhs_and_cms_data_pipeline_spark.registry import all_specs
+    from tests.conftest import SF_SMOKE
+    from tests.spark_jobs import compiles, job_ids, schema_read
+
+    specs = all_specs()
+
+    def page() -> dict[str, list]:
+        return {q: [tuple(r) for r in specs[q].builder(spark, SF_SMOKE).collect()] for q in _PAGE}
+
+    cold = page()
+    classes, before = compiles(spark), job_ids(spark)
+    warm = page()
+    launched = job_ids(spark) - before
+    assert compiles(spark) - classes == 0
+    assert [j for j in launched if schema_read(spark, j)] == []
+    assert warm == cold

@@ -174,3 +174,25 @@ def test_lake_writes_infer_no_schema(spark, tmp_path):
     # `existing` is a file scan, so Spark cannot prove its keys distinct
     # (a spark.range key would let the optimizer drop any dedup on its own)
     assert count_exchanges(formatted_plan(upsert_new_keys(rows(30, 50), existing, ["k"]))) == 0
+
+
+def test_read_published_misses_after_a_republish(spark, tmp_path):
+    """``read_published`` resolves a version's schema once: a re-read of
+    the same version launches no job, and a republish through
+    ``write_parquet_atomic`` misses the catalog entry, so the read returns
+    the new version's schema and rows."""
+    path = str(tmp_path / "tbl")
+    sinks.write_parquet_atomic(spark.range(3).select(F.col("id").cast("int").alias("k")), path)
+    assert sinks.read_published(spark, path).dtypes == [("k", "int")]
+    before = job_ids(spark)
+    sinks.read_published(spark, path)
+    assert job_ids(spark) - before == set()
+
+    sinks.write_parquet_atomic(
+        spark.range(5).select(F.col("id").cast("string").alias("k"), F.lit(0.5).alias("v")), path
+    )
+    before = job_ids(spark)
+    new = sinks.read_published(spark, path)
+    assert [j for j in job_ids(spark) - before if schema_read(spark, j)], "the republish hit"
+    assert new.dtypes == [("k", "string"), ("v", "double")]
+    assert sorted(tuple(r) for r in new.collect()) == [(str(i), 0.5) for i in range(5)]
