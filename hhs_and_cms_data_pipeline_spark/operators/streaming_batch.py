@@ -633,9 +633,8 @@ def session_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# ST10 — per-user profile totals: the batch equivalent of the Spark-4
-# transformWithState incremental profile maintainer (streaming/profile.py),
-# which is asserted to converge to exactly these rows in tests.
+# ST10 — per-user profile totals: event count and value sum in integer
+# micro-units, the state an incremental per-user profile would keep.
 # --------------------------------------------------------------------------
 
 
@@ -655,12 +654,10 @@ def session_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_user_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user running profile (event count + value sum in integer
     micro-units of the DECIMAL(38,6)-quantized doubles — bit-exact across
-    engines AND across the streaming/batch boundary). The streaming form
-    maintains the same numbers incrementally with Spark 4's
-    transformWithState typed ValueState; because the quantization happens
-    per event before summing, a micro-batch accumulation and this one-shot
-    aggregation are the SAME integer arithmetic — tests drive the
-    streaming twin and assert row equality.
+    engines AND across any split of the events into batches). The
+    quantization happens per event before summing, so accumulating the
+    rows batch by batch is the same integer arithmetic as this one-shot
+    aggregation.
 
     Batch shape: one hash-shuffle on user_id with map-side partials."""
     return (
@@ -680,8 +677,7 @@ def stream_user_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # GX1 — grouped-map applyInPandas: per-user robust anomaly profile. This
 # completes the Python-surface matrix (scalar pandas_udf = SIM3,
-# mapInPandas = MM2/MM5, applyInPandasWithState = ST4, transformWithState =
-# ST10, grouped-map = here).
+# mapInPandas = MM2/MM5, applyInPandasWithState = ST4, grouped-map = here).
 # --------------------------------------------------------------------------
 
 USER_ANOMALY_SCHEMA = (
@@ -1895,13 +1891,10 @@ def stream_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# ST19 — per-user N most recent events: the batch statement of the Spark-4
-# transformWithState ListState maintainer (streaming/recent.py), which the
-# e2e test drains micro-batch-wise and asserts equal to these rows. The
-# feature-store contract: at most N rows per user, most recent first, ties
-# broken by event_id, timestamps as integer microseconds (bit-exact
-# across engines and the streaming/batch boundary), plus the monotone
-# n_seen audit the streaming final-state selection keys on.
+# ST19 — per-user N most recent events. The feature-store contract: at
+# most N rows per user, most recent first, ties broken by event_id,
+# timestamps as integer microseconds (bit-exact across engines), plus the
+# per-user n_seen count of the events considered.
 # --------------------------------------------------------------------------
 
 _RECENT_N = 3
@@ -1936,9 +1929,8 @@ def stream_recent_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     Batch shape: one user-keyed window (rank within user) — the windowed
     relation is per-user bounded, so the sort inside each partition's
     groups is O(events per user); n_seen shares the same exchange."""
-    # NULL ts/event_id are excluded by contract — the streaming processor
-    # (streaming/recent.py) coerces both to int per row and the two
-    # statements must stay symmetric (ADVICE r6).
+    # NULL ts/event_id are excluded by contract: both are ranking keys,
+    # and the oracle drops the same rows.
     ev = (
         table(spark, sf_dir, "events")
         .filter(F.col("ts").isNotNull() & F.col("event_id").isNotNull())
@@ -1972,10 +1964,8 @@ stream_recent_events.__doc__ = (stream_recent_events.__doc__ or "").format(n=_RE
 
 
 # --------------------------------------------------------------------------
-# ST20 — per-user per-event-type counts: the batch statement of the
-# transformWithState MapState counter (streaming/typecounts.py) — the
-# third typed state handle (ValueState ST10, ListState ST19, MapState
-# here), asserted equal to this one-shot aggregation by the e2e drain.
+# ST20 — per-user per-event-type counts, with the user's total count of
+# typed events riding along; NULL event types are not counted.
 # --------------------------------------------------------------------------
 
 
@@ -2014,16 +2004,13 @@ def stream_type_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# ST21 — watermark-closed sessions: the batch statement of the
-# transformWithState EVENT-TIME TIMER sessionizer (streaming/timersess.py).
-# A session is emitted by the streaming drain iff it is CLOSABLE: either a
-# later session of the same user supersedes it, or the final watermark
-# (max event time - the 2h delay) passed its close timer
-# (last_ts + 30min). Sessions still open against the final watermark are
-# in-flight state — a real 24/7 job holds them, so the twin excludes
-# them. Timestamps in MILLISECONDS (floor of micros) because Spark's
-# watermark/timer plumbing is ms-granular — the twin truncates the same
-# way, so the comparison is integer-exact.
+# ST21 — watermark-closed sessions (30-minute inactivity gap). A session
+# is emitted iff it is CLOSABLE: either a later session of the same user
+# supersedes it, or the final watermark (max event time - the 2h delay)
+# passed its close timer (last_ts + 30min). Sessions still open against
+# the final watermark are in-flight state and are excluded. Timestamps
+# are in MILLISECONDS (floor of micros), the granularity of Spark's
+# watermarks, so the comparison with the oracle is integer-exact.
 # --------------------------------------------------------------------------
 
 _TIMER_GAP_MS = 30 * 60 * 1000
@@ -2070,9 +2057,9 @@ _TIMER_DELAY_MS = 2 * 60 * 60 * 1000
     tags=("ST21",),
 )
 def stream_timer_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ST21: the closable sessions of the timer sessionizer (block comment
-    above) — gaps-and-islands over ms timestamps, minus the per-user last
-    session when the final watermark has not passed its close timer."""
+    """ST21: the closable sessions (block comment above) — gaps-and-islands
+    over ms timestamps, minus the per-user last session when the final
+    watermark has not passed its close timer."""
     ev = (
         table(spark, sf_dir, "events")
         .filter(F.col("ts").isNotNull())

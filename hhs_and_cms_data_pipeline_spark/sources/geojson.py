@@ -11,9 +11,8 @@ presentation-side dim this is (a few MB of state polygons, broadcast to
 whatever joins it). Fact-scale geo data should land as JSONL or parquet
 instead (s4_json_scan is that path).
 
-No network access exists in this container, so `fetch_geojson` is untested
-glue (same stance as sources/jdbc.py `read_jdbc`); the parse path is fully
-tested against a deterministic synthetic FeatureCollection.
+`fetch_geojson` needs network access, so it is untested glue; the parse
+path is fully tested against a deterministic synthetic FeatureCollection.
 """
 
 from __future__ import annotations

@@ -18,7 +18,6 @@ from __future__ import annotations
 
 import os
 import tempfile
-from collections.abc import Mapping
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -88,11 +87,10 @@ def run_available_now(
     query_name: str,
     checkpoint_dir: str,
     output_mode: str = "complete",
-    confs: Mapping[str, str] | None = None,
 ) -> tuple[DataFrame, int]:
     """Drain all available input into the memory sink ``query_name`` in
     micro-batches, then stop (batch-equivalent semantics with streaming
-    bookkeeping), under ``stream_drain_confs(spark, confs)``. Returns the
+    bookkeeping), under ``stream_drain_confs(spark)``. Returns the
     emitted table and the number of micro-batches that carried input."""
     from .stateful import drain_stream  # stateful imports this module
 
@@ -104,7 +102,6 @@ def run_available_now(
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start(),
-        confs,
     )
     n_batches = len([p for p in q.recentProgress if p["numInputRows"] > 0])
     return result.sparkSession.table(query_name), n_batches

@@ -13,12 +13,18 @@ partitioned by user_id — high cardinality, no skew, bounded memory. Each
 micro-batch ships one Arrow batch per user group to Python; emission is
 "update" (closed sessions final + open-session snapshot), so downstream
 dedup is a max() per (user_id, session_seq) — sessions only grow.
+
+The module also holds the bounded-drain helpers every streaming builder
+shares: ``read_staged_events`` opens a staged dir as a stream and
+``drain_stream`` runs it to completion with ``spark.sql.shuffle.partitions``
+narrowed to ``stream_state_partitions``. That width is the only conf a
+drain sets; the state store stays the session's default provider.
 """
 
 from __future__ import annotations
 
 import os
-from collections.abc import Iterator, Mapping
+from collections.abc import Iterator
 from contextlib import contextmanager
 
 import pandas as pd
@@ -60,50 +66,33 @@ def stream_state_partitions(spark: SparkSession) -> int:
     return max(8, spark.sparkContext.defaultParallelism // 4)
 
 
-# transformWithState keeps each state variable in its own column family,
-# which only the RocksDB provider supports — a requirement of those
-# operators, not a tuning choice.
-ROCKSDB_STATE_STORE = {
-    "spark.sql.streaming.stateStore.providerClass":
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-}
-
-
 @contextmanager
-def stream_drain_confs(
-    spark: SparkSession, extra: Mapping[str, str] | None = None
-) -> Iterator[None]:
-    """Run a bounded drain under ``stream_state_partitions`` (plus any
-    ``extra`` confs) and restore the session's prior values on exit, even
-    when the drain fails. Enter it around the start and drain of the query
-    only, as drain_stream does: the query binds its confs when it starts
-    (the state store pins the partition count in the checkpoint at the
-    first batch), so building the stream outside the scope cannot leak the
-    reduced width into the shared session, and the readout after the drain
-    keeps its full parallelism."""
-    confs = {
-        "spark.sql.shuffle.partitions": str(stream_state_partitions(spark)),
-        **(extra or {}),
-    }
-    prior = {k: spark.conf.get(k, None) for k in confs}
+def stream_drain_confs(spark: SparkSession) -> Iterator[None]:
+    """Run a bounded drain with ``spark.sql.shuffle.partitions`` set to
+    ``stream_state_partitions`` and restore the session's prior value on
+    exit, even when the drain fails. Enter it around the start and drain
+    of the query only, as drain_stream does: the query binds its confs
+    when it starts (the state store pins the partition count in the
+    checkpoint at the first batch), so building the stream outside the
+    scope cannot leak the reduced width into the shared session, and the
+    readout after the drain keeps its full parallelism."""
+    key = "spark.sql.shuffle.partitions"
+    prior = spark.conf.get(key, None)
     try:
-        for k, v in confs.items():
-            spark.conf.set(k, v)
+        spark.conf.set(key, str(stream_state_partitions(spark)))
         yield
     finally:
-        for k, v in prior.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
+        if prior is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prior)
 
 
-def drain_stream(
-    spark: SparkSession, start, confs: Mapping[str, str] | None = None
-) -> StreamingQuery:
+def drain_stream(spark: SparkSession, start) -> StreamingQuery:
     """Start a bounded availableNow stream with ``start()`` and drain it to
-    completion under ``stream_drain_confs(spark, confs)``; returns the
-    finished query. Every bounded drain in the package goes through here.
+    completion under ``stream_drain_confs(spark)``, which narrows only the
+    shuffle width; returns the finished query. Every bounded drain in the
+    package goes through here.
 
     Besides the state-store width (stream_state_partitions), the lever for
     the stateless foreachBatch drains is the per-micro-batch JOB width:
@@ -113,11 +102,11 @@ def drain_stream(
     sf0.1, whole builder timed, 5v5 both orders: drift median 4.19s →
     3.89s, cms 4.28s → 4.02s (consistent medians, overlapping spreads —
     a fixed-overhead trim, not an algorithmic change). Env-scaled via
-    $SPARK_GRAFT_STREAM_STATE_PARTITIONS on a real cluster; the confs
-    cover the start and the drain only, so the readout (which may scan
-    the corpus, e.g. ST18's truth audit) keeps the session's full
+    $SPARK_GRAFT_STREAM_STATE_PARTITIONS on a real cluster; the narrowed
+    width covers the start and the drain only, so the readout (which may
+    scan the corpus, e.g. ST18's truth audit) keeps the session's full
     parallelism."""
-    with stream_drain_confs(spark, confs):
+    with stream_drain_confs(spark):
         q = start()
         q.awaitTermination()
     return q

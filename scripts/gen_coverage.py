@@ -87,15 +87,12 @@ def main() -> None:
     print("## Known environment limitations (loud, not silent)")
     print()
     print(
-        "- **ST10 transformWithState runs e2e via a documented protobuf "
-        "bridge.** The Spark 4 `transformWithStateInPandas` runner needs "
-        "`google.protobuf`, which this container does not ship; "
-        "`compat/protobuf_shim.py` aliases the cloud-sdk's vendored "
-        "pure-Python protobuf (4.23.2) under the canonical names with a "
-        "no-op runtime-version check (two liberties, documented there), "
-        "and the e2e test drains real micro-batches through the RocksDB "
-        "state store and matches batch truth bit-exactly. On a cluster "
-        "with protobuf installed the shim is a no-op."
+        "- **No Spark 4 state-v2 streaming operator ships.** Its Python "
+        "runner needs `google.protobuf`, which the engine does not depend "
+        "on, and the reference has no streaming. ST10 and ST19-ST21 are "
+        "batch queries that state, oracle-checked, the per-user state such "
+        "an operator would keep; the stateful drains use "
+        "`applyInPandasWithState` (ST4)."
     )
     print(
         "- **Image decode covers BMP (24-bit) and PNG (8-bit RGB, "
@@ -110,12 +107,10 @@ def main() -> None:
         "both arms are tested via a stubbed PIL module."
     )
     print(
-        "- **JDBC is e2e-tested against embedded Derby (in Spark's "
-        "classpath); network RDBMSs and HTTP fetch remain untestable** "
-        "(`sources/jdbc.py`, `sources/geojson.py`): the live round trip "
-        "(write -> bounded partitioned read -> pushdown) runs in "
-        "`tests/test_ingest.py::test_jdbc_roundtrip_live_embedded_derby`; "
-        "the sandbox has no network for Postgres or the GeoJSON fetch."
+        "- **No JDBC source; the GeoJSON HTTP fetch is untestable** "
+        "(`sources/geojson.py`): the Parquet lake written by `sinks.py` "
+        "stands in for the reference's Postgres, and the GeoJSON fetch "
+        "needs network access, which the test suite does not use."
     )
 
 

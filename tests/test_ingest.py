@@ -17,11 +17,11 @@ from hhs_and_cms_data_pipeline_spark.operators.ingest import (
     split_location,
     split_weekly_report,
 )
-from hhs_and_cms_data_pipeline_spark.plans.audit import formatted_plan
 from hhs_and_cms_data_pipeline_spark.sources.csvsrc import (
     read_cms_quality,
     read_hhs_weekly,
 )
+from tests.plan_audit import formatted_plan
 
 HHS_HEADER = (
     "hospital_pk,state,hospital_name,address,city,zip,fips_code,"
@@ -349,79 +349,6 @@ def test_atomic_write_concurrent_writers_never_torn(spark, tmp_path):
     assert not errors
     assert seen <= {25, 5}
     assert read_published(spark, path).count() in (25, 5)
-
-
-def test_jdbc_option_contract():
-    """JDBC source: partition options are all-or-nothing (a half-specified
-    range silently degrades to one cursor — refuse instead), bounds sane,
-    credentials pass through."""
-    from hhs_and_cms_data_pipeline_spark.sources.jdbc import jdbc_options
-
-    opts = jdbc_options(
-        "jdbc:postgresql://db/hhs",
-        "hospital_weekly",
-        user="reporter",
-        password="x",
-        partition_column="collection_week_epoch",
-        lower_bound=0,
-        upper_bound=1_700_000_000,
-        num_partitions=64,
-    )
-    assert opts["partitionColumn"] == "collection_week_epoch"
-    assert opts["numPartitions"] == "64"
-    assert opts["fetchsize"] == "10000"
-    with pytest.raises(ValueError, match="ALL of"):
-        jdbc_options("jdbc:postgresql://db/hhs", "t", partition_column="id")
-    with pytest.raises(ValueError, match="must be <"):
-        jdbc_options(
-            "jdbc:postgresql://db/hhs", "t",
-            partition_column="id", lower_bound=9, upper_bound=1, num_partitions=2,
-        )
-
-
-def test_jdbc_roundtrip_live_embedded_derby(spark, tmp_path):
-    """LIVE JDBC e2e (round-5 VERDICT 'what's missing' #1): Spark ships the
-    embedded Derby RDBMS in its own classpath, so the previously glue-only
-    read_jdbc path gets a real database round trip — write a table through
-    the JDBC sink, read it back through read_jdbc's bounded partitioned
-    scan, and require (a) row fidelity, (b) the declared partition fan-out
-    (4 cursors, the anti-single-cursor contract the module documents), and
-    (c) predicate pushdown into the JDBCRelation scan. Network RDBMSs
-    (the reference's Postgres, weekly-report.py:31-51) exercise the
-    identical option surface with only the URL changing."""
-    from hhs_and_cms_data_pipeline_spark.sources.jdbc import read_jdbc
-
-    # keep derby.log out of the repo root (must be set before Derby boots)
-    spark._jvm.System.setProperty("derby.system.home", str(tmp_path))
-    url = f"jdbc:derby:{tmp_path}/hhsdb;create=true"
-    src = spark.range(0, 100).selectExpr(
-        "id", "cast(id * 2.5 as double) AS bed_avg", "concat('pk', id) AS hospital_pk"
-    )
-    (
-        src.write.format("jdbc")
-        .option("url", url)
-        .option("dbtable", "hospital_weekly")
-        .mode("overwrite")
-        .save()
-    )
-
-    got = read_jdbc(
-        spark,
-        url,
-        "hospital_weekly",
-        partition_column="id",
-        lower_bound=0,
-        upper_bound=100,
-        num_partitions=4,
-    )
-    assert got.rdd.getNumPartitions() == 4
-    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, src.collect()))
-
-    flt = got.filter("id >= 90")
-    plan = flt._jdf.queryExecution().executedPlan().toString()
-    assert "JDBCRelation" in plan and "numPartitions=4" in plan
-    assert "GreaterThanOrEqual(id,90)" in plan, "filter must push to the DB"
-    assert flt.count() == 10
 
 
 def test_geojson_parse_stats(spark, tmp_path):

@@ -7,7 +7,10 @@ from __future__ import annotations
 
 import pytest
 
-from hhs_and_cms_data_pipeline_spark.plans.audit import (
+from hhs_and_cms_data_pipeline_spark.registry import all_specs
+from hhs_and_cms_data_pipeline_spark.sources import table
+from tests.conftest import SF_SMOKE
+from tests.plan_audit import (
     count_data_shuffles,
     count_broadcast_joins,
     count_exchanges,
@@ -16,9 +19,6 @@ from hhs_and_cms_data_pipeline_spark.plans.audit import (
     pushed_filters,
     scan_columns,
 )
-from hhs_and_cms_data_pipeline_spark.registry import all_specs
-from hhs_and_cms_data_pipeline_spark.sources import table
-from tests.conftest import SF_SMOKE
 
 
 @pytest.fixture(scope="module")
@@ -185,7 +185,7 @@ def test_no_unreduced_global_windows_anywhere(spark, specs):
     Allowlist: j6_positional_pairing — positional zip is BY CONTRACT a
     global-order op applied only to dim-sized frames (customer<=200 rows,
     supplier), documented in its docstring."""
-    from hhs_and_cms_data_pipeline_spark.plans.audit import (
+    from tests.plan_audit import (
         simple_plan,
         unreduced_single_partition,
     )
@@ -336,7 +336,7 @@ def test_subtree_parser_stops_at_continuation_siblings():
     """Regression: a sibling rendered under a ':' continuation (':  +- X')
     must terminate the SinglePartition subtree — the old lstrip-startswith
     check absorbed it, hiding genuine unreduced global windows."""
-    from hhs_and_cms_data_pipeline_spark.plans.audit import (
+    from tests.plan_audit import (
         single_partition_subtrees,
         unreduced_single_partition,
     )

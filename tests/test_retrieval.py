@@ -15,9 +15,9 @@ from hhs_and_cms_data_pipeline_spark.operators.retrieval import (
     _POSTING_PACK,
     pos_tokens,
 )
-from hhs_and_cms_data_pipeline_spark.plans.audit import formatted_plan
 from hhs_and_cms_data_pipeline_spark.registry import all_specs
 from tests.conftest import SF_SMOKE
+from tests.plan_audit import formatted_plan
 
 
 def _docs(spark, rows):
@@ -226,7 +226,7 @@ def test_inverted_index_reconstructs_corpus(spark, texts):
 
 
 def test_bm25_plan_prunes_and_takes_ordered(spark):
-    from hhs_and_cms_data_pipeline_spark.plans.audit import scan_columns
+    from tests.plan_audit import scan_columns
 
     plan = formatted_plan(all_specs()["text_bm25_topk"].builder(spark, SF_SMOKE))
     # the documents scan reads only (doc_id, text) — the query-term IN

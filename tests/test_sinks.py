@@ -17,8 +17,8 @@ from pyspark.sql import functions as F
 
 from hhs_and_cms_data_pipeline_spark import sinks
 from hhs_and_cms_data_pipeline_spark.operators.ingest import upsert_new_keys
-from hhs_and_cms_data_pipeline_spark.plans.audit import count_exchanges, formatted_plan
 from tests import lake_crash
+from tests.plan_audit import count_exchanges, formatted_plan
 from tests.spark_jobs import job_ids, schema_read
 
 CHILD_TIMEOUT_S = 300

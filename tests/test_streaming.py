@@ -294,68 +294,6 @@ def test_watermark_drops_late_rows_and_gates_emission(spark, tmp_path):
     assert got[(first_ws, first_type)] == n_orig
 
 
-def test_transform_with_state_profile_matches_batch(spark, tmp_path):
-    """ST10 twin: the transformWithState (state v2) profile maintainer,
-    drained over multiple chronological micro-batches, must converge to
-    exactly the batch per-user totals — integer micro-unit sums make the
-    comparison bit-exact.
-
-    transformWithState's Python runner needs protobuf. The container has
-    no installable package, but compat/protobuf_shim.py bridges the
-    cloud-sdk's vendored pure-Python copy under the canonical names (see
-    its docstring for the two documented liberties); skip only if neither
-    a real protobuf nor the vendored copy exists."""
-    import pytest
-
-    from hhs_and_cms_data_pipeline_spark.compat.protobuf_shim import install
-
-    if not install():
-        pytest.skip("no protobuf runtime (real or vendored) available")
-    from hhs_and_cms_data_pipeline_spark.registry import all_specs
-    from hhs_and_cms_data_pipeline_spark.streaming.profile import (
-        run_profile_maintenance,
-    )
-    from hhs_and_cms_data_pipeline_spark.streaming.stateful import (
-        stage_chronological_files,
-    )
-
-    stage = stage_chronological_files(
-        spark, SF_SMOKE, str(tmp_path / "stage"), n_files=3
-    )
-    final, n_batches = run_profile_maintenance(
-        spark, stage, str(tmp_path / "ckpt"), "t_tws_profile"
-    )
-    assert n_batches >= 2, "state must actually cross micro-batches"
-    got = sorted(map(tuple, final.collect()))
-    want = sorted(
-        map(tuple, all_specs()["stream_user_profile"].builder(spark, SF_SMOKE).collect())
-    )
-    assert len(want) > 0 and got == want
-
-
-def test_profile_processor_logic_without_spark():
-    """The TWS processor's accumulation semantics, exercised directly (no
-    protobuf runner needed): quantization is HALF_UP at 6dp of the exact
-    binary double, and accumulation across calls matches a one-shot sum."""
-    from hhs_and_cms_data_pipeline_spark.streaming.profile import _quantize_u6
-
-    assert _quantize_u6(1.0) == 1_000_000
-    assert _quantize_u6(0.1) == 100_000
-    assert _quantize_u6(2.5e-7) == 0  # 0.25 micro -> below half
-    assert _quantize_u6(7.5e-7) == 1  # 0.75 micro -> above half
-    # the half-micro boundary is where the rounding BASIS matters: the
-    # shortest repr '5e-07' is an exact tie -> HALF_UP -> 1, matching
-    # Spark's valueOf cast and DuckDB's VARCHAR parse; the exact binary
-    # (4.999...e-7) would round to 0 and diverge from both engines
-    assert _quantize_u6(5e-7) == 1
-    assert _quantize_u6(3.5e-6) == 4
-    # the property that matters: sum of per-event quantizations is order-free
-    vals = [0.1, 2.7, 3.14159265358979, 1e-7, 123.456789]
-    a = sum(_quantize_u6(v) for v in vals)
-    b = sum(_quantize_u6(v) for v in reversed(vals))
-    assert a == b
-
-
 def test_stream_snapshot_sink_publishes_aggregates(spark, tmp_path):
     """The complete-mode snapshot sink (the one stream_upsert_sink's
     aggregate guard points at): draining the tumbling aggregation over
@@ -838,223 +776,6 @@ def test_cms_merge_replay_guard_and_additive_identity(spark, tmp_path):
     assert store() == whole
 
 
-def test_transform_with_state_recent_events_matches_batch(spark, tmp_path):
-    """ST19 twin: the ListState N-most-recent maintainer, drained over
-    chronological micro-batches, must converge to exactly the batch
-    window query — state stays O(N) per user across batches and the kept
-    set is a pure function of the event set (ties resolved by event_id).
-    Uses the same protobuf bridge + RocksDB provider as the ST10 e2e."""
-    import pytest
-
-    from hhs_and_cms_data_pipeline_spark.compat.protobuf_shim import install
-
-    if not install():
-        pytest.skip("no protobuf runtime (real or vendored) available")
-    from hhs_and_cms_data_pipeline_spark.registry import all_specs
-    from hhs_and_cms_data_pipeline_spark.streaming.recent import run_recent_events
-    from hhs_and_cms_data_pipeline_spark.streaming.stateful import (
-        stage_chronological_files,
-    )
-
-    stage = stage_chronological_files(
-        spark, SF_SMOKE, str(tmp_path / "stage"), n_files=3
-    )
-    final, n_batches = run_recent_events(
-        spark, stage, str(tmp_path / "ckpt"), "t_tws_recent"
-    )
-    assert n_batches >= 2, "state must actually cross micro-batches"
-    got = sorted(map(tuple, final.collect()))
-    want = sorted(
-        map(
-            tuple,
-            all_specs()["stream_recent_events"].builder(spark, SF_SMOKE).collect(),
-        )
-    )
-    assert len(want) > 0 and got == want
-
-
-def test_transform_with_state_type_counts_matches_batch(spark, tmp_path):
-    """ST20 twin: the MapState per-type counter, drained over
-    chronological micro-batches, must converge to the batch
-    per-(user, type) counts — each batch touches only the types it
-    contains, and the map flattens to identical rows regardless of how
-    the events were batched."""
-    import pytest
-
-    from hhs_and_cms_data_pipeline_spark.compat.protobuf_shim import install
-
-    if not install():
-        pytest.skip("no protobuf runtime (real or vendored) available")
-    from hhs_and_cms_data_pipeline_spark.registry import all_specs
-    from hhs_and_cms_data_pipeline_spark.streaming.typecounts import run_type_counts
-    from hhs_and_cms_data_pipeline_spark.streaming.stateful import (
-        stage_chronological_files,
-    )
-
-    stage = stage_chronological_files(
-        spark, SF_SMOKE, str(tmp_path / "stage"), n_files=3
-    )
-    final, n_batches = run_type_counts(
-        spark, stage, str(tmp_path / "ckpt"), "t_tws_typecounts"
-    )
-    assert n_batches >= 2, "state must actually cross micro-batches"
-    got = sorted(map(tuple, final.collect()))
-    want = sorted(
-        map(
-            tuple,
-            all_specs()["stream_type_counts"].builder(spark, SF_SMOKE).collect(),
-        )
-    )
-    assert len(want) > 0 and got == want
-
-
-def test_transform_with_state_timer_sessions_matches_batch(spark, tmp_path):
-    """ST21 twin: EVENT-TIME TIMERS — the capability the typed-state trio
-    doesn't touch: a user's LAST session closes with no further input,
-    purely because the watermark passed its close timer. The drain's
-    emitted sessions must equal the batch statement of closability
-    (superseded, or close-timer <= final watermark), integer-exact in ms."""
-    import pytest
-
-    from hhs_and_cms_data_pipeline_spark.compat.protobuf_shim import install
-
-    if not install():
-        pytest.skip("no protobuf runtime (real or vendored) available")
-    from hhs_and_cms_data_pipeline_spark.registry import all_specs
-    from hhs_and_cms_data_pipeline_spark.streaming.timersess import run_timer_sessions
-    from hhs_and_cms_data_pipeline_spark.streaming.stateful import (
-        stage_chronological_files,
-    )
-
-    stage = stage_chronological_files(
-        spark, SF_SMOKE, str(tmp_path / "stage"), n_files=3
-    )
-    final, n_batches = run_timer_sessions(
-        spark, stage, str(tmp_path / "ckpt"), "t_tws_timersess"
-    )
-    assert n_batches >= 2, "state must actually cross micro-batches"
-    got = sorted(map(tuple, final.collect()))
-    want = sorted(
-        map(
-            tuple,
-            all_specs()["stream_timer_sessions"].builder(spark, SF_SMOKE).collect(),
-        )
-    )
-    # the timer path must have really fired: some sessions are closed by
-    # watermark alone (no superseding event) — assert they are present
-    assert len(want) > 0 and got == want
-
-
-def test_transform_with_state_initial_state_bootstrap(spark, tmp_path):
-    """Backfill-then-stream migration: ST20's MapState counter seeded with
-    a BATCH snapshot of the first chronological third via initialState,
-    then drained over the remaining files — users active after the cut
-    must converge to exactly the full-history batch counts (bootstrap +
-    increments, never recounting history); users quiet after the cut
-    correctly emit nothing (their state is seeded but silent)."""
-    import os
-    import shutil
-
-    import pytest
-
-    from pyspark.sql import functions as F
-
-    from hhs_and_cms_data_pipeline_spark.compat.protobuf_shim import install
-
-    if not install():
-        pytest.skip("no protobuf runtime (real or vendored) available")
-    from hhs_and_cms_data_pipeline_spark.registry import all_specs
-    from hhs_and_cms_data_pipeline_spark.streaming.typecounts import run_type_counts
-    from hhs_and_cms_data_pipeline_spark.streaming.stateful import (
-        stage_chronological_files,
-    )
-
-    stage = stage_chronological_files(
-        spark, SF_SMOKE, str(tmp_path / "stage"), n_files=3
-    )
-    files = sorted(os.listdir(stage))
-    assert len(files) == 3
-    # history = file 0 as a batch table; live stream = files 1..2
-    live = str(tmp_path / "live")
-    os.makedirs(live)
-    for f in files[1:]:
-        shutil.copy(os.path.join(stage, f), os.path.join(live, f))
-    hist = (
-        spark.read.parquet(os.path.join(stage, files[0]))
-        .filter(F.col("event_type").isNotNull())
-        .select("user_id", "event_type")
-    )
-    seen = hist.groupBy("user_id").agg(F.count(F.lit(1)).alias("n_seen"))
-    bootstrap = (
-        hist.groupBy("user_id", "event_type")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .join(seen, "user_id")
-        .select("user_id", "event_type", "cnt", "n_seen")
-    )
-    final, n_batches = run_type_counts(
-        spark, live, str(tmp_path / "ckpt"), "t_tws_bootstrap",
-        initial_state=bootstrap,
-    )
-    assert n_batches >= 2
-    streamed_users = {
-        r[0]
-        for f in files[1:]
-        for r in spark.read.parquet(os.path.join(stage, f))
-        .filter(F.col("event_type").isNotNull())
-        .select("user_id")
-        .distinct()
-        .collect()
-    }
-    got = sorted(map(tuple, final.collect()))
-    want = sorted(
-        tuple(r)
-        for r in all_specs()["stream_type_counts"].builder(spark, SF_SMOKE).collect()
-        if r["user_id"] in streamed_users
-    )
-    assert len(want) > 0 and got == want
-
-
-def test_statestore_reader_exposes_tws_state(spark, tmp_path):
-    """The State Data Source (spark.read.format('statestore')) must read
-    the ValueState a transformWithState drain left in its RocksDB
-    checkpoint — the ops surface for state inspection/repair ('what does
-    the store believe about user X?') — and the recovered per-user
-    profiles must equal the batch truth for every user."""
-    import pytest
-
-    from hhs_and_cms_data_pipeline_spark.compat.protobuf_shim import install
-
-    if not install():
-        pytest.skip("no protobuf runtime (real or vendored) available")
-    from hhs_and_cms_data_pipeline_spark.registry import all_specs
-    from hhs_and_cms_data_pipeline_spark.streaming.profile import (
-        run_profile_maintenance,
-    )
-    from hhs_and_cms_data_pipeline_spark.streaming.stateful import (
-        stage_chronological_files,
-    )
-
-    stage = stage_chronological_files(
-        spark, SF_SMOKE, str(tmp_path / "stage"), n_files=3
-    )
-    ckpt = str(tmp_path / "ckpt")
-    run_profile_maintenance(spark, stage, ckpt, "t_tws_statereader")
-    state = (
-        spark.read.format("statestore")
-        .option("path", ckpt)
-        .option("stateVarName", "profile")
-        .load()
-    )
-    got = sorted(
-        (r["key"]["user_id"], r["value"]["cnt"], r["value"]["sum_u6"])
-        for r in state.collect()
-    )
-    want = sorted(
-        map(tuple, all_specs()["stream_user_profile"].builder(spark, SF_SMOKE).collect())
-    )
-    assert len(want) > 0 and got == want
-
-
 def test_event_ledger_stream_source_matches_batch(spark, tmp_path):
     """S11 streaming half: the partitioned DataSourceStreamReader plans
     one EXECUTOR-SIDE input partition per ledger file with {"idx": N}
@@ -1240,10 +961,6 @@ def test_daily_count_merge_replay_guard_and_additive_identity(spark, tmp_path):
 # the stateful streaming drains, by module: the name of each one's runner
 _STATE_DRAINS = {
     "stateful": "run_stateful_sessionize",
-    "profile": "run_profile_maintenance",
-    "recent": "run_recent_events",
-    "typecounts": "run_type_counts",
-    "timersess": "run_timer_sessions",
 }
 
 
