@@ -14,7 +14,8 @@ Package map
 - ``operators``  the query/operator inventory (SURVEY §2) + LLM-pipeline
                  extensions (dedup, similarity, text, multimodal)
 - ``streaming``  Structured Streaming surface over the events table (§2.10)
-- ``plans``      plan-inspection helpers (broadcast/pushdown assertions)
+- ``sinks``      the lake tables' one commit protocol: full publish, MERGE,
+                 idempotent append, time-travel and snapshot reads
 - ``registry``   QuerySpec registry that feeds ``__spark_entry__.py``
 """
 

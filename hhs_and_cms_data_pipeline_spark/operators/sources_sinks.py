@@ -215,8 +215,8 @@ def s4_geojson_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S4 variant: GeoJSON FeatureCollection scan (the reference's HTTP
     choropleth fetch, weekly-report.py:139-152) — typed multiLine JSON read,
     explode(features), per-feature ring/vertex counts and bounding boxes via
-    nested-array expressions. The HTTP half is sources/geojson.py
-    `fetch_geojson` (untestable offline); this query exercises the full
+    nested-array expressions. The HTTP half is the S10 data source
+    (sources/geojson_datasource.py); this query exercises the full
     parse/compute path on a deterministic synthetic FeatureCollection."""
     from ..sources.geojson import read_geojson_features
 
@@ -828,9 +828,9 @@ def k6_time_travel_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("n_regionkey")
         .agg(F.count(F.lit(1)).alias("n_nations"))
     )
-    write_parquet_atomic(v1, path, gc_grace_seconds=3600.0)
+    write_parquet_atomic(v1, path)
     v2 = v1.withColumn("n_nations", F.col("n_nations") * 2)
-    write_parquet_atomic(v2, path, gc_grace_seconds=3600.0)
+    write_parquet_atomic(v2, path)
     return read_published_version(spark, path, steps_back=1).orderBy("n_regionkey")
 
 
@@ -881,9 +881,7 @@ def k7_file_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = table(spark, sf_dir, "nation").select(
         "n_nationkey", "n_name", "n_regionkey"
     )
-    write_parquet_atomic(
-        src, path, partition_by=["n_regionkey"], gc_grace_seconds=3600.0
-    )
+    write_parquet_atomic(src, path, partition_by=["n_regionkey"])
     return (
         spark.read.parquet(os.path.realpath(path))
         .select(
@@ -1059,7 +1057,7 @@ def k9_snapshot_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _tagged_io_path("k9_versions", sf_dir)
     clear_published_versions(path)  # deterministic rerun
     v1 = table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    write_parquet_atomic(v1, path, gc_grace_seconds=3600.0)
+    write_parquet_atomic(v1, path)
     inserts = spark.range(3).select(
         (F.col("id") + 100).alias("n_nationkey"),
         F.concat(F.lit("NEW_"), (F.col("id") + 100).cast("string")).alias(
@@ -1079,7 +1077,7 @@ def k9_snapshot_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .unionAll(inserts)
     )
-    write_parquet_atomic(v2, path, gc_grace_seconds=3600.0)
+    write_parquet_atomic(v2, path)
     prev = read_published_version(spark, path, steps_back=1).select(
         F.col("n_nationkey").alias("k1"), F.col("n_name").alias("old_name")
     )

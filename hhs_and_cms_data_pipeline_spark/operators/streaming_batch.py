@@ -1159,11 +1159,7 @@ def make_rollup_merger(target: str, run_id: str | None = None):
             )
         else:
             merged = part
-        write_parquet_atomic(
-            _stamp_merge(merged, batch_id, run_id),
-            target,
-            gc_grace_seconds=3600.0,
-        )
+        write_parquet_atomic(_stamp_merge(merged, batch_id, run_id), target)
 
     return _merge
 
@@ -1579,7 +1575,7 @@ def make_hll_merger(target: str):
                     ).alias("rho"),
                 )
             )
-        write_parquet_atomic(part, target, gc_grace_seconds=3600.0)
+        write_parquet_atomic(part, target)
 
     return _merge
 
@@ -1726,11 +1722,7 @@ def make_drift_merger(target: str, run_id: str | None = None):
             )
         else:
             merged = part
-        write_parquet_atomic(
-            _stamp_merge(merged, batch_id, run_id),
-            target,
-            gc_grace_seconds=3600.0,
-        )
+        write_parquet_atomic(_stamp_merge(merged, batch_id, run_id), target)
 
     return _merge
 
@@ -1841,11 +1833,7 @@ def make_cms_merger(target: str, run_id: str | None = None):
             )
         else:
             merged = part
-        write_parquet_atomic(
-            _stamp_merge(merged, batch_id, run_id),
-            target,
-            gc_grace_seconds=3600.0,
-        )
+        write_parquet_atomic(_stamp_merge(merged, batch_id, run_id), target)
 
     return _merge
 
@@ -2240,11 +2228,7 @@ def make_daily_count_merger(target: str, run_id: str | None = None):
             )
         else:
             merged = part
-        write_parquet_atomic(
-            _stamp_merge(merged, batch_id, run_id),
-            target,
-            gc_grace_seconds=3600.0,
-        )
+        write_parquet_atomic(_stamp_merge(merged, batch_id, run_id), target)
 
     return _merge
 

@@ -18,18 +18,25 @@ so a dead job's files never leak into a later commit. Contract: ONE WRITER
 PER TABLE — MERGE and append carry from the version they read, so of two
 concurrent commits the later drops the earlier's rows (there is no lock).
 
+Schema: the reference loads into Postgres tables with declared column types
+(Phase1:71-252), and a load that does not fit them fails and rolls back. Here
+the two writers that carry files (append, MERGE) make one check per commit,
+before any Spark job: the batch's data columns (partition columns aside,
+nullability ignored) against one footer of the current version, read with
+pyarrow, so it launches no job. A missing column, an extra one or a changed
+type raises `ValueError` and nothing is written (Delta's schema enforcement
+reads the schema from its log). A full publish replaces the whole table,
+carries nothing and is not checked.
+
 Scale notes: fact tables partition by their date column at write so readers
 get partition pruning for every `WHERE collection_week <= X`. A writer never
-infers a table's schema from its data files (Delta reads it from its log;
-here the batch supplies it): it reads the current version with the incoming
-batch's schema, so a commit launches no schema job; an append whose key types
-differ from one footer of the current version is refused before it writes,
-and a merge batch whose types the files cannot be read as fails inside the
-commit. Readers resolve a version's schema once per session through the
-catalog (`sources.tables.scan`). The anti-join reads the
-existing keys column-pruned and not deduplicated (a left-anti join's output
-does not depend on duplicates on its build side), and for incremental loads
-should be partition-pruned to the incoming date range.
+infers a table's schema from its data files: it reads the current version
+with the incoming batch's schema, which the check above made the table's,
+so a commit launches no schema job. Readers resolve a version's schema once
+per session through the catalog (`sources.tables.scan`). The anti-join reads
+the existing keys column-pruned and not deduplicated (a left-anti join's
+output does not depend on duplicates on its build side), and for incremental
+loads should be partition-pruned to the incoming date range.
 """
 
 from __future__ import annotations
@@ -52,13 +59,15 @@ from .sources.tables import scan
 
 # Job-completion markers: every Spark write leaves its own.
 _MARKERS = ("_SUCCESS", "._SUCCESS.crc")
+# GC retention: a dethroned version older than this may be dropped, unless
+# it is the previous one, which GC always keeps.
+_GC_GRACE_SECONDS = 60.0
 
 
 def _commit_version(
     path: str,
     write: Callable[[str, str | None], object],
     carry: Callable[[str], bool],
-    gc_grace_seconds: float = 60.0,
 ):
     """The one commit protocol (module docstring); returns `write`'s result.
 
@@ -114,7 +123,7 @@ def _commit_version(
         if not stale or os.path.realpath(cand) in keep:
             continue
         try:
-            if now - os.lstat(cand).st_mtime <= gc_grace_seconds:
+            if now - os.lstat(cand).st_mtime <= _GC_GRACE_SECONDS:
                 continue
             if os.path.islink(cand):
                 os.unlink(cand)
@@ -129,17 +138,15 @@ def write_parquet_atomic(
     df: DataFrame,
     path: str,
     partition_by: list[str] | None = None,
-    gc_grace_seconds: float = 60.0,
 ) -> None:
     """K2: all-or-nothing publish of `df` as the whole table — a version
-    commit that carries nothing. Replaced versions are garbage-collected
-    only after `gc_grace_seconds`, so snapshot readers (read_published)
-    finish their scan."""
+    commit that carries nothing, so its schema is not checked. Replaced
+    versions are garbage-collected only after `_GC_GRACE_SECONDS`, so
+    snapshot readers (read_published) finish their scan."""
     _commit_version(
         path,
         lambda data_dir, prev: df.write.partitionBy(*(partition_by or [])).parquet(data_dir),
         lambda rel: False,
-        gc_grace_seconds,
     )
 
 
@@ -149,7 +156,6 @@ def merge_rewrite_partitions(
     path: str,
     keys: list[str],
     partition_col: str,
-    gc_grace_seconds: float = 60.0,
 ) -> list[str]:
     """MERGE-style upsert (update-or-insert by `keys`) into a published
     partitioned table, rewriting ONLY the partitions the update batch
@@ -159,6 +165,8 @@ def merge_rewrite_partitions(
     A version commit: touched partitions are read-modify-written (anti-join
     the old partition, read with the batch's schema, on `keys`, union the
     batch rows); the rest of the current version is carried by hardlink.
+    A batch whose schema differs from the table's raises `ValueError`
+    before any Spark job.
 
     At 100 TB the cost is proportional to the TOUCHED partitions plus one
     dim-sized driver fetch (the batch's distinct partition values), not to
@@ -167,33 +175,34 @@ def merge_rewrite_partitions(
 
     Returns the rewritten partition values (as strings, sorted).
     """
-    import pyarrow.parquet as pq
     from pyspark.sql import functions as F
 
-    # Dim-sized by contract: one row per touched partition.
-    vals = [r[0] for r in updates.select(partition_col).distinct().collect()]
-    # Dir names are built as raw f"{col}={v}" below. Spark escapes special
-    # characters (Hive-style %XX) and writes NULL as __HIVE_DEFAULT_PARTITION__;
-    # a value named differently would MISS the touched-partition match, so
-    # the old dir would be carried unchanged while the batch lands in a new
-    # one: duplicate keys in a published MERGE. Refuse loudly instead.
-    for v in vals:
-        if v is None or not re.fullmatch(r"[A-Za-z0-9._-]+", str(v)):
-            raise ValueError(
-                f"unsupported partition value {v!r} for {partition_col}: "
-                "merge_rewrite_partitions only supports non-null values "
-                "matching [A-Za-z0-9._-]+ (Spark's path escaping would "
-                "name the partition dir differently and the rewrite "
-                "would silently duplicate rows)"
-            )
-    touched = {f"{partition_col}={v}" for v in vals}
+    touched: set[str] = set()
 
-    def write(data_dir: str, prev: str | None) -> None:
+    def write(data_dir: str, prev: str | None) -> list[str]:
         if prev is None:
             raise ValueError(
                 "merge target must be a write_parquet_atomic-published table "
                 f"(symlink): {path}"
             )
+        _refuse_schema_change(prev, updates.schema, [partition_col], path)
+        # Dim-sized by contract: one row per touched partition.
+        vals = [r[0] for r in updates.select(partition_col).distinct().collect()]
+        # Dir names are built as raw f"{col}={v}" below. Spark escapes special
+        # characters (Hive-style %XX) and writes NULL as __HIVE_DEFAULT_PARTITION__;
+        # a value named differently would MISS the touched-partition match, so
+        # the old dir would be carried unchanged while the batch lands in a new
+        # one: duplicate keys in a published MERGE. Refuse loudly instead.
+        for v in vals:
+            if v is None or not re.fullmatch(r"[A-Za-z0-9._-]+", str(v)):
+                raise ValueError(
+                    f"unsupported partition value {v!r} for {partition_col}: "
+                    "merge_rewrite_partitions only supports non-null values "
+                    "matching [A-Za-z0-9._-]+ (Spark's path escaping would "
+                    "name the partition dir differently and the rewrite "
+                    "would silently duplicate rows)"
+                )
+        touched.update(f"{partition_col}={v}" for v in vals)
         os.makedirs(data_dir)
         for v in sorted(vals, key=str):
             pname = f"{partition_col}={v}"
@@ -202,15 +211,6 @@ def merge_rewrite_partitions(
             ).drop(partition_col)
             prev_part = os.path.join(prev, pname)
             if os.path.isdir(prev_part):
-                # Read with the batch's schema, a column the batch lacks
-                # would silently vanish from the rewritten partition.
-                some_file = next(glob.iglob(os.path.join(prev_part, "*.parquet")))
-                lacking = set(pq.read_schema(some_file).names) - set(batch_v.columns)
-                if lacking:
-                    raise ValueError(
-                        f"the update batch lacks columns {sorted(lacking)} of "
-                        f"{path}; rewriting {pname} would drop them"
-                    )
                 old = spark.read.schema(batch_v.schema).parquet(prev_part)
                 # anti-join on THIS partition's batch keys: a key updated in
                 # another partition must not delete rows here (only touched
@@ -222,11 +222,9 @@ def merge_rewrite_partitions(
             else:  # insert-only partition: nothing to rewrite, just write
                 merged = batch_v
             merged.write.parquet(os.path.join(data_dir, pname))
+        return sorted(str(v) for v in vals)
 
-    _commit_version(
-        path, write, lambda rel: rel.split(os.sep)[0] not in touched, gc_grace_seconds
-    )
-    return sorted(str(v) for v in vals)
+    return _commit_version(path, write, lambda rel: rel.split(os.sep)[0] not in touched)
 
 
 def read_published_version(
@@ -271,7 +269,7 @@ def read_published(spark: SparkSession, path: str) -> DataFrame:
     """Snapshot read of a published table: resolve the symlink ONCE and scan
     the pinned version dir. Reading through the link itself would re-resolve
     per file — a concurrent publish mid-scan would mix two versions. The
-    pinned dir survives at least `gc_grace_seconds` after being replaced.
+    pinned dir survives at least `_GC_GRACE_SECONDS` after being replaced.
 
     The schema comes from the session catalog (`sources.tables.scan`),
     keyed on the version dir: a publish misses it, a re-read of the same
@@ -279,13 +277,18 @@ def read_published(spark: SparkSession, path: str) -> DataFrame:
     return scan(spark, path)
 
 
-def _refuse_key_type_change(prev: str, key_schema: StructType, path: str) -> None:
-    """Raise if a key's type in the batch differs from its type in one
-    footer of the current version `prev` (read with pyarrow, no Spark job).
-    Reading with the batch's schema cannot catch a widening: int32 files
-    read fine as bigint, and the append would publish int32 and int64 files
-    for one column. Every lake file is written by Spark, whose footer holds
-    the exact Spark schema; partition columns are not in it and pass."""
+def _refuse_schema_change(
+    prev: str, batch: StructType, partition_cols: list[str], path: str
+) -> None:
+    """The schema check of a carrying commit (module docstring): raise
+    `ValueError` if the batch's data columns differ from the table's, read
+    from one footer of the current version `prev` with pyarrow (no Spark
+    job). Every lake file is written by Spark, whose footer holds the exact
+    Spark schema without the partition columns. Reading with the batch's
+    schema hides each difference: int32 files read fine as bigint, so a
+    wider type publishes a second physical type for one column; an extra
+    column is written but never read back; a missing one loses its values
+    in a rewritten partition."""
     import pyarrow.parquet as pq
 
     some_file = next(glob.iglob(os.path.join(prev, "**", "*.parquet"), recursive=True), None)
@@ -293,16 +296,19 @@ def _refuse_key_type_change(prev: str, key_schema: StructType, path: str) -> Non
         return
     spark_json = pq.read_schema(some_file).metadata[b"org.apache.spark.sql.parquet.row.metadata"]
     # simpleString: the types, not their nullability
-    stored = {f.name: f.dataType.simpleString() for f in StructType.fromJson(json.loads(spark_json))}
-    changed = {
-        f.name: (stored[f.name], f.dataType.simpleString())
-        for f in key_schema
-        if f.name in stored and stored[f.name] != f.dataType.simpleString()
-    }
-    if changed:
+    table = {f.name: f.dataType.simpleString() for f in StructType.fromJson(json.loads(spark_json))}
+    ours = {f.name: f.dataType.simpleString() for f in batch if f.name not in partition_cols}
+    faults = []
+    if missing := sorted(table.keys() - ours.keys()):
+        faults.append(f"lacks columns {missing}")
+    if extra := sorted(ours.keys() - table.keys()):
+        faults.append(f"adds columns {extra}")
+    if changed := {n: (table[n], t) for n, t in ours.items() if table.get(n, t) != t}:
+        faults.append(f"changes column types (table, batch): {changed}")
+    if faults:
         raise ValueError(
-            f"key types of the batch differ from {path} (table, batch): {changed}; "
-            "appending would mix physical types in one column"
+            f"the batch's schema differs from {path}: it {'; it '.join(faults)}; "
+            "nothing was written"
         )
 
 
@@ -320,9 +326,10 @@ def append_new_keys(
     batch with no new rows publishes nothing. Single writer per table.
 
     The current version's keys are read with the batch's key fields as the
-    schema, never inferred from its files: no schema job per call. A key
-    type that differs from the table's (a widening bigint onto int as much
-    as a string onto int) raises `ValueError` before anything is written.
+    schema, never inferred from its files: no schema job per call. A batch
+    whose schema differs from the table's (a widening bigint onto int as
+    much as a string onto int, or a column more or less) raises
+    `ValueError` before anything is written.
 
     Returns the number of rows appended, read from the new files' footers.
     """
@@ -333,7 +340,7 @@ def append_new_keys(
     def write(data_dir: str, prev: str | None) -> int:
         existing = None
         if prev:
-            _refuse_key_type_change(prev, key_schema, path)
+            _refuse_schema_change(prev, incoming.schema, partition_by or [], path)
             existing = spark.read.schema(key_schema).parquet(prev)
         new_rows = upsert_new_keys(incoming, existing, keys)
         new_rows.write.partitionBy(*(partition_by or [])).parquet(data_dir)

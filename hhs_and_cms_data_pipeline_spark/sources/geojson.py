@@ -1,9 +1,10 @@
 """GeoJSON source (S4 variant): the reference fetches a US-states GeoJSON
 FeatureCollection over HTTP for its choropleth (weekly-report.py:139-152,
-requests.get + response.json()). The Spark-native equivalent splits that
-into (a) thin fetch-to-file glue and (b) a typed multiLine JSON scan of the
-FeatureCollection with per-feature geometry stats computed by nested array
-expressions — no Python per row, no UDF.
+requests.get + response.json()). This module is the parse half: a typed
+multiLine JSON scan of the FeatureCollection with per-feature geometry stats
+computed by nested array expressions — no Python per row, no UDF. The fetch
+half is `sources/geojson_datasource.py`, a Python Data Source with one URL
+per input partition.
 
 A FeatureCollection is ONE json document, so the scan is single-task no
 matter the cluster (multiLine JSON is unsplittable); that is fine for the
@@ -11,8 +12,7 @@ presentation-side dim this is (a few MB of state polygons, broadcast to
 whatever joins it). Fact-scale geo data should land as JSONL or parquet
 instead (s4_json_scan is that path).
 
-`fetch_geojson` needs network access, so it is untested glue; the parse
-path is fully tested against a deterministic synthetic FeatureCollection.
+The parse path is tested against a deterministic synthetic FeatureCollection.
 """
 
 from __future__ import annotations
@@ -23,12 +23,6 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-# Public dataset the reference points at (weekly-report.py:140).
-US_STATES_GEOJSON_URL = (
-    "https://raw.githubusercontent.com/PublicaMundi/MappingAPI/"
-    "master/data/geojson/us-states.json"
-)
 
 # Typed schema for a Polygon FeatureCollection. Explicit, never inferred:
 # inference over one multiLine document costs a full extra pass and can
@@ -67,21 +61,6 @@ GEOJSON_SCHEMA = T.StructType(
         ),
     ]
 )
-
-
-def fetch_geojson(url: str, dest_path: str, timeout: float = 30.0) -> str:
-    """Fetch a GeoJSON document to a local file (stdlib urllib; the
-    reference uses requests). Untestable without network in this container;
-    everything downstream of the returned path is tested."""
-    import urllib.request
-
-    os.makedirs(os.path.dirname(dest_path) or ".", exist_ok=True)
-    with urllib.request.urlopen(url, timeout=timeout) as r:  # noqa: S310
-        data = r.read()
-    json.loads(data)  # fail fast on non-JSON payloads (error pages)
-    with open(dest_path, "wb") as f:
-        f.write(data)
-    return dest_path
 
 
 def read_geojson_features(spark: SparkSession, path: str) -> DataFrame:

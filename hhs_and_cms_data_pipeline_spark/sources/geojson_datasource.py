@@ -8,9 +8,8 @@ untested offline. This module re-expresses the fetch as a first-class
 `urls` option becomes ONE input partition, so N documents fan out across
 N executor tasks, and the transport is whatever `urllib` speaks —
 https:// in deployment, file:// in tests. That pluggability is what makes
-the fetch path TESTABLE in this offline container (the e2e test drives the
-identical partition/read code over file:// URLs), closing the "HTTP fetch
-is untestable glue" gap that `sources/geojson.py:fetch_geojson` documents.
+the fetch path TESTABLE offline: the e2e test drives the identical
+partition/read code over file:// URLs.
 
 Division of labor, by design:
 - Python side (this file): I/O + JSON parse ONLY. Emits one row per

@@ -107,10 +107,11 @@ def main() -> None:
         "both arms are tested via a stubbed PIL module."
     )
     print(
-        "- **No JDBC source; the GeoJSON HTTP fetch is untestable** "
-        "(`sources/geojson.py`): the Parquet lake written by `sinks.py` "
-        "stands in for the reference's Postgres, and the GeoJSON fetch "
-        "needs network access, which the test suite does not use."
+        "- **No JDBC source; the GeoJSON fetch is tested over file:// only** "
+        "(`sources/geojson_datasource.py`): the Parquet lake written by "
+        "`sinks.py` stands in for the reference's Postgres, and the fetch's "
+        "https:// transport needs network access, which the test suite "
+        "does not use."
     )
 
 

@@ -224,7 +224,7 @@ def test_append_refuses_incompatible_key_type(spark, tmp_path):
     published, versions = os.path.realpath(path), glob.glob(f"{path}.__v__*")
 
     strings = spark.createDataFrame([("3", 3.0)], "k string, v double")
-    with pytest.raises(ValueError, match="key types"):
+    with pytest.raises(ValueError, match="column types"):
         append_new_keys(spark, strings, path, ["k"])
     assert os.path.realpath(path) == published
     assert glob.glob(f"{path}.__v__*") == versions
@@ -249,7 +249,7 @@ def test_append_refuses_widening_key_type(spark, tmp_path):
     published, versions = os.path.realpath(path), glob.glob(f"{path}.__v__*")
 
     longs = spark.createDataFrame([(3, 3.0)], "k bigint, v double")
-    with pytest.raises(ValueError, match=r"key types.*'k': \('int', 'bigint'\)"):
+    with pytest.raises(ValueError, match=r"column types.*'k': \('int', 'bigint'\)"):
         append_new_keys(spark, longs, path, ["k"])
     assert os.path.realpath(path) == published
     assert glob.glob(f"{path}.__v__*") == versions
@@ -257,7 +257,63 @@ def test_append_refuses_widening_key_type(spark, tmp_path):
     assert {str(pq.read_schema(f).field("k").type) for f in files} == {"int32"}
 
 
-def test_atomic_write(spark, tmp_path):
+def _assert_refused(spark, path, commit, match):
+    """`commit` raises ValueError(match) before any Spark job, publishes
+    nothing and leaves no version dir behind."""
+    import glob
+
+    from tests.spark_jobs import job_ids
+
+    published, versions = os.path.realpath(path), sorted(glob.glob(f"{path}.__v__*"))
+    jobs = job_ids(spark)
+    with pytest.raises(ValueError, match=match):
+        commit()
+    assert job_ids(spark) == jobs
+    assert os.path.realpath(path) == published
+    assert sorted(glob.glob(f"{path}.__v__*")) == versions
+
+
+def test_append_refuses_widening_value_type(spark, tmp_path):
+    """The schema check covers every column, not only the keys: a bigint
+    `v` appended onto an int `v` published int32 and int64 files for it."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    from hhs_and_cms_data_pipeline_spark.sinks import append_new_keys
+
+    path = str(tmp_path / "tbl")
+    ints = spark.createDataFrame([(1, 1), (2, 2)], "k int, v int")
+    assert append_new_keys(spark, ints, path, ["k"]) == 2
+    longs = spark.createDataFrame([(3, 3)], "k int, v bigint")
+    _assert_refused(
+        spark, path, lambda: append_new_keys(spark, longs, path, ["k"]),
+        r"column types.*'v': \('int', 'bigint'\)",
+    )
+    files = glob.glob(os.path.join(os.path.realpath(path), "*.parquet"))
+    assert {str(pq.read_schema(f).field("v").type) for f in files} == {"int32"}
+
+
+def test_append_refuses_an_extra_column(spark, tmp_path):
+    """A batch with a column the table lacks published its rows while the
+    table still read back without that column: its values were lost."""
+    from hhs_and_cms_data_pipeline_spark.sinks import append_new_keys, read_published
+
+    path = str(tmp_path / "tbl")
+    table = spark.createDataFrame([(1, 1), (2, 2)], "k int, v int")
+    assert append_new_keys(spark, table, path, ["k"]) == 2
+    wide = spark.createDataFrame([(3, 3, "x"), (4, 4, "y")], "k int, v int, w string")
+    _assert_refused(
+        spark, path, lambda: append_new_keys(spark, wide, path, ["k"]),
+        r"adds columns \['w'\]",
+    )
+    back = read_published(spark, path)
+    assert back.columns == ["k", "v"]
+    assert sorted(tuple(r) for r in back.collect()) == [(1, 1), (2, 2)]
+
+
+def test_atomic_write(spark, tmp_path, monkeypatch):
+    from hhs_and_cms_data_pipeline_spark import sinks
     from hhs_and_cms_data_pipeline_spark.sinks import write_parquet_atomic
 
     df = spark.range(10).withColumnRenamed("id", "k")
@@ -269,9 +325,8 @@ def test_atomic_write(spark, tmp_path):
     assert spark.read.parquet(path).count() == 5
     assert os.path.islink(path)
     # expired-retention GC keeps current + previous version dirs only
-    write_parquet_atomic(
-        spark.range(7).withColumnRenamed("id", "k"), path, gc_grace_seconds=0
-    )
+    monkeypatch.setattr(sinks, "_GC_GRACE_SECONDS", 0)
+    write_parquet_atomic(spark.range(7).withColumnRenamed("id", "k"), path)
     versions = [d for d in os.listdir(tmp_path) if "__v__" in d]
     assert len(versions) == 2
     assert not [d for d in os.listdir(tmp_path) if "__link__" in d]
@@ -946,7 +1001,7 @@ def test_time_travel_reads_dethroned_version(spark):
         read_published_version(spark, path, steps_back=5)
 
 
-def test_atomic_publish_under_concurrent_writers_and_readers(spark, tmp_path):
+def test_atomic_publish_under_concurrent_writers_and_readers(spark, tmp_path, monkeypatch):
     """K2 commit protocol under contention: two writer threads republish the
     same table while a reader loops; every read must observe exactly one
     COMPLETE version (all rows share one tag and the tag's full row count)
@@ -957,11 +1012,13 @@ def test_atomic_publish_under_concurrent_writers_and_readers(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
+    from hhs_and_cms_data_pipeline_spark import sinks
     from hhs_and_cms_data_pipeline_spark.sinks import (
         read_published,
         write_parquet_atomic,
     )
 
+    monkeypatch.setattr(sinks, "_GC_GRACE_SECONDS", 120.0)
     path = str(tmp_path / "contended")
     counts = {tag: 40 + tag for tag in range(6)}
 
@@ -971,7 +1028,7 @@ def test_atomic_publish_under_concurrent_writers_and_readers(spark, tmp_path):
             .select(F.lit(tag).alias("tag"), F.col("id"))
             .repartition(4)  # multi-file versions: partial reads would show
         )
-        write_parquet_atomic(df, path, gc_grace_seconds=120.0)
+        write_parquet_atomic(df, path)
 
     publish(0)
     errors: list[str] = []
@@ -1054,6 +1111,30 @@ def test_merge_refuses_a_batch_lacking_a_column(spark, tmp_path):
         merge_rewrite_partitions(spark, narrow, path, ["k"], "p")
     assert os.path.realpath(path) == published
     assert sorted(r["note"] for r in spark.read.parquet(path).collect()) == ["a", "b"]
+
+
+def test_merge_refuses_a_wider_column_type(spark, tmp_path):
+    """A double `x` merged onto a float `x` left the rewritten partition
+    double and the carried one float."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    from hhs_and_cms_data_pipeline_spark.sinks import (
+        merge_rewrite_partitions,
+        write_parquet_atomic,
+    )
+
+    path = str(tmp_path / "tbl")
+    table = spark.createDataFrame([(1, 0, 1.0), (2, 1, 2.0)], "k int, p int, x float")
+    write_parquet_atomic(table, path, partition_by=["p"])
+    doubles = spark.createDataFrame([(1, 0, 9.0)], "k int, p int, x double")
+    _assert_refused(
+        spark, path, lambda: merge_rewrite_partitions(spark, doubles, path, ["k"], "p"),
+        r"column types.*'x': \('float', 'double'\)",
+    )
+    files = glob.glob(os.path.join(os.path.realpath(path), "p=*", "*.parquet"))
+    assert {str(pq.read_schema(f).field("x").type) for f in files} == {"float"}
 
 
 def test_time_travel_rejects_negative_steps(spark, tmp_path):
