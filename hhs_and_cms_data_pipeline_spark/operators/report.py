@@ -43,6 +43,21 @@ def _sql_week(c: str, alias: str = "collection_week") -> str:
     return f"CAST(date_trunc('week', {c}) AS DATE) AS {alias}"
 
 
+def _sort_small(df: DataFrame, *cols: str) -> DataFrame:
+    """``orderBy(*cols)`` for a final aggregate, without a range exchange.
+
+    ``df`` holds one row per group (weeks × states, ratings, months ×
+    nations): thousands of rows however large the fact table. A global
+    ``orderBy`` plans a range-partitioning exchange, which costs a sampling
+    job plus a shuffle-map job per run. Merging the aggregate's post-shuffle
+    partitions into one task instead adds no exchange, and sorting that one
+    partition gives ``orderBy``'s order, with the same ascending,
+    nulls-first defaults. One task is right only while the result stays
+    this small; a query whose output grows with the data keeps ``orderBy``.
+    """
+    return df.coalesce(1).sortWithinPartitions(*cols)
+
+
 # --------------------------------------------------------------------------
 # Flagship — SURVEY §7 step 1; reference Q8 (weekly-report.py:385-402):
 # utilization percent by (week, state) => net-revenue percent by (month, nation).
@@ -119,7 +134,7 @@ def flagship_utilization(spark: SparkSession, sf_dir: str) -> DataFrame:
             round1(ratio_pct(F.col("net_revenue"), F.col("gross_revenue"))),
         )
     )
-    return agg.orderBy("order_month", "nation")
+    return _sort_small(agg, "order_month", "nation")
 
 
 # --------------------------------------------------------------------------
@@ -263,23 +278,21 @@ def r2_recent_weeks_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
         dsum("l_discount", "sum_discount"),
     ]
     if not weeks:  # degenerate corpus: nothing at/before the cutoff
-        return (
-            li.filter(F.lit(False))
-            .groupBy("collection_week")
-            .agg(*agg)
-            .orderBy("collection_week")
+        return _sort_small(
+            li.filter(F.lit(False)).groupBy("collection_week").agg(*agg),
+            "collection_week",
         )
     lo = min(weeks)
     hi = max(weeks) + datetime.timedelta(days=7)  # week bucket upper bound
-    return (
+    return _sort_small(
         li.filter(
             (F.col("l_shipdate") >= F.lit(lo).cast("timestamp"))
             & (F.col("l_shipdate") < F.lit(hi).cast("timestamp"))
             & F.col("collection_week").isin(weeks)
         )
         .groupBy("collection_week")
-        .agg(*agg)
-        .orderBy("collection_week")
+        .agg(*agg),
+        "collection_week",
     )
 
 
@@ -340,7 +353,7 @@ def r3_utilization_by_rating(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     o = table(spark, sf_dir, "orders").select("o_custkey", "o_orderstatus", "o_totalprice")
     finished = F.when(F.col("o_orderstatus") == "F", F.col("o_totalprice")).otherwise(F.lit(0))
-    return (
+    return _sort_small(
         o.join(latest, o.o_custkey == latest.user_id)
         .groupBy("rating")
         .agg(
@@ -350,8 +363,8 @@ def r3_utilization_by_rating(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn(
             "pct_finished",
             round1(ratio_pct(F.col("finished_value"), F.col("total_value"))),
-        )
-        .orderBy("rating")
+        ),
+        "rating",
     )
 
 
@@ -395,12 +408,13 @@ def r4_weekly_state_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     s = table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
     n = table(spark, sf_dir, "nation").select("n_nationkey", F.col("n_name").alias("state"))
-    return (
+    return _sort_small(
         li.join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
         .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
         .groupBy("collection_week", "state")
-        .agg(dsum(F.col("l_quantity") * (F.lit(1) + F.col("l_tax")), "total_qty"))
-        .orderBy("collection_week", "state")
+        .agg(dsum(F.col("l_quantity") * (F.lit(1) + F.col("l_tax")), "total_qty")),
+        "collection_week",
+        "state",
     )
 
 
@@ -434,13 +448,13 @@ def r5_sum_by_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     c = table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     n = table(spark, sf_dir, "nation").select("n_nationkey", F.col("n_name").alias("state"))
-    return (
+    return _sort_small(
         li.join(o, li.l_orderkey == o.o_orderkey)
         .join(c, o.o_custkey == c.c_custkey)
         .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
         .groupBy("state")
-        .agg(dsum(F.col("l_extendedprice") * F.col("l_discount"), "covid_beds"))
-        .orderBy("state")
+        .agg(dsum(F.col("l_extendedprice") * F.col("l_discount"), "covid_beds")),
+        "state",
     )
 
 

@@ -8,7 +8,12 @@ loudly at read instead of corrupting 100 TB downstream).
 
 from __future__ import annotations
 
+import csv
+import os
+from collections import Counter
+
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 # FIXTURES.md A1 — the 17 consumed HHS columns (helper_load_hhs.py:46-52).
@@ -54,25 +59,51 @@ CMS_QUALITY_SCHEMA = T.StructType(
 )
 
 
+def _header(path: str) -> list[str]:
+    """The CSV's header record, read on the driver with Python's ``csv``
+    module instead of a Spark job. A UTF-8 byte-order mark is not part of
+    the first name."""
+    if not os.path.isfile(path):
+        raise ValueError(f"CSV path {path} is not a regular file")
+    with open(path, newline="", encoding="utf-8-sig") as fh:
+        return next(csv.reader(fh), [])
+
+
 def _read_by_name(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
     """Header-NAME-based CSV binding. Passing an explicit schema together
     with header=True binds columns POSITIONALLY (the header is only
     skipped), so a real-world file with reordered or extra columns — the
     HHS weekly drop has ~100 columns in its own order — would silently
-    scramble fields into the wrong columns. Instead: read every column as
-    a header-named string (pandas-read_csv semantics, matching the
-    reference), fail loudly if a declared column is missing, then select
-    by NAME and cast to the declared types. Extra columns are dropped by
-    the projection; column order in the file is irrelevant."""
-    raw = spark.read.csv(path, header=True, inferSchema=False, mode="PERMISSIVE")
-    missing = [f.name for f in schema.fields if f.name not in raw.columns]
+    scramble fields into the wrong columns. Instead: read the header on the
+    driver, fail loudly if a declared column is missing or appears twice,
+    let Spark read every column as a string in the file's own order
+    (pandas-read_csv semantics, matching the reference), then select by
+    NAME and cast to the declared types. Extra columns are dropped by the
+    projection; column order in the file is irrelevant. ``path`` is one
+    local file."""
+    header = _header(path)
+    counts = Counter(h.lower() for h in header if h)
+    repeated = [f.name for f in schema.fields if counts[f.name.lower()] > 1]
+    if repeated:
+        raise ValueError(f"CSV at {path} repeats declared columns {repeated}")
+    missing = [f.name for f in schema.fields if f.name not in header]
     if missing:
         raise ValueError(
             f"CSV at {path} lacks declared columns {missing}; header has "
-            f"{raw.columns[:20]}..."
+            f"{header[:20]}..."
         )
-    from pyspark.sql import functions as F
-
+    # Spark's own header names: an empty one becomes _c<i>, and a repeated
+    # (case-insensitive) one gets its position appended.
+    names = [
+        f"_c{i}" if not h else f"{h}{i}" if counts[h.lower()] > 1 else h
+        for i, h in enumerate(header)
+    ]
+    raw = spark.read.csv(
+        path,
+        schema=T.StructType([T.StructField(n, T.StringType()) for n in names]),
+        header=True,
+        mode="PERMISSIVE",
+    )
     return raw.select(
         *[F.col(f.name).cast(f.dataType).alias(f.name) for f in schema.fields]
     )

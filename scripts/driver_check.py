@@ -5,9 +5,10 @@ Usage:
     PYTHONPATH=. python scripts/driver_check.py [name ...]
 
 Runs `__spark_entry__.entry()` as a smoke, then for each requested query
-name (default: a fixed 11-name spot sample, one of them a streaming drain,
-one, r2, built on a memoized artifact, and one, ING3, planned on the staged
-HHS prep batch) executes the Spark builder AND
+name (default: a fixed 12-name spot sample, one of them a streaming drain,
+one, r2, built on a memoized artifact, one, r4, sorted in one partition
+instead of by a range exchange, and one, ING3, planned on the staged HHS
+prep batch) executes the Spark builder AND
 its DuckDB oracle at sf0.01 and compares bit-exactly — the same contract as tests/test_oracle_diff.py, packaged for
 quick ad-hoc checks of freshly touched queries without a pytest session.
 
@@ -32,6 +33,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 DEFAULT_SAMPLE = [
     "flagship_utilization",
     "r2_recent_weeks_summary",
+    "r4_weekly_state_totals",
     "tpch_q1_pricing_summary",
     "dedup_minhash_lsh",
     "graph_pagerank",

@@ -48,9 +48,15 @@ def _canon(v):
     return f"{type(v).__name__}:{v}"
 
 
-def _rowset(cols, rows):
+def canon_rows(cols, rows) -> list[str]:
+    """Each row as one canonical string, columns taken in name order, rows
+    kept in their given order."""
     order = sorted(range(len(cols)), key=lambda i: cols[i])
-    return sorted("|".join(_canon(r[i]) for i in order) for r in rows)
+    return ["|".join(_canon(r[i]) for i in order) for r in rows]
+
+
+def _rowset(cols, rows):
+    return sorted(canon_rows(cols, rows))
 
 
 def assert_no_hugeint(con, oracle: str) -> None:

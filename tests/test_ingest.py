@@ -944,6 +944,65 @@ def test_csv_binds_by_header_name_not_position(spark, tmp_path):
         read_hhs_weekly(spark, p)
 
 
+def _hhs_row(header: list[str], **values: str) -> str:
+    return ",".join(values.get(h, "") for h in header)
+
+
+def test_csv_header_name_with_a_quoted_comma(spark, tmp_path):
+    """A quoted header name holding a comma is one column, and undeclared
+    columns may be unnamed or named twice: the declared columns after them
+    keep their own values."""
+    names = HHS_HEADER.split(",")
+    p = tmp_path / "quoted.csv"
+    p.write_text(
+        '"note, free text",,extra,EXTRA,' + HHS_HEADER + "\n"
+        + '"a, b",x,y,z,' + _hhs_row(names, hospital_pk="H1", state="CA",
+                                     all_adult_hospital_beds_7_day_avg="10.0") + "\n"
+    )
+    row = read_hhs_weekly(spark, str(p)).head()
+    assert (row["hospital_pk"], row["state"]) == ("H1", "CA")
+    assert row["all_adult_hospital_beds_7_day_avg"] == 10.0
+
+
+def test_csv_header_after_a_utf8_bom(spark, tmp_path):
+    """A byte-order mark before the header does not rename its first
+    column: ``hospital_pk`` still binds."""
+    names = HHS_HEADER.split(",")
+    p = tmp_path / "bom.csv"
+    p.write_bytes(
+        b"\xef\xbb\xbf"
+        + (HHS_HEADER + "\n" + _hhs_row(names, hospital_pk="H1", state="CA") + "\n").encode()
+    )
+    row = read_hhs_weekly(spark, str(p)).head()
+    assert (row["hospital_pk"], row["state"]) == ("H1", "CA")
+
+
+def test_csv_refuses_a_repeated_declared_column(spark, tmp_path):
+    """A declared column named twice has no one column to bind to."""
+    p = tmp_path / "twice.csv"
+    p.write_text(HHS_HEADER + ",state\n" + ",".join(["x"] * 18) + "\n")
+    with pytest.raises(ValueError, match=r"repeats declared columns \['state'\]"):
+        read_hhs_weekly(spark, str(p))
+
+
+def test_csv_refuses_a_directory(spark, tmp_path):
+    d = tmp_path / "weekly.csv"
+    d.mkdir()
+    with pytest.raises(ValueError, match=f"{d} is not a regular file"):
+        read_hhs_weekly(spark, str(d))
+
+
+def test_csv_read_launches_no_job(spark, hhs_csv, cms_csv):
+    """Binding by header name reads the header on the driver: building the
+    reads runs no Spark job."""
+    from tests.spark_jobs import job_ids
+
+    before = job_ids(spark)
+    read_hhs_weekly(spark, hhs_csv)
+    read_cms_quality(spark, cms_csv)
+    assert job_ids(spark) - before == set()
+
+
 def test_merge_rewrites_only_touched_partitions(spark):
     """K5 contract: the MERGE version dir rewrites exactly the batch's
     partitions; every other partition is carried over by per-file HARDLINK

@@ -73,6 +73,21 @@ def test_topk_compiles_to_take_ordered(spark, specs):
     assert "TakeOrderedAndProject" in plan, "top-k must not global-sort"
 
 
+def test_page_sorts_without_range_exchange(spark, specs):
+    # the page's small final aggregates are sorted in one partition: a
+    # global orderBy would add a range exchange, i.e. a sampling job and a
+    # shuffle-map job on every render
+    for name in (
+        "flagship_utilization",
+        "r2_recent_weeks_summary",
+        "r3_utilization_by_rating",
+        "r4_weekly_state_totals",
+        "r5_sum_by_state",
+    ):
+        plan = formatted_plan(specs[name].builder(spark, SF_SMOKE))
+        assert "rangepartitioning" not in plan, name
+
+
 def test_recent_weeks_filter_pushes_to_scan(spark, specs):
     # r2 pre-collects the 5-week set into literals: the plan must be
     # JOIN-FREE (no broadcast semi-join recomputed per run) with the

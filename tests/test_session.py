@@ -74,6 +74,30 @@ def test_good_confs_apply(spark):
         registry._REGISTRY.pop("__conf_probe__", None)
 
 
+def test_columns_are_built_without_call_site_capture(spark, monkeypatch):
+    """``get_spark`` turns off PySpark's DataFrame debugging, which records
+    the Python call site of every ``functions.*`` and ``Column`` call over
+    py4j. PySpark caches the setting per process, so the cache is cleared
+    to read it from this session; then ``F.col`` costs at most 3 gateway
+    commands (13 with capture on)."""
+    import pyspark.errors.utils as perrors
+    from pyspark.sql import functions as F
+
+    monkeypatch.setattr(perrors, "_enable_debugging_cache", None)
+    assert perrors.is_debugging_enabled() is False
+    client = spark.sparkContext._gateway._gateway_client
+    send, sent = client.send_command, []
+
+    def counting(*args, **kwargs):
+        sent.append(args[0])
+        return send(*args, **kwargs)
+
+    F.col("warm")
+    monkeypatch.setattr(client, "send_command", counting)
+    F.col("x")
+    assert len(sent) <= 3, sent
+
+
 def test_registered_query_names_are_stable():
     """Query NAMES are the registry's public contract: bench.py, the
     benchmark and the tests resolve specs by name, and correctness history
